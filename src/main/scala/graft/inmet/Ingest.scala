@@ -23,6 +23,11 @@ import org.apache.spark.sql.Column
   * with zero driver involvement beyond a tiny per-file header-index map
   * (one small row per file) that is broadcast back.
   *
+  * Pipeline.stage reads the stage tables through the DSv2 reader
+  * (graft.sources.v2.InmetSource), whose JVM parser follows these rules
+  * line for line (StageParitySpec); this plan stays the reference the
+  * DuckDB oracle mirrors, and the parser of the streaming ingest.
+  *
   * All casts/date-parses are written ANSI-safe (guarded by `rlike`/`size`
   * predicates) so the module behaves identically under
   * `spark.sql.ansi.enabled` true or false.
@@ -102,7 +107,7 @@ object Ingest {
 
   /** Section-1 metadata keys (post key-normalize) -> output column. Mirrors
     * job_parquet.py:71-82 (colon-strip + lowercase, then remap). */
-  private val metaKeys: Seq[(String, String)] = Seq(
+  val metaKeys: Seq[(String, String)] = Seq(
     "regiao" -> "regiao", "uf" -> "uf", "estacao" -> "estacao",
     "codigo (wmo)" -> "wmo", "latitude" -> "latitude",
     "longitude" -> "longitude", "altitude" -> "altitude",
@@ -142,13 +147,21 @@ object Ingest {
 
   // -------------------------------------------------------------- previsoes
 
+  /** 0-based positions of `data` and of each `measureRenames` source
+    * column in one `Data;` header line, resolved on sanitized names (a
+    * later duplicate name wins; the wanted names are unique). The one
+    * header rule of both INMET parsers. */
+  def headerIndex(header: String): Seq[Option[Int]] = {
+    val pos = header.split(";", -1).map(sanitize).zipWithIndex.toMap
+    ("data" +: measureRenames.map(_._1)).map(pos.get)
+  }
+
   /** Per-file 1-based indices of the needed section-2 columns, resolved from
     * each file's own (sanitized) header line — robust to the header
     * encoding/accent drift between files. One collected row per file; the
     * result is broadcast, so data rows never leave the executors. */
   def fileColumnIndex(spark: SparkSession, lines: DataFrame): DataFrame = {
     import spark.implicits._
-    val wanted = "data" +: measureRenames.map(_._1)
     val hdrs = lines.filter(col("value").startsWith("Data;"))
       .select("file", "value").distinct().collect()
     val rows = hdrs
@@ -158,9 +171,7 @@ object Ingest {
       .groupBy(_.getString(0)).view
       .mapValues(_.map(_.getString(1)).min).toSeq
       .map { case (file, header) =>
-        val names = header.split(";", -1).map(sanitize)
-        val idx = names.zipWithIndex.toMap // later duplicate wins; wanted names are unique
-        (file, wanted.map(w => idx.get(w).map(_ + 1).getOrElse(-1)))
+        (file, headerIndex(header).map(_.map(_ + 1).getOrElse(-1)))
       }
     rows.map { case (f, is) => (f, is(0), is(1), is(2), is(3), is(4), is(5)) }
       .toDF("file", "i_data", "i_precip", "i_pressao", "i_temp", "i_umid", "i_vento")

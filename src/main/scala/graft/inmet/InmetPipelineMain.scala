@@ -51,21 +51,9 @@ object InmetPipelineMain {
       val st = Pipeline.stage(spark, inputGlob)
       st.cidades.write.mode("overwrite").parquet(s"$stageDir/cidades")
       graft.sources.Layout.previsoesPartitioned(st.previsoes, s"$stageDir/previsoes")
-      val stagedPrevisoes = spark.read.parquet(s"$stageDir/previsoes")
-        .drop("ano", "mes")
-      Ingest.datas(stagedPrevisoes).write.mode("overwrite")
-        .parquet(s"$stageDir/datas")
-      val staged = Pipeline.Stage(
-        cidades = spark.read.parquet(s"$stageDir/cidades"),
-        previsoes = stagedPrevisoes,
-        datas = spark.read.parquet(s"$stageDir/datas"))
-      val an = Pipeline.analytics(staged)
-      an.dimCidadeAtributos.write.mode("overwrite")
-        .parquet(s"$analyticDir/dim_cidade_atributos")
-      an.fatoAggPrevisoesDia.write.mode("overwrite")
-        .parquet(s"$analyticDir/fato_agg_previsoes_dia")
-      an.cidadeKpisMensal.write.mode("overwrite")
-        .parquet(s"$analyticDir/cidade_kpis_mensal")
+      Pipeline.runWarehouse(spark,
+        spark.read.parquet(s"$stageDir/previsoes").drop("ano", "mes"),
+        stageDir, analyticDir)
     } else {
       Pipeline.run(spark, inputGlob, stageDir, analyticDir)
     }

@@ -1,5 +1,6 @@
 package graft.inmet
 
+import graft.sources.v2.InmetSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Sequential end-to-end pipeline replicating the reference DAG's phase
@@ -8,11 +9,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * FS + the Spark session (SURVEY.md §3 EP2/EP3 — those layers were
   * transport, not semantics).
   *
-  * Scale: `previsoes` is written partitioned-by-nothing here (matching the
-  * reference's layout contract), but the plan upstream is one distributed
-  * scan; for a 100 TB deployment the single knob to add is
-  * `.partitionBy("ano","mes")` (or bucketing by wmo) on the stage write —
-  * the readers below are layout-agnostic.
+  * The stage tables come from the DSv2 reader (graft.sources.v2.InmetSource),
+  * which packs the station files into splits and parses each file in one
+  * pass: `previsoes` is its hourly face, `cidades` its station face (one
+  * raw row per file, read only as far as the metadata section) typed by
+  * Ingest.cidades. Ingest's Catalyst plan stays the reference both are
+  * spec-locked to, and the streaming ingest's parser.
+  *
+  * `run` writes the stage tables, then the warehouse half reads each
+  * table back from parquet before the next step uses it, so no step
+  * re-runs an upstream lineage. For a 100 TB deployment the single knob to
+  * add is `.partitionBy("ano","mes")` (or bucketing by wmo) on the stage
+  * write (InmetPipelineMain --partitioned) — the warehouse half is
+  * layout-agnostic.
   */
 object Pipeline {
 
@@ -25,10 +34,16 @@ object Pipeline {
   /** Parse every INMET CSV under `inputGlob` into the three stage tables
     * (pure transformation — nothing is written or collected). */
   def stage(spark: SparkSession, inputGlob: String): Stage = {
-    val lines = Ingest.readLines(spark, inputGlob)
-    val prev = Ingest.previsoes(spark, lines)
+    def inmet = spark.read.format(classOf[InmetSource].getName)
+    val prev = inmet.load(inputGlob)
+    val stations = inmet
+      .option(InmetSource.SectionOption, InmetSource.StationsSection)
+      .load(inputGlob)
+      // one row per file: merged after the distributed read, so the
+      // station table is written as one file
+      .repartition(1)
     Stage(
-      cidades = Ingest.cidades(Ingest.stationHeadersRaw(lines)),
+      cidades = Ingest.cidades(stations),
       previsoes = prev,
       datas = Ingest.datas(prev))
   }
@@ -72,32 +87,36 @@ object Pipeline {
         "analitic.dim_cidade_atributos", "stage.dim_datas"))
   }
 
-  /** Full run: CSV glob -> stage parquet dir -> analytic parquet dir.
-    * Stage tables are re-read from parquet before the warehouse phase (as
-    * the reference does via its load step), which also truncates the
-    * lineage so the analytic plans scan columnar storage, not raw CSV. */
+  /** Full run: CSV glob -> stage parquet dir -> analytic parquet dir. */
   def run(spark: SparkSession, inputGlob: String, stageDir: String,
           analyticDir: String): Unit = {
     val st = stage(spark, inputGlob)
     st.cidades.write.mode("overwrite").parquet(s"$stageDir/cidades")
     st.previsoes.write.mode("overwrite").parquet(s"$stageDir/previsoes")
-    // derive the calendar from the already-written columnar fact — its
-    // min/max agg then reads parquet statistics instead of re-running the
-    // whole raw-CSV parse lineage a second time
-    val stagedPrevisoes = spark.read.parquet(s"$stageDir/previsoes")
+    runWarehouse(spark, spark.read.parquet(s"$stageDir/previsoes"),
+      stageDir, analyticDir)
+  }
+
+  /** The warehouse half of `run`, after `cidades` and `previsoes` are in
+    * `stageDir` (`stagedPrevisoes` reads the latter back in any layout).
+    * Each table is derived from what the step before wrote, as the
+    * reference does via its load step: `datas` from the written fact (its
+    * min/max agg reads parquet statistics, not the raw-CSV lineage), and
+    * `cidade_kpis_mensal` from the written daily rollup, not a second
+    * daily aggregate over the hourly fact. */
+  def runWarehouse(spark: SparkSession, stagedPrevisoes: DataFrame,
+                   stageDir: String, analyticDir: String): Unit = {
     Ingest.datas(stagedPrevisoes).write.mode("overwrite")
       .parquet(s"$stageDir/datas")
-
-    val staged = Stage(
-      cidades = spark.read.parquet(s"$stageDir/cidades"),
-      previsoes = stagedPrevisoes,
-      datas = spark.read.parquet(s"$stageDir/datas"))
-    val an = analytics(staged)
-    an.dimCidadeAtributos.write.mode("overwrite")
+    val dim = Warehouse.dimCidadeAtributos(
+      spark.read.parquet(s"$stageDir/cidades"))
+    dim.write.mode("overwrite")
       .parquet(s"$analyticDir/dim_cidade_atributos")
-    an.fatoAggPrevisoesDia.write.mode("overwrite")
+    Warehouse.fatoAggPrevisoesDia(stagedPrevisoes, dim).write.mode("overwrite")
       .parquet(s"$analyticDir/fato_agg_previsoes_dia")
-    an.cidadeKpisMensal.write.mode("overwrite")
+    Warehouse.cidadeKpisMensal(
+      spark.read.parquet(s"$analyticDir/fato_agg_previsoes_dia"), dim,
+      spark.read.parquet(s"$stageDir/datas")).write.mode("overwrite")
       .parquet(s"$analyticDir/cidade_kpis_mensal")
   }
 }

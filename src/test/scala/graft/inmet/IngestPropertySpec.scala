@@ -90,4 +90,32 @@ class IngestPropertySpec extends SparkSuite {
       assert(r.getLong(3) === want)
     }
   }
+
+  test("the DSv2 reader's date parser agrees with parseDateFlexible") {
+    // calendar edges in every shape: Feb 29 in leap and common years,
+    // Feb 30, Apr 31, day/month 0 and 13, 2-digit years, space/tab padding
+    val date = for {
+      y <- Gen.oneOf(Gen.oneOf(1900, 2000, 2023, 2024, 2100), Gen.choose(0, 9999))
+      m <- Gen.oneOf(Gen.oneOf(2, 4), Gen.choose(0, 13))
+      d <- Gen.oneOf(Gen.oneOf(28, 29, 30, 31), Gen.choose(0, 32))
+      shape <- Gen.choose(0, 2)
+      pad <- Gen.oneOf("", " ", "\t", "  ")
+    } yield pad + (shape match {
+      case 0 => f"$y%04d/$m%02d/$d%02d"
+      case 1 => f"$d%02d/$m%02d/$y%04d"
+      case _ => f"$d%02d/$m%02d/${y % 100}%02d"
+    }) + pad
+    val cases = (Gen.listOfN(600, date).sample.get ++
+      Seq("2023/02/29", "2024/02/29", "2023/02/30", "31/04/2023",
+        "29/02/23", "29/02/24", "29/02/00", "2024/2/29", "")).distinct
+    val got = cases.toDF("s")
+      .select(Ingest.parseDateFlexible($"s")).as[Option[java.sql.Date]]
+      .collect()
+    cases.zip(got).foreach { case (s, want) =>
+      val viaReader = graft.sources.v2.InmetSource.parseDate(s)
+        .map(d => LocalDate.ofEpochDay(d.toLong))
+      assert(viaReader === want.map(_.toLocalDate), s"'$s'")
+    }
+    assert(got.count(_.isDefined) > 100) // the valid dates are not all lost
+  }
 }

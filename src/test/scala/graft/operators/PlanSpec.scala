@@ -458,13 +458,13 @@ class PlanSpec extends SparkSuite {
     assert(wins.nonEmpty && wins.forall(_.partitionSpec.nonEmpty), p)
   }
 
-  test("INMET ingest: one distributed text scan, no per-file plans") {
+  test("INMET ingest: one packed DSv2 scan, no per-file plans") {
     val st = graft.inmet.Pipeline.stage(spark,
       resourcePath("/inmet") + "/*.csv")
     val p = plan(st.previsoes)
-    // single FileScan text feeding the parse (plus tiny broadcast of the
-    // per-file index map) — not one scan per input file
-    assert("FileScan text".r.findAllIn(p).size <= 2, p)
-    assert(p.contains("BroadcastExchange") || p.contains("BroadcastHashJoin"), p)
+    // one scan parses every file, header included — not one scan per
+    // input file, and no header map joined back onto the rows
+    assert("BatchScan".r.findAllIn(p).size === 1 && p.contains("InmetScan"), p)
+    assert(!p.contains("Join") && !p.contains("Exchange"), p)
   }
 }

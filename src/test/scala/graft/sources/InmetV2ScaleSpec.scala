@@ -1,14 +1,15 @@
 package graft.sources
 
 import graft.SparkSuite
+import graft.sources.v2.InmetPartition
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** Scale-shape invariants of the INMET DataSource V2 at a file count
-  * beyond the 3-file driver fixture: one input partition per file (the
-  * property that gives a 1000-executor cluster one task per station
-  * file — probed at 1000+ files by tools/Dsv2Probe, whose numbers live
-  * in BASELINE.md), pushdown strings surviving the many-file plan, and
-  * micro-batch replay row parity with the batch scan. */
+  * beyond the 3-file driver fixture: files packed into as many splits as
+  * Spark's text source makes of them (each file read by exactly one
+  * task), pushdown strings surviving the many-file plan, and micro-batch
+  * replay row parity with the batch scan. */
 class InmetV2ScaleSpec extends SparkSuite {
 
   private val fmt = "graft.sources.v2.InmetSource"
@@ -19,7 +20,7 @@ class InmetV2ScaleSpec extends SparkSuite {
     * tools/gen_inmet_files.py, in-JVM. */
   private lazy val dir: String = {
     val src = java.nio.file.Paths.get(
-      "/root/repo/src/test/resources/inmet/INMET_SE_MG_A507_UBERLANDIA.csv")
+      resourcePath("/inmet/INMET_SE_MG_A507_UBERLANDIA.csv"))
     val lines = new String(java.nio.file.Files.readAllBytes(src),
       "ISO-8859-1").split("\n", -1).toSeq
     val (meta, rest) = (lines.take(8), lines.drop(8))
@@ -38,9 +39,16 @@ class InmetV2ScaleSpec extends SparkSuite {
     out.toString
   }
 
-  test("one input partition per file at 40 files") {
-    val df = spark.read.format(fmt).load(s"$dir/*.csv")
-    assert(df.rdd.getNumPartitions === nFiles)
+  test("files pack like the text source at 40 files") {
+    val glob = s"$dir/*.csv"
+    val df = spark.read.format(fmt).load(glob)
+    val splits = df.queryExecution.executedPlan.collectFirst {
+      case s: BatchScanExec => s.inputPartitions.map(_.asInstanceOf[InmetPartition].files)
+    }.get
+    assert(splits.size === spark.read.text(glob).rdd.getNumPartitions)
+    assert(splits.size < nFiles)
+    val read = splits.flatten.map(new org.apache.hadoop.fs.Path(_).getName)
+    assert(read.sorted === new java.io.File(dir).list().toSeq.sorted)
     assert(df.count() === nFiles * 48L)
   }
 

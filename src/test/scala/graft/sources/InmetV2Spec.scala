@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * parity with the Ingest path, column pruning, and filter pushdown. */
 class InmetV2Spec extends SparkSuite {
 
-  private val glob = "/root/repo/src/test/resources/inmet/*.csv"
+  private val glob = resourcePath("/inmet") + "/*.csv"
   private val fmt = "graft.sources.v2.InmetSource"
 
   private def v2 = spark.read.format(fmt).load(glob)
@@ -60,7 +60,7 @@ class InmetV2Spec extends SparkSuite {
 
   test("micro-batch stream equals the batch scan and picks up new files") {
     val dir = java.nio.file.Files.createTempDirectory("inmet_stream").toFile
-    val src = new java.io.File("/root/repo/src/test/resources/inmet")
+    val src = new java.io.File(resourcePath("/inmet"))
     val files = src.listFiles().filter(_.getName.endsWith(".csv")).sortBy(_.getName)
     def copyIn(f: java.io.File): Unit = {
       val _ = java.nio.file.Files.copy(f.toPath,
