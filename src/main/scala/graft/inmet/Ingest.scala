@@ -1,5 +1,6 @@
 package graft.inmet
 
+import java.util.regex.Pattern
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
@@ -48,13 +49,18 @@ object Ingest {
   )
   val measureCols: Seq[String] = measureRenames.map(_._2)
 
+  private val NonAscii = Pattern.compile("[^\\p{ASCII}]")
+  private val NonAlnum = Pattern.compile("[^0-9a-zA-Z]+")
+  private val EdgeUnderscores = Pattern.compile("^_+|_+$")
+
   /** NFKD accent-strip + non-alnum -> `_` + lowercase, matching the
     * reference's header sanitizer (job_parquet.py:138-145). Pure JVM —
-    * used driver-side on header strings only. */
+    * used on header strings only, on the driver and in the DSv2 reader. */
   def sanitize(s: String): String = {
     val norm = java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKD)
-    val ascii = norm.replaceAll("[^\\p{ASCII}]", "")
-    ascii.replaceAll("[^0-9a-zA-Z]+", "_").replaceAll("^_+|_+$", "").toLowerCase
+    val ascii = NonAscii.matcher(norm).replaceAll("")
+    EdgeUnderscores.matcher(NonAlnum.matcher(ascii).replaceAll("_"))
+      .replaceAll("").toLowerCase
   }
 
   /** Decimal-comma numeral -> DoubleType; `''`/`None`/`nan` -> null

@@ -48,12 +48,10 @@ object InmetPipelineMain {
       return
     }
     if (partitioned) {
-      val st = Pipeline.stage(spark, inputGlob)
-      st.cidades.write.mode("overwrite").parquet(s"$stageDir/cidades")
-      graft.sources.Layout.previsoesPartitioned(st.previsoes, s"$stageDir/previsoes")
-      Pipeline.runWarehouse(spark,
-        spark.read.parquet(s"$stageDir/previsoes").drop("ano", "mes"),
-        stageDir, analyticDir)
+      Pipeline.runWith(spark, inputGlob, stageDir, analyticDir) { previsoes =>
+        graft.sources.Layout.previsoesPartitioned(previsoes, s"$stageDir/previsoes")
+        spark.read.parquet(s"$stageDir/previsoes").drop("ano", "mes")
+      }
     } else {
       Pipeline.run(spark, inputGlob, stageDir, analyticDir)
     }

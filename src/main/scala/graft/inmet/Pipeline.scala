@@ -2,12 +2,14 @@ package graft.inmet
 
 import graft.sources.v2.InmetSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Sequential end-to-end pipeline replicating the reference DAG's phase
-  * order (dag_inmet.py:210-220): ingest CSVs -> stage parquet -> analytic
-  * tables. Airflow/HDFS/Snowflake collapse into plain method calls + local
-  * FS + the Spark session (SURVEY.md §3 EP2/EP3 — those layers were
-  * transport, not semantics).
+/** End-to-end pipeline replicating the reference DAG (dag_inmet.py:210-220):
+  * ingest CSVs -> stage parquet -> analytic tables. Airflow/HDFS/Snowflake
+  * collapse into plain method calls + local FS + the Spark session
+  * (SURVEY.md §3 EP2/EP3 — those layers were transport, not semantics).
   *
   * The stage tables come from the DSv2 reader (graft.sources.v2.InmetSource),
   * which packs the station files into splits and parses each file in one
@@ -16,11 +18,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Ingest.cidades. Ingest's Catalyst plan stays the reference both are
   * spec-locked to, and the streaming ingest's parser.
   *
-  * `run` writes the stage tables, then the warehouse half reads each
-  * table back from parquet before the next step uses it, so no step
-  * re-runs an upstream lineage. For a 100 TB deployment the single knob to
-  * add is `.partitionBy("ano","mes")` (or bucketing by wmo) on the stage
-  * write (InmetPipelineMain --partitioned) — the warehouse half is
+  * `run` follows the table DAG, not the reference's serial order. Two
+  * branches run at once, each on its own thread:
+  *   - stations -> `cidades` -> `dim_cidade_atributos`;
+  *   - hourly -> `previsoes` -> `datas`;
+  * `fato_agg_previsoes_dia` needs `previsoes` and the dim, and runs
+  * alongside `datas`; `cidade_kpis_mensal` needs the fato, the dim and
+  * `datas`, and runs last. The small tables (`cidades`, the dim and
+  * `datas`: a row per station or per day) are held on the driver once
+  * computed, so no later step reads them back, and each is written as
+  * one file. The large ones are read back from parquet, with their known
+  * schema, before the next step uses them, so no step re-runs an upstream
+  * lineage. For a 100 TB deployment the single knob to add is
+  * `.partitionBy("ano","mes")` (or bucketing by wmo) on the stage write
+  * (InmetPipelineMain --partitioned) — the rest of the run is
   * layout-agnostic.
   */
 object Pipeline {
@@ -34,11 +45,8 @@ object Pipeline {
   /** Parse every INMET CSV under `inputGlob` into the three stage tables
     * (pure transformation — nothing is written or collected). */
   def stage(spark: SparkSession, inputGlob: String): Stage = {
-    def inmet = spark.read.format(classOf[InmetSource].getName)
-    val prev = inmet.load(inputGlob)
-    val stations = inmet
-      .option(InmetSource.SectionOption, InmetSource.StationsSection)
-      .load(inputGlob)
+    val prev = inmet(spark, inputGlob, stations = false)
+    val stations = inmet(spark, inputGlob, stations = true)
       // one row per file: merged after the distributed read, so the
       // station table is written as one file
       .repartition(1)
@@ -89,34 +97,88 @@ object Pipeline {
 
   /** Full run: CSV glob -> stage parquet dir -> analytic parquet dir. */
   def run(spark: SparkSession, inputGlob: String, stageDir: String,
-          analyticDir: String): Unit = {
-    val st = stage(spark, inputGlob)
-    st.cidades.write.mode("overwrite").parquet(s"$stageDir/cidades")
-    st.previsoes.write.mode("overwrite").parquet(s"$stageDir/previsoes")
-    runWarehouse(spark, spark.read.parquet(s"$stageDir/previsoes"),
-      stageDir, analyticDir)
+          analyticDir: String): Unit =
+    runWith(spark, inputGlob, stageDir, analyticDir) { previsoes =>
+      previsoes.write.mode("overwrite").parquet(s"$stageDir/previsoes")
+      spark.read.schema(previsoes.schema).parquet(s"$stageDir/previsoes")
+    }
+
+  /** `run` with the hourly fact written by `writeHourly`, which stages the
+    * DSv2 `previsoes` under `stageDir` in any layout and returns it read
+    * back in the `previsoes` schema. Every other table is written here, in
+    * two branches (see the class doc). Each table is derived from what the
+    * step before wrote, as the reference does via its load step: `datas`
+    * from the written fact, and `cidade_kpis_mensal` from the written daily
+    * rollup, not a second daily aggregate over the hourly fact. */
+  def runWith(spark: SparkSession, inputGlob: String, stageDir: String,
+              analyticDir: String)(writeHourly: DataFrame => DataFrame): Unit = {
+    def write(df: DataFrame, path: String): Unit =
+      df.write.mode("overwrite").parquet(path)
+    // a small table: held on the driver, written as one file
+    def onePart(df: DataFrame, path: String): DataFrame = {
+      val held = onDriver(spark, df)
+      write(held.coalesce(1), path)
+      held
+    }
+    val threads = scala.collection.mutable.ArrayBuffer[Branch[DataFrame]]()
+    def fork(name: String)(body: => DataFrame): Branch[DataFrame] = {
+      val b = new Branch(s"inmet-pipeline-$name", body)
+      threads += b
+      b
+    }
+    try {
+      val dim = fork("stations") {
+        val cidades = onePart(Ingest.cidades(onDriver(spark,
+          inmet(spark, inputGlob, stations = true))), s"$stageDir/cidades")
+        onePart(Warehouse.dimCidadeAtributos(cidades),
+          s"$analyticDir/dim_cidade_atributos")
+      }
+      val previsoes = writeHourly(inmet(spark, inputGlob, stations = false))
+      val datas = fork("datas") {
+        onePart(Ingest.datas(previsoes), s"$stageDir/datas")
+      }
+      val fatoDir = s"$analyticDir/fato_agg_previsoes_dia"
+      val fato = Warehouse.fatoAggPrevisoesDia(previsoes, dim.join())
+      write(fato, fatoDir)
+      write(Warehouse.cidadeKpisMensal(
+        spark.read.schema(fato.schema).parquet(fatoDir), dim.join(), datas.join()),
+        s"$analyticDir/cidade_kpis_mensal")
+    } finally threads.foreach(_.await())
   }
 
-  /** The warehouse half of `run`, after `cidades` and `previsoes` are in
-    * `stageDir` (`stagedPrevisoes` reads the latter back in any layout).
-    * Each table is derived from what the step before wrote, as the
-    * reference does via its load step: `datas` from the written fact (its
-    * min/max agg reads parquet statistics, not the raw-CSV lineage), and
-    * `cidade_kpis_mensal` from the written daily rollup, not a second
-    * daily aggregate over the hourly fact. */
-  def runWarehouse(spark: SparkSession, stagedPrevisoes: DataFrame,
-                   stageDir: String, analyticDir: String): Unit = {
-    Ingest.datas(stagedPrevisoes).write.mode("overwrite")
-      .parquet(s"$stageDir/datas")
-    val dim = Warehouse.dimCidadeAtributos(
-      spark.read.parquet(s"$stageDir/cidades"))
-    dim.write.mode("overwrite")
-      .parquet(s"$analyticDir/dim_cidade_atributos")
-    Warehouse.fatoAggPrevisoesDia(stagedPrevisoes, dim).write.mode("overwrite")
-      .parquet(s"$analyticDir/fato_agg_previsoes_dia")
-    Warehouse.cidadeKpisMensal(
-      spark.read.parquet(s"$analyticDir/fato_agg_previsoes_dia"), dim,
-      spark.read.parquet(s"$stageDir/datas")).write.mode("overwrite")
-      .parquet(s"$analyticDir/cidade_kpis_mensal")
+  /** One face of the DSv2 reader over `inputGlob`. */
+  private def inmet(spark: SparkSession, inputGlob: String,
+                    stations: Boolean): DataFrame = {
+    val r = spark.read.format(classOf[InmetSource].getName)
+    (if (stations) r.option(InmetSource.SectionOption, InmetSource.StationsSection)
+     else r).load(inputGlob)
+  }
+
+  /** `df` computed now and held on the driver: a LocalRelation of the
+    * InternalRows its plan produced, so no value is converted (no date
+    * passes through java.sql.Date) and later plans read it without a
+    * scan. For the small tables: one row per station or per day. */
+  private def onDriver(spark: SparkSession, df: DataFrame): DataFrame =
+    Bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(df.schema),
+      Bridge.collectInternal(df).toSeq))
+
+  /** A branch of `runWith` on a thread of its own, started by the calling
+    * thread, so it inherits the caller's Spark local properties (job group,
+    * scheduler pool, description) and active session. */
+  private final class Branch[T](name: String, body: => T) {
+    @volatile private var result: Either[Throwable, T] = _
+    private val thread = new Thread(() =>
+      result = try Right(body) catch { case t: Throwable => Left(t) }, name)
+    thread.setDaemon(true)
+    thread.start()
+
+    /** Waits for the branch to end. */
+    def await(): Unit = thread.join()
+
+    /** The branch's value, once it has ended; rethrows its failure. */
+    def join(): T = {
+      await()
+      result.fold(t => throw t, identity)
+    }
   }
 }

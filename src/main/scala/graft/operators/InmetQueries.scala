@@ -18,12 +18,24 @@ import org.apache.spark.sql.functions._
   * reference-faithful and is pinned by the golden suite instead. */
 object InmetQueries {
 
-  private val fixtureGlob = "/root/repo/src/test/resources/inmet/*.csv"
+  /** The committed INMET fixtures, resolved once as an absolute path
+    * against the working directory: the checkout root for sbt's forked
+    * tests, Verify and Bench. The oracle SQL reads the same path. */
+  val fixtureDir: String =
+    java.nio.file.Paths.get("src/test/resources/inmet").toAbsolutePath.toString
+  private val fixtureGlob = s"$fixtureDir/*.csv"
+
+  /** `fixtureGlob`, or a failure naming the directory it expects. */
+  def fixtures(): String = {
+    require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(fixtureDir)),
+      s"INMET fixtures not found at $fixtureDir; run from the checkout root")
+    fixtureGlob
+  }
 
   /** Exact deterministic daily rollup (same shape as
     * Warehouse.fatoAggPrevisoesDia). */
   def inmetDaily(spark: SparkSession, dir: String): DataFrame = {
-    val st = Pipeline.stage(spark, fixtureGlob)
+    val st = Pipeline.stage(spark, fixtures())
     val dim = Warehouse.dimCidadeAtributos(st.cidades)
     def centsSum(c: String) = sum(Star.cents(col(c)))
     def avgD(c: String) =
@@ -47,7 +59,7 @@ object InmetQueries {
   /** Monthly KPIs with the avg-of-daily-avgs level in exact fixed point
     * (1e-6 quantized integer division — portable across engines). */
   def inmetKpis(spark: SparkSession, dir: String): DataFrame = {
-    val st = Pipeline.stage(spark, fixtureGlob)
+    val st = Pipeline.stage(spark, fixtures())
     val dim = Warehouse.dimCidadeAtributos(st.cidades)
     val daily = st.previsoes
       .join(broadcast(dim.select("wmo", "cidade_sk")), Seq("wmo"))
@@ -83,7 +95,7 @@ object InmetQueries {
     * an independent engine, not just against our own Ingest path. */
   def inmetDsv2(spark: SparkSession, dir: String): DataFrame = {
     val v2 = spark.read.format("graft.sources.v2.InmetSource")
-      .load(fixtureGlob)
+      .load(fixtures())
     v2.filter(col("data_medicao") >= lit("2025-03-01") &&
         col("data_medicao") < lit("2025-04-01"))
       .groupBy("wmo", "data_medicao")
@@ -106,7 +118,7 @@ object InmetQueries {
     * streaming ingest path end-to-end, not just a row-parity spec. */
   def inmetStream(spark: SparkSession, dir: String): DataFrame = {
     val v2 = spark.readStream.format("graft.sources.v2.InmetSource")
-      .load(fixtureGlob)
+      .load(fixtures())
     val agg = v2.filter(col("data_medicao") >= lit("2025-03-01") &&
         col("data_medicao") < lit("2025-04-01"))
       .groupBy("wmo", "data_medicao")
@@ -223,7 +235,7 @@ object InmetQueries {
     * IDENTICAL operand order in both engines so the doubles agree before
     * the 1e-3 rounding. */
   def inmetStationDistance(spark: SparkSession, dir: String): DataFrame = {
-    val st = Pipeline.stage(spark, fixtureGlob).cidades
+    val st = Pipeline.stage(spark, fixtures()).cidades
       .select(col("wmo"), col("latitude"), col("longitude"))
     val hav =
       "round(2.0 * 6371.0 * asin(sqrt(" +

@@ -4,14 +4,13 @@ import graft.inmet.Ingest
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.time.LocalDate
-import java.time.format.{DateTimeFormatter, DateTimeParseException, ResolverStyle}
 import java.util
-import java.util.regex.Pattern
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecificInternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -20,6 +19,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 for the INMET station-CSV micro-format — the engine
   * reads the reference's raw input as a FIRST-CLASS table:
@@ -48,6 +48,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * and the station code may sit anywhere in a file, the hourly face holds
   * one file's lines in memory (a station-year of hourly rows is ~1 MB);
   * the station face stops reading a file once it has all eight keys.
+  *
+  * The hourly kernel does the per-row work without regexes, formatters or
+  * per-field allocation: the data-line shape is checked by hand
+  * (isDataLine), field bounds come from `indexOf(';')` up to the highest
+  * column the pruned schema needs, dates are read by shape and ASCII
+  * digits (epochDay) and numerals in place (commaNumeral, exact up to 15
+  * significant digits, else parseDouble), each distinct header line is
+  * resolved once per task, and rows are filled into one reused
+  * SpecificInternalRow (Spark projects scan rows to unsafe rows above
+  * the scan). IngestPropertySpec pins epochDay and commaNumeral to the
+  * Catalyst functions. The session's hadoop conf reaches the readers as
+  * one broadcast per scan, as Spark's file sources ship theirs, not
+  * serialized into every task.
   *
   * Scale design: files are PACKED into splits by Spark's own file-source
   * rule and confs (split size min(files.maxPartitionBytes,
@@ -78,23 +91,6 @@ class InmetSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = false
 }
 
-/** Hadoop `Configuration` is not serializable; this minimal wrapper ships
-  * the SESSION's conf (credentials, custom filesystem schemes) from the
-  * driver-side scan to executor-side readers instead of each site
-  * rebuilding a default `new Configuration()` that drops user settings. */
-class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
 object InmetSource {
   /** The active session's hadoop conf on the driver; default conf when
     * called outside a session (tests constructing readers directly). */
@@ -102,6 +98,11 @@ object InmetSource {
     SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
+
+  /** `conf` for executor-side readers, broadcast once per scan as Spark's
+    * file sources ship theirs, not serialized into every task. */
+  def broadcastConf(conf: Configuration): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
 
   val schema: StructType = StructType(Seq(
     StructField("wmo", StringType),
@@ -141,39 +142,110 @@ object InmetSource {
     s.substring(a, b)
   }
 
-  /** JVM twin of Ingest.commaDouble: strict-numeral decimal-comma parse;
-    * anything else null (callers zero-fill). */
-  def commaDouble(raw: String): Option[Double] = {
-    val dotted = trimSpaces(raw).replace(',', '.')
-    val residue = dotted.filter(c => c < '0' || c > '9')
-    if (residue == "" || residue == "." || residue == "-" || residue == "-.")
-      try Some(dotted.toDouble) catch { case _: NumberFormatException => None }
-    else None
-  }
+  /** [[epochDay]]'s value for a field that is not a date. */
+  val NoDate: Int = Int.MinValue
 
-  private def strict(pattern: String) =
-    DateTimeFormatter.ofPattern(pattern).withResolverStyle(ResolverStyle.STRICT)
-  // shape -> format, as Ingest.parseDateFlexible dispatches them; STRICT
-  // `u` years reject 2023/02/30 and 31/04/2023 as Spark's parser does
-  // (SMART would clamp them to the month's last day), and `uu` keeps the
-  // 2000-2099 base of Spark's `yy`
-  private val dateFormats: Seq[(Pattern, DateTimeFormatter)] = Seq(
-    Pattern.compile("^\\d{4}/\\d{2}/\\d{2}$") -> strict("uuuu/MM/dd"),
-    Pattern.compile("^\\d{2}/\\d{2}/\\d{4}$") -> strict("dd/MM/uuuu"),
-    Pattern.compile("^\\d{2}/\\d{2}/\\d{2}$") -> strict("dd/MM/uu"))
+  private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
 
-  /** JVM twin of Ingest.parseDateFlexible (shape-dispatched formats,
-    * unparseable → None). Returns days since epoch. */
-  def parseDate(raw: String): Option[Int] = {
-    val t = trimSpaces(raw)
-    dateFormats.find(_._1.matcher(t).find()).flatMap { case (_, f) =>
-      try Some(LocalDate.parse(t, f).toEpochDay.toInt)
-      catch { case _: DateTimeParseException => None }
+  /** The value of `n` ASCII digits at `s(i)`, or -1. */
+  private def digits(s: String, i: Int, n: Int): Int = {
+    var v = 0
+    var k = 0
+    while (k < n) {
+      val c = s.charAt(i + k)
+      if (!isDigit(c)) return -1
+      v = v * 10 + (c - '0')
+      k += 1
     }
+    v
   }
 
-  /** Ingest.previsoes' data-row shape. */
-  val dataLine: Pattern = Pattern.compile("^\\d{2,4}/\\d{2}/\\d{2,4};")
+  /** Ingest.parseDateFlexible of `s(from until to)`, as days since the
+    * epoch, or [[NoDate]]. The field is trimmed of spaces, its shape picks
+    * the format (`uuuu/MM/dd`, `dd/MM/uuuu` or `dd/MM/uu`, a 2-digit year
+    * meaning 2000-2099), and the date must exist: STRICT resolution, as
+    * Spark's parser does, so 2023/02/29 and 31/04/2023 are no dates. */
+  def epochDay(s: String, from: Int, to: Int): Int = {
+    var a = from
+    var b = to
+    while (a < b && s.charAt(a) == ' ') a += 1
+    while (b > a && s.charAt(b - 1) == ' ') b -= 1
+    val n = b - a
+    var y, m, d = -1
+    if (n == 10 && s.charAt(a + 4) == '/' && s.charAt(a + 7) == '/') {
+      y = digits(s, a, 4); m = digits(s, a + 5, 2); d = digits(s, a + 8, 2)
+    } else if ((n == 10 || n == 8) && s.charAt(a + 2) == '/' && s.charAt(a + 5) == '/') {
+      d = digits(s, a, 2); m = digits(s, a + 3, 2); y = digits(s, a + 6, n - 6)
+      if (n == 8 && y >= 0) y += 2000
+    }
+    val monthDays = m match {
+      case 2 => if (y % 4 == 0 && (y % 100 != 0 || y % 400 == 0)) 29 else 28
+      case 4 | 6 | 9 | 11 => 30
+      case _ => 31
+    }
+    if (y < 0 || m < 1 || m > 12 || d < 1 || d > monthDays) NoDate
+    else LocalDate.of(y, m, d).toEpochDay.toInt
+  }
+
+  def epochDay(s: String): Int = epochDay(s, 0, s.length)
+
+  /** Exact powers of ten: `m / Pow10(k)` is correctly rounded for a
+    * mantissa `m` < 2^53 and `k` <= 22, so it equals parseDouble. */
+  private val Pow10: Array[Double] = Array.tabulate(23)(k => math.pow(10, k))
+
+  /** Ingest.commaDouble of `s(from until to)`, or NaN where that is null
+    * (callers zero-fill). The field is trimmed of spaces and must be an
+    * optional leading `-`, ASCII digits and at most one decimal `,` or
+    * `.`, with at least one digit. Up to 15 significant digits and 22
+    * fraction digits it is parsed in place, otherwise by parseDouble. */
+  def commaNumeral(s: String, from: Int, to: Int): Double = {
+    var a = from
+    var b = to
+    while (a < b && s.charAt(a) == ' ') a += 1
+    while (b > a && s.charAt(b - 1) == ' ') b -= 1
+    val neg = a < b && s.charAt(a) == '-'
+    var i = if (neg) a + 1 else a
+    var mantissa = 0L
+    var significant, fraction, digitCount = 0
+    var point = false
+    while (i < b) {
+      val c = s.charAt(i)
+      if (isDigit(c)) {
+        digitCount += 1
+        if (point) fraction += 1
+        if (significant > 0 || c != '0') {
+          significant += 1
+          if (significant <= 15) mantissa = mantissa * 10 + (c - '0')
+        }
+      } else if ((c == ',' || c == '.') && !point) point = true
+      else return Double.NaN
+      i += 1
+    }
+    if (digitCount == 0) Double.NaN
+    else if (significant <= 15 && fraction <= 22) {
+      val v = mantissa / Pow10(fraction)
+      if (neg) -v else v
+    } else java.lang.Double.parseDouble(s.substring(a, b).replace(',', '.'))
+  }
+
+  def commaNumeral(s: String): Double = commaNumeral(s, 0, s.length)
+
+  /** Ingest.previsoes' data-row shape, `^\d{2,4}/\d{2}/\d{2,4};`. */
+  def isDataLine(line: String): Boolean = {
+    val n = line.length
+    def run(from: Int): Int = {
+      var i = from
+      while (i < n && isDigit(line.charAt(i))) i += 1
+      i - from
+    }
+    val y = run(0)
+    y >= 2 && y <= 4 && n > y + 3 && line.charAt(y) == '/' &&
+      isDigit(line.charAt(y + 1)) && isDigit(line.charAt(y + 2)) &&
+      line.charAt(y + 3) == '/' && {
+        val r = run(y + 4)
+        r >= 2 && r <= 4 && y + 4 + r < n && line.charAt(y + 4 + r) == ';'
+      }
+  }
 
   /** (key, value) of a `KEY:;VALUE` metadata line as
     * Ingest.stationHeadersRaw reads it: the first `;` of the line follows
@@ -259,9 +331,9 @@ class InmetScanBuilder(pathGlob: String, stations: Boolean) extends ScanBuilder
 class InmetScan(pathGlob: String, required: StructType,
     pushed: Array[Filter], stations: Boolean) extends Scan with Batch {
   // captured ON THE DRIVER at scan-build time: the session's hadoop conf
-  // (credentials, custom schemes), shipped serialized to every reader
-  private val hconf = new SerializableHadoopConf(
-    InmetSource.sessionHadoopConf())
+  // (credentials, custom schemes); the glob uses it as is, the readers
+  // get it through a broadcast
+  private val hconf = InmetSource.sessionHadoopConf()
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -274,13 +346,13 @@ class InmetScan(pathGlob: String, required: StructType,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(pathGlob)
-    val fs = p.getFileSystem(hconf.value)
+    val fs = p.getFileSystem(hconf)
     val matched = Option(fs.globStatus(p)).getOrElse(Array.empty)
     InmetSource.pack(matched.toSeq).map(InmetPartition(_): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new InmetReaderFactory(required, pushed, hconf, stations)
+    new InmetReaderFactory(required, pushed, InmetSource.broadcastConf(hconf), stations)
 }
 
 /** The files one task reads, one after another. */
@@ -311,15 +383,17 @@ case class InmetOffset(n: Int)
   * sorted order — the same assumption file-granularity offsets imply
   * for any glob-discovery source without a per-file ledger. */
 class InmetMicroBatchStream(pathGlob: String, required: StructType,
-    pushed: Array[Filter], hconf: SerializableHadoopConf)
+    pushed: Array[Filter], hconf: Configuration)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
   private val log = new scala.collection.mutable.LinkedHashSet[String]
+  // one broadcast for every batch of the stream
+  private lazy val readerConf = InmetSource.broadcastConf(hconf)
 
   private def refresh(): Unit = {
     val p = new Path(pathGlob)
-    val fs = p.getFileSystem(hconf.value)
+    val fs = p.getFileSystem(hconf)
     val now = Option(fs.globStatus(p)).getOrElse(Array.empty)
       .map(_.getPath.toString).sorted
     now.foreach { f => if (!log.contains(f)) log += f }
@@ -339,25 +413,26 @@ class InmetMicroBatchStream(pathGlob: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new InmetReaderFactory(required, pushed, hconf, stations = false)
+    new InmetReaderFactory(required, pushed, readerConf, stations = false)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
 class InmetReaderFactory(required: StructType, pushed: Array[Filter],
-    hconf: SerializableHadoopConf, stations: Boolean) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration], stations: Boolean)
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new InmetReader(partition.asInstanceOf[InmetPartition].files, required,
-      pushed, hconf, stations)
+      pushed, conf.value.value, stations)
 }
 
 /** Streams a split's files one after another: each file's station row
   * (station face) or its filtered, pruned hourly rows. Only the REQUIRED
-  * measures are parsed per row. */
+  * fields of a data line are located and parsed, into one reused row. */
 class InmetReader(files: Seq[String], required: StructType, pushed: Array[Filter],
-    hconf: SerializableHadoopConf, stations: Boolean) extends PartitionReader[InternalRow] {
-  import InmetSource.{commaDouble, dataLine, metaEntry, parseDate}
+    conf: Configuration, stations: Boolean) extends PartitionReader[InternalRow] {
+  import InmetSource.{NoDate, commaNumeral, epochDay, isDataLine, metaEntry}
 
   // pushed-filter bounds (days since epoch); wmo equality short-circuit
   private def days(v: Any): Int = v match {
@@ -379,8 +454,7 @@ class InmetReader(files: Seq[String], required: StructType, pushed: Array[Filter
     case _ =>
   }
 
-  private val rows: Iterator[InternalRow] =
-    files.iterator.flatMap(f => if (stations) stationRow(f) else hourlyRows(f))
+  private val fileIter = files.iterator
   private var current: InternalRow = _
 
   /** Reads `file`'s lines until `done` holds after one; LF, CR and CRLF
@@ -389,7 +463,7 @@ class InmetReader(files: Seq[String], required: StructType, pushed: Array[Filter
   private def readLines(file: String)(done: String => Boolean): Unit = {
     val p = new Path(file)
     val reader = new BufferedReader(new InputStreamReader(
-      p.getFileSystem(hconf.value).open(p), StandardCharsets.UTF_8))
+      p.getFileSystem(conf).open(p), StandardCharsets.UTF_8))
     try {
       var line = reader.readLine()
       if (line != null && line.startsWith("\uFEFF")) line = line.substring(1)
@@ -416,14 +490,41 @@ class InmetReader(files: Seq[String], required: StructType, pushed: Array[Filter
       byColumn(c).map(UTF8String.fromString).orNull: Any)))
   }
 
-  private def hourlyRows(file: String): Iterator[InternalRow] = {
-    val lines = Array.newBuilder[String]
-    readLines(file) { line => lines += line; false }
-    val all = lines.result()
+  private lazy val stationRows = files.iterator.flatMap(stationRow)
+
+  // hourly face. Per required field: -1 wmo, 0 data_medicao, 1 + i the
+  // i-th measure; a slot indexes Ingest.headerIndex's result
+  private val slots: Array[Int] = required.fieldNames.map {
+    case "wmo" => -1
+    case "data_medicao" => 0
+    case m => 1 + Ingest.measureCols.indexOf(m)
+  }
+  private val row = new SpecificInternalRow(required.map(_.dataType))
+  /** Ingest.headerIndex by header line (-1: no such column). */
+  private val headerCols = scala.collection.mutable.HashMap.empty[String, Array[Int]]
+
+  // the open file: its lines, the next one, its station code, the line
+  // column of each required field and of the date, and the highest of these
+  private var lines: Array[String] = Array.empty
+  private var pos = 0
+  private var wmoValue: UTF8String = _
+  private val cols = new Array[Int](slots.length)
+  private var dateCol = -1
+  private var lastCol = -1
+  // field k of the current line is line(starts(k) until ends(k))
+  private var starts, ends = Array.empty[Int]
+
+  /** Loads `file`; it gives no rows without a header, a metadata line
+    * or the pushed station code, or when its header has no date column. */
+  private def openHourly(file: String): Unit = {
+    val all = Array.newBuilder[String]
+    readLines(file) { line => all += line; false }
+    lines = all.result()
+    pos = 0
     var header: String = null
     var wmo: Option[String] = None
     var anyMeta = false
-    all.foreach { line =>
+    lines.foreach { line =>
       if (line.startsWith("Data;")) {
         if (header == null || line < header) header = line
       } else metaEntry(line).foreach { case (k, v) =>
@@ -431,29 +532,77 @@ class InmetReader(files: Seq[String], required: StructType, pushed: Array[Filter
         if (k == "codigo (wmo)" && wmo.isEmpty) wmo = Some(v)
       }
     }
-    if (header == null || !anyMeta || wmoEq.exists(w => !wmo.contains(w)))
-      return Iterator.empty
-    val idx = Ingest.headerIndex(header).map(_.getOrElse(-1))
-    val measureIdx = Ingest.measureCols.zip(idx.tail).toMap
-    val wmoValue = wmo.map(UTF8String.fromString).orNull
-    all.iterator.filter(dataLine.matcher(_).lookingAt()).flatMap { line =>
-      val c = line.split(";", -1)
-      def at(i: Int): Option[String] = if (i >= 0 && i < c.length) Some(c(i)) else None
-      // rows with unparseable dates are DROPPED (reference semantics),
-      // even when data_medicao is pruned away
-      at(idx.head).flatMap(parseDate).filter(d => d >= loDays && d <= hiDays)
-        .map { d =>
-          new GenericInternalRow(required.fieldNames.map {
-            case "wmo" => wmoValue: Any
-            case "data_medicao" => d: Any
-            case m => at(measureIdx(m)).flatMap(commaDouble).getOrElse(0.0): Any
-          }): InternalRow
-        }
+    val hdr = if (header == null) null else headerCols.getOrElseUpdate(header,
+      Ingest.headerIndex(header).map(_.getOrElse(-1)).toArray)
+    if (hdr == null || hdr(0) < 0 || !anyMeta || wmoEq.exists(w => !wmo.contains(w))) {
+      lines = Array.empty
+      return
+    }
+    wmoValue = wmo.map(UTF8String.fromString).orNull
+    dateCol = hdr(0)
+    lastCol = dateCol
+    var i = 0
+    while (i < slots.length) {
+      cols(i) = if (slots(i) < 0) -1 else hdr(slots(i))
+      lastCol = math.max(lastCol, cols(i))
+      i += 1
+    }
+    if (starts.length <= lastCol) {
+      starts = new Array[Int](lastCol + 1)
+      ends = new Array[Int](lastCol + 1)
     }
   }
 
+  /** Fills `row` from a data line; false when its date is missing,
+    * unparseable (reference semantics: the row is DROPPED, even when
+    * data_medicao is pruned away) or outside the pushed bounds. */
+  private def fill(line: String): Boolean = {
+    // bounds of fields 0..lastCol, as `split(value, ";")` cuts them
+    var fields = 0
+    var from = 0
+    while (fields <= lastCol && from >= 0) {
+      val semi = line.indexOf(';', from)
+      starts(fields) = from
+      ends(fields) = if (semi < 0) line.length else semi
+      from = if (semi < 0) -1 else semi + 1
+      fields += 1
+    }
+    val day = if (dateCol < fields) epochDay(line, starts(dateCol), ends(dateCol)) else NoDate
+    if (day == NoDate || day < loDays || day > hiDays) return false
+    var i = 0
+    while (i < slots.length) {
+      slots(i) match {
+        case -1 => row.update(i, wmoValue)
+        case 0 => row.setInt(i, day)
+        case _ =>
+          val c = cols(i)
+          val v = if (c >= 0 && c < fields) commaNumeral(line, starts(c), ends(c)) else Double.NaN
+          row.setDouble(i, if (java.lang.Double.isNaN(v)) 0.0 else v)
+      }
+      i += 1
+    }
+    true
+  }
+
+  private def nextHourly(): Boolean = {
+    while (true) {
+      while (pos < lines.length) {
+        val line = lines(pos)
+        pos += 1
+        if (isDataLine(line) && fill(line)) {
+          current = row
+          return true
+        }
+      }
+      if (!fileIter.hasNext) return false
+      openHourly(fileIter.next())
+    }
+    false
+  }
+
   override def next(): Boolean =
-    rows.hasNext && { current = rows.next(); true }
+    if (stations) stationRows.hasNext && { current = stationRows.next(); true }
+    else nextHourly()
   override def get(): InternalRow = current
   override def close(): Unit = ()
 }

@@ -440,8 +440,8 @@ object StreamingQueries {
     * dataflow becomes MERGE on the touched keys. */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
     import graft.inmet.{Ingest, Pipeline, Warehouse}
-    val fixtureDir = "/root/repo/src/test/resources/inmet"
-    val fixtureGlob = s"$fixtureDir/*.csv"
+    val fixtureGlob = graft.operators.InmetQueries.fixtures()
+    val fixtureDir = graft.operators.InmetQueries.fixtureDir
     val work = java.nio.file.Paths.get(
       replayCheckpoint("upsert_work"))
     val stateDir = s"$work/state"

@@ -20,6 +20,15 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df`'s result as the InternalRows of its physical plan, collected as
+    * one tracked SQL execution, the way Dataset.collect runs its plan. */
+  def collectInternal(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

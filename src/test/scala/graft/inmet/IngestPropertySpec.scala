@@ -1,6 +1,7 @@
 package graft.inmet
 
 import graft.SparkSuite
+import graft.sources.v2.InmetSource
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import java.time.LocalDate
@@ -107,15 +108,45 @@ class IngestPropertySpec extends SparkSuite {
     }) + pad
     val cases = (Gen.listOfN(600, date).sample.get ++
       Seq("2023/02/29", "2024/02/29", "2023/02/30", "31/04/2023",
-        "29/02/23", "29/02/24", "29/02/00", "2024/2/29", "")).distinct
+        "29/02/23", "29/02/24", "29/02/00", "2024/2/29", "",
+        "0000/01/01", "01/01/0000", "0000/02/29", "9999/12/31")).distinct
+    // days since the epoch on both sides: a java.sql.Date would shift
+    // dates before the Gregorian switch
     val got = cases.toDF("s")
-      .select(Ingest.parseDateFlexible($"s")).as[Option[java.sql.Date]]
+      .select(unix_date(Ingest.parseDateFlexible($"s"))).as[Option[Int]]
       .collect()
     cases.zip(got).foreach { case (s, want) =>
-      val viaReader = graft.sources.v2.InmetSource.parseDate(s)
-        .map(d => LocalDate.ofEpochDay(d.toLong))
-      assert(viaReader === want.map(_.toLocalDate), s"'$s'")
+      val day = InmetSource.epochDay(s)
+      assert((if (day == InmetSource.NoDate) None else Some(day)) === want, s"'$s'")
     }
     assert(got.count(_.isDefined) > 100) // the valid dates are not all lost
+  }
+
+  test("the DSv2 reader's numeral parser equals commaDouble bit for bit") {
+    val digits = Gen.listOf(Gen.numChar).map(_.mkString)
+    val longDigits = Gen.choose(16, 30).flatMap(Gen.listOfN(_, Gen.numChar)).map(_.mkString)
+    val numeral = for {
+      sign <- Gen.frequency(4 -> "", 4 -> "-", 1 -> "+", 1 -> "--")
+      whole <- Gen.oneOf(digits, longDigits, Gen.const("0"), Gen.const(""))
+      point <- Gen.frequency(3 -> "", 3 -> ",", 2 -> ".", 1 -> ",,")
+      frac <- Gen.oneOf(digits, longDigits, Gen.const("0000000000000000000000001"))
+      pad <- Gen.oneOf("", " ", "\t", "  ", " \t")
+      tail <- Gen.frequency(8 -> "", 1 -> " ", 1 -> "\t", 1 -> "-", 1 -> "e5")
+    } yield pad + sign + whole + point + frac + tail + pad
+    val cases = (Gen.listOfN(2000, numeral).sample.get ++ Seq(
+      "-0", "0", ",5", "-,5", "1,", "-", ".", ",", "", "nan", "NaN", "1e5",
+      "+1", "1-2", "-0,0", "915,6", " 87 ", "\t21,5", "Infinity", "1,2,3",
+      "12345678901234567890", "0,12345678901234567890123", "9007199254740993",
+      "0,1000000000000000055511151231257827")).distinct
+    val got = cases.toDF("s").select(Ingest.commaDouble($"s"))
+      .as[Option[Double]].collect()
+    cases.zip(got).foreach { case (s, want) =>
+      val v = InmetSource.commaNumeral(s)
+      want match {
+        case Some(w) => assert(java.lang.Double.compare(v, w) === 0, s"'$s': $v != $w")
+        case None => assert(v.isNaN, s"'$s': $v, want null")
+      }
+    }
+    assert(got.count(_.isDefined) > 300) // the valid numerals are not all lost
   }
 }
