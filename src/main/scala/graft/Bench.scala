@@ -151,8 +151,13 @@ object Bench {
       val spreadPct = if (ok && lo > 0) (hi - lo) / lo * 100.0 else -1.0
       "\"" + n + "\":[" + fmt(lo) + "," + fmt(hi) + "," + fmt(spreadPct) + "]"
     }.mkString("{", ",", "}")
+    // a query that threw in any timed run is left out of the totals above;
+    // these fields name it, so a failure cannot pass as a faster run
+    val failedNames = results.collect { case (n, v) if v < 0 => n }
+    val failed = s""""n_failed":${failedNames.size},"failed":""" +
+      failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"runs":$timedRuns,"warmup":$warmup,"single_run":${fmt(singleRunTotal)},"best_of_n":${fmt(total)},"queries":$full,"min_max_spread":$minmax,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"runs":$timedRuns,"warmup":$warmup,"single_run":${fmt(singleRunTotal)},"best_of_n":${fmt(total)},"queries":$full,"min_max_spread":$minmax,"sf":"$sfDir",$failed}"""
     // narrowed (SPARK_GRAFT_ONLY) runs write a scratch file so a focused
     // iteration never clobbers the last full-run per-query map
     val detailFile = if (only.isDefined) "bench_narrow.json" else "bench_full.json"
@@ -175,6 +180,6 @@ object Bench {
     // short tail capture (BENCH_r04 "parsed": null)
     spark.stop()
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"runs":$timedRuns,"warmup":$warmup,"single_run":${fmt(singleRunTotal)},"best_of_n":${fmt(total)},"queries":$qs,"detail":"$detailFile","sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"runs":$timedRuns,"warmup":$warmup,"single_run":${fmt(singleRunTotal)},"best_of_n":${fmt(total)},"queries":$qs,"detail":"$detailFile","sf":"$sfDir",$failed}""")
   }
 }

@@ -21,6 +21,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b narrows the dump for focused iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -28,6 +29,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // Bench-style between-query hygiene: the serve chains pin
       // persisted-RDD leaves (winnowPairs contract — callers unpersist)
@@ -64,5 +66,12 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // after the dump and oracle_sql.json are written: a failed query
+    // makes the run fail, not just log
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.Column
   * Pipeline.stage reads the stage tables through the DSv2 reader
   * (graft.sources.v2.InmetSource), whose JVM parser follows these rules
   * line for line (StageParitySpec); this plan stays the reference the
-  * DuckDB oracle mirrors, and the parser of the streaming ingest.
+  * DuckDB oracle mirrors.
   *
   * All casts/date-parses are written ANSI-safe (guarded by `rlike`/`size`
   * predicates) so the module behaves identically under
@@ -192,22 +192,12 @@ object Ingest {
     *     downstream daily/monthly stats aggregate over the zeros;
     *   - trailing `;` drift is irrelevant (indexing ignores ghost columns).
     */
-  def previsoes(spark: SparkSession, lines: DataFrame): DataFrame =
-    previsoesFrom(spark, lines, lines)
-
-  /** As `previsoes`, but with the data-line relation decoupled from the
-    * header relation — the seam the streaming ingest
-    * (graft.streaming.InmetStreaming) plugs into: `dataLines` may be a
-    * STREAMING frame while `headerLines` stays a static batch read (the
-    * header map is bytes-per-file and broadcast). */
-  def previsoesFrom(spark: SparkSession, dataLines: DataFrame,
-                    headerLines: DataFrame): DataFrame = {
-    val idx = fileColumnIndex(spark, headerLines)
-    val wmoByFile =
-      stationHeadersRaw(headerLines).select(col("file"), col("wmo"))
+  def previsoes(spark: SparkSession, lines: DataFrame): DataFrame = {
+    val idx = fileColumnIndex(spark, lines)
+    val wmoByFile = stationHeadersRaw(lines).select(col("file"), col("wmo"))
     val fileInfo = broadcast(idx.join(wmoByFile, "file"))
 
-    val dataRows = dataLines
+    val dataRows = lines
       .filter(col("value").rlike("^\\d{2,4}/\\d{2}/\\d{2,4};"))
       .select(col("file"), split(col("value"), ";").as("c"))
 

@@ -15,8 +15,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * which packs the station files into splits and parses each file in one
   * pass: `previsoes` is its hourly face, `cidades` its station face (one
   * raw row per file, read only as far as the metadata section) typed by
-  * Ingest.cidades. Ingest's Catalyst plan stays the reference both are
-  * spec-locked to, and the streaming ingest's parser.
+  * Ingest.cidades. Ingest's Catalyst plan stays the reference the reader
+  * is spec-locked to.
   *
   * `run` follows the table DAG, not the reference's serial order. Two
   * branches run at once, each on its own thread:
@@ -64,35 +64,28 @@ object Pipeline {
       Warehouse.cidadeKpisMensal(fatoDia, dim, stage.datas))
   }
 
-  /** Reference-parity catalog run (SURVEY.md §2 S8-S10): stage tables are
-    * saved into the session catalog's `stage` schema, then the three
-    * analytic tables are built by SQL CTAS into `analitic` — the
-    * reference's Snowflake DDL chain replayed on Spark's own catalog
-    * (CREATE OR REPLACE TABLE becomes DROP + CREATE ... USING PARQUET AS,
-    * the v1-session-catalog equivalent). Requires a writable
+  /** Reference-parity catalog run (SURVEY.md §2 S8-S10): the stage tables
+    * are saved into the session catalog's `stage` schema, then the three
+    * analytic tables are computed by `analytics` over those catalog tables
+    * and saved into `analitic` — the reference's Snowflake DDL chain
+    * replayed on Spark's own catalog (`saveAsTable` in overwrite mode for
+    * CREATE OR REPLACE TABLE). Requires a writable
     * `spark.sql.warehouse.dir`. */
   def runCatalog(spark: SparkSession, inputGlob: String): Unit = {
     val st = stage(spark, inputGlob)
     spark.sql("CREATE DATABASE IF NOT EXISTS stage")
     spark.sql("CREATE DATABASE IF NOT EXISTS analitic")
-    st.cidades.write.mode("overwrite").format("parquet")
-      .saveAsTable("stage.dim_cidades")
-    st.previsoes.write.mode("overwrite").format("parquet")
-      .saveAsTable("stage.fato_previsoes")
-    st.datas.write.mode("overwrite").format("parquet")
-      .saveAsTable("stage.dim_datas")
-    def ctas(table: String, select: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"CREATE TABLE $table USING PARQUET AS $select")
+    def save(df: DataFrame, table: String): DataFrame = {
+      df.write.mode("overwrite").format("parquet").saveAsTable(table)
+      spark.table(table)
     }
-    ctas("analitic.dim_cidade_atributos",
-      Warehouse.dimCidadeAtributosSqlFor("stage.dim_cidades"))
-    ctas("analitic.fato_agg_previsoes_dia",
-      Warehouse.fatoAggPrevisoesDiaSqlFor("stage.fato_previsoes",
-        "analitic.dim_cidade_atributos"))
-    ctas("analitic.cidade_kpis_mensal",
-      Warehouse.cidadeKpisMensalSqlFor("analitic.fato_agg_previsoes_dia",
-        "analitic.dim_cidade_atributos", "stage.dim_datas"))
+    val an = analytics(Stage(
+      cidades = save(st.cidades, "stage.dim_cidades"),
+      previsoes = save(st.previsoes, "stage.fato_previsoes"),
+      datas = save(st.datas, "stage.dim_datas")))
+    save(an.dimCidadeAtributos, "analitic.dim_cidade_atributos")
+    save(an.fatoAggPrevisoesDia, "analitic.fato_agg_previsoes_dia")
+    save(an.cidadeKpisMensal, "analitic.cidade_kpis_mensal")
   }
 
   /** Full run: CSV glob -> stage parquet dir -> analytic parquet dir. */

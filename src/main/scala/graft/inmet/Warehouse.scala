@@ -1,6 +1,6 @@
 package graft.inmet
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The three warehouse (analytic) queries of the reference, re-expressed as
@@ -9,6 +9,28 @@ import org.apache.spark.sql.functions._
   * `create_analitic_fato_agg_previsoes_dia.sql`,
   * `create_analitic_cidade_kpis_mensal.sql` (reference repo). The Snowflake
   * layer disappears: Spark is both processor and warehouse.
+  *
+  * The daily rollup is defined once, as a mergeable station-day state
+  * (`dayState`, `mergeDayStates`, `finalizeDay`): the warehouse, the
+  * registered INMET queries and the streaming upsert all build it.
+  *
+  * State, per (wmo, cidade_sk, data_medicao): min and max temperature, for
+  * each of the five measures the exact sum of its readings in cents, and
+  * the row count `n`. A reading's cents are round(100 x) as a long while
+  * |x| < 1e6; beyond that (and for a sum that overflows a long) the
+  * measure's sum is null, and stays null through every merge. Sums of
+  * integers do not depend on the order they are added in, so the state is
+  * the same however the rows are partitioned, ordered or split into
+  * micro-batches.
+  *
+  * Finalize: a mean is `CAST(S AS DOUBLE) / CAST(100 * n AS DOUBLE)`, one
+  * correctly rounded division, and the precipitation total `S / 100.0`;
+  * each is null when its sum is null or |S| >= 1e15. Semantics note: the
+  * reference's float AVG/SUM add in scan order, and for readings with at
+  * most two decimals (all INMET data) they differ from these values only
+  * by that order's rounding noise; these are the true means, correctly
+  * rounded, and the same in every engine that divides the same two
+  * doubles (the DuckDB oracle does).
   *
   * Scale notes: both dimension joins are broadcast (station dim is tiny —
   * thousands of stations at most; calendar is one row per day). The daily
@@ -29,101 +51,98 @@ object Warehouse {
       col("latitude"), col("longitude"), col("altitude"), col("data_fundacao"))
   }
 
-  /** Daily fact rollup (create_analitic_fato_agg_previsoes_dia.sql:4-19):
-    * hourly fact x station dim (broadcast), grouped per station-day.
-    * AVG/MIN run over the zero-filled measures — NOT null-skipping — which
-    * is the reference's semantic keystone (see Ingest.previsoes). */
-  def fatoAggPrevisoesDia(previsoes: DataFrame, dimCidade: DataFrame): DataFrame =
-    previsoes
+  /** The station-day key. */
+  val dayKeys: Seq[String] = Seq("wmo", "cidade_sk", "data_medicao")
+
+  /** Each measure of `previsoes` and the name of its cents sum. */
+  private val sums: Seq[(String, String)] = Seq(
+    "temperatura_c" -> "temp_c", "precipitacao_mm" -> "precip_c",
+    "pressao_atm_kpa" -> "pressao_c", "vento_mps" -> "vento_c",
+    "umidade_porcentagem" -> "umid_c")
+
+  /** round(100 x) as a long while |x| < 1e6 (NaN and infinities fail the
+    * test), else null: the cast never overflows, and a day's sum fits a
+    * long up to 9e10 rows. */
+  private def cents(x: Column): Column =
+    when(abs(x) < 1e6, round(x * 100).cast("long"))
+
+  /** The station-day state of hourly `previsoes` rows, keyed through the
+    * station dim's `cidade_sk` (broadcast; AVG/MIN over the zero-filled
+    * measures — NOT null-skipping — is the reference's semantic keystone,
+    * see Ingest.previsoes). Each row is a state of one reading, merged. */
+  def dayState(previsoes: DataFrame, dimCidade: DataFrame): DataFrame =
+    mergeDayStates(previsoes
       .join(broadcast(dimCidade.select("wmo", "cidade_sk")), Seq("wmo"))
-      .groupBy("wmo", "cidade_sk", "data_medicao")
-      .agg(
-        min("temperatura_c").as("temp_min_c"),
-        max("temperatura_c").as("temp_max_c"),
-        avg("temperatura_c").as("temp_avg_c"),
-        sum("precipitacao_mm").as("precip_total_mm"),
-        avg("pressao_atm_kpa").as("pressao_avg_kpa"),
-        avg("vento_mps").as("vento_avg_mps"),
-        avg("umidade_porcentagem").as("umidade_avg_pct"),
-        count(lit(1)).as("registros_horarios"))
+      .select(dayKeys.map(col) ++ Seq(
+        col("temperatura_c").as("temp_min_c"),
+        col("temperatura_c").as("temp_max_c")) ++
+        sums.map { case (m, s) => cents(col(m)).as(s) } :+
+        lit(1L).as("n"): _*))
+
+  /** Merges station-day states that share a key: min of the minima, max of
+    * the maxima, sums of the sums and of `n`. A sum is null if any merged
+    * sum is null or the total overflows a long. */
+  def mergeDayStates(states: DataFrame): DataFrame =
+    states.groupBy(dayKeys.map(col): _*).agg(
+      min("temp_min_c").as("temp_min_c"),
+      max("temp_max_c").as("temp_max_c") +:
+        sums.map { case (_, s) =>
+          when(count(col(s)) === count(lit(1)), try_sum(col(s))).as(s)
+        } :+
+        sum("n").as("n"): _*)
+
+  /** A cents sum while it is exact in a double and recoverable from its
+    * finalized value (|S| < 1e15), else null. */
+  private def exactSum(s: String): Column =
+    when(abs(col(s)) < 1e15, col(s).cast("double"))
+
+  /** The daily fact row of each state (the columns of
+    * create_analitic_fato_agg_previsoes_dia.sql:4-19). */
+  def finalizeDay(states: DataFrame): DataFrame = {
+    def mean(s: String) = exactSum(s) / (col("n") * 100).cast("double")
+    states.select(col("wmo"), col("cidade_sk"), col("data_medicao"),
+      col("temp_min_c"), col("temp_max_c"),
+      mean("temp_c").as("temp_avg_c"),
+      (exactSum("precip_c") / 100.0).as("precip_total_mm"),
+      mean("pressao_c").as("pressao_avg_kpa"),
+      mean("vento_c").as("vento_avg_mps"),
+      mean("umid_c").as("umidade_avg_pct"),
+      col("n").as("registros_horarios"))
+  }
+
+  /** Daily fact rollup (create_analitic_fato_agg_previsoes_dia.sql:4-19):
+    * hourly fact x station dim, one finalized state per station-day. */
+  def fatoAggPrevisoesDia(previsoes: DataFrame, dimCidade: DataFrame): DataFrame =
+    finalizeDay(dayState(previsoes, dimCidade))
 
   /** Monthly per-city KPIs (create_analitic_cidade_kpis_mensal.sql:5-18).
     * `mensal_temp_media` averages the DAILY averages (avg-of-avgs), not the
-    * hourly readings — the two-level aggregation is preserved.
+    * hourly readings — the two-level aggregation is preserved. Like the
+    * reference's AVG and SUM over the fato, it skips a day whose value is
+    * null. Both are exact, so no result depends on the order days arrive:
+    *   - a daily mean is truncated to a multiple of 1e-12 (a long: |mean|
+    *     < 1e6 by the cents bound), the month's mean is that long sum
+    *     divided by the day count, truncated, then scaled back (null if the
+    *     sum overflows);
+    *   - the precipitation total adds each day's cents, recovered exactly
+    *     as round(100 * precip_total_mm) (error < 0.25 for |S| < 1e15);
+    *     null if the total overflows a long.
     * `dias_com_precip` is COUNT_IF(precip_total_mm > 0). */
   def cidadeKpisMensal(fatoDia: DataFrame, dimCidade: DataFrame,
-                       datas: DataFrame): DataFrame =
+                       datas: DataFrame): DataFrame = {
+    val micro = (col("temp_avg_c") * 1e12).cast("long")
+    val precip = round(col("precip_total_mm") * 100).cast("long")
     fatoDia.drop("cidade_sk")
       .join(broadcast(dimCidade.select("wmo", "cidade_sk")), Seq("wmo"))
       .join(broadcast(datas.select("data_medicao", "ano", "mes")),
         Seq("data_medicao"))
       .groupBy("cidade_sk", "ano", "mes")
       .agg(
-        avg("temp_avg_c").as("mensal_temp_media"),
+        (call_function("div", try_sum(micro), count(micro))
+          .cast("double") / 1e12)
+          .as("mensal_temp_media"),
         max("temp_max_c").as("mensal_temp_max"),
-        sum("precip_total_mm").as("mensal_precip_total"),
+        (try_sum(precip).cast("double") / 100.0).as("mensal_precip_total"),
         count(when(col("precip_total_mm") > 0, 1)).as("dias_com_precip"))
-
-  /** The same three statements as SQL text (COUNT_IF is Spark-native) —
-    * parameterized by source table names so they run both over temp views
-    * (reference-parity `spark.sql` path) and over catalog tables
-    * (`stage.`/`analitic.`-qualified, see Pipeline.runCatalog). */
-  def dimCidadeAtributosSqlFor(dimCidades: String): String =
-    s"""SELECT
-       |  CONCAT(TRIM(UPPER(COALESCE(wmo,''))), '-',
-       |         TRIM(UPPER(COALESCE(uf,''))), '-',
-       |         TRIM(UPPER(COALESCE(estacao,'')))) AS cidade_sk,
-       |  wmo, uf, estacao, regiao, latitude, longitude, altitude, data_fundacao
-       |FROM $dimCidades""".stripMargin
-
-  def fatoAggPrevisoesDiaSqlFor(fatoPrevisoes: String,
-                                dimCidadeAtributos: String): String =
-    s"""SELECT
-       |  f.wmo, c.cidade_sk, f.data_medicao,
-       |  MIN(f.temperatura_c) AS temp_min_c,
-       |  MAX(f.temperatura_c) AS temp_max_c,
-       |  AVG(f.temperatura_c) AS temp_avg_c,
-       |  SUM(f.precipitacao_mm) AS precip_total_mm,
-       |  AVG(f.pressao_atm_kpa) AS pressao_avg_kpa,
-       |  AVG(f.vento_mps) AS vento_avg_mps,
-       |  AVG(f.umidade_porcentagem) AS umidade_avg_pct,
-       |  COUNT(*) AS registros_horarios
-       |FROM $fatoPrevisoes f
-       |JOIN $dimCidadeAtributos c ON f.wmo = c.wmo
-       |GROUP BY f.wmo, c.cidade_sk, f.data_medicao""".stripMargin
-
-  def cidadeKpisMensalSqlFor(fatoAggDia: String, dimCidadeAtributos: String,
-                             dimDatas: String): String =
-    s"""SELECT
-       |  c.cidade_sk, dt.ano, dt.mes,
-       |  AVG(d.temp_avg_c) AS mensal_temp_media,
-       |  MAX(d.temp_max_c) AS mensal_temp_max,
-       |  SUM(d.precip_total_mm) AS mensal_precip_total,
-       |  COUNT_IF(d.precip_total_mm > 0) AS dias_com_precip
-       |FROM $fatoAggDia d
-       |JOIN $dimCidadeAtributos c ON d.wmo = c.wmo
-       |JOIN $dimDatas dt ON d.data_medicao = dt.data_medicao
-       |GROUP BY c.cidade_sk, dt.ano, dt.mes""".stripMargin
-
-  val dimCidadeAtributosSql: String = dimCidadeAtributosSqlFor("dim_cidades")
-  val fatoAggPrevisoesDiaSql: String =
-    fatoAggPrevisoesDiaSqlFor("fato_previsoes", "dim_cidade_atributos")
-  val cidadeKpisMensalSql: String = cidadeKpisMensalSqlFor(
-    "fato_agg_previsoes_dia", "dim_cidade_atributos", "dim_datas")
-
-  /** Runs the CTAS chain via `spark.sql` over temp views, in DAG order
-    * (dag_inmet.py:210-220 in the reference). Returns the three results. */
-  def runSqlChain(spark: SparkSession, previsoes: DataFrame,
-                  cidades: DataFrame, datas: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    previsoes.createOrReplaceTempView("fato_previsoes")
-    cidades.createOrReplaceTempView("dim_cidades")
-    datas.createOrReplaceTempView("dim_datas")
-    val dim = spark.sql(dimCidadeAtributosSql)
-    dim.createOrReplaceTempView("dim_cidade_atributos")
-    val fatoDia = spark.sql(fatoAggPrevisoesDiaSql)
-    fatoDia.createOrReplaceTempView("fato_agg_previsoes_dia")
-    val kpis = spark.sql(cidadeKpisMensalSql)
-    (dim, fatoDia, kpis)
   }
 }

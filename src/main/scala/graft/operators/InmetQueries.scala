@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryDef
-import graft.inmet.{Pipeline, Warehouse}
+import graft.inmet.Pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,11 +11,9 @@ import org.apache.spark.sql.functions._
   * pipeline (line classification, metadata pivot, decimal-comma cleansing,
   * zero-fill, dual date formats) over the same raw files.
   *
-  * Averages here are computed in the exact cents domain
-  * (`SUM(round(x*100)) / 100.0 / n`) — the same true mean as the plain AVG
-  * in graft.inmet.Warehouse (INMET measures carry <= 2 decimals) but with a
-  * deterministic, engine-portable evaluation order. Warehouse itself stays
-  * reference-faithful and is pinned by the golden suite instead. */
+  * `q_inmet_daily` and `q_inmet_kpis` return the warehouse tables exactly
+  * as Pipeline.run computes them; their oracle SQL computes the same exact
+  * cents-domain means (see graft.inmet.Warehouse) from the raw files. */
 object InmetQueries {
 
   /** The committed INMET fixtures, resolved once as an absolute path
@@ -32,57 +30,18 @@ object InmetQueries {
     fixtureGlob
   }
 
-  /** Exact deterministic daily rollup (same shape as
-    * Warehouse.fatoAggPrevisoesDia). */
-  def inmetDaily(spark: SparkSession, dir: String): DataFrame = {
-    val st = Pipeline.stage(spark, fixtures())
-    val dim = Warehouse.dimCidadeAtributos(st.cidades)
-    def centsSum(c: String) = sum(Star.cents(col(c)))
-    def avgD(c: String) =
-      centsSum(c).cast("double") / 100.0 / count(lit(1))
-    st.previsoes
-      .join(broadcast(dim.select("wmo", "cidade_sk")), Seq("wmo"))
-      .groupBy("wmo", "cidade_sk", "data_medicao")
-      .agg(
-        min("temperatura_c").as("temp_min_c"),
-        max("temperatura_c").as("temp_max_c"),
-        avgD("temperatura_c").as("temp_avg_c"),
-        (centsSum("precipitacao_mm").cast("double") / 100.0)
-          .as("precip_total_mm"),
-        avgD("pressao_atm_kpa").as("pressao_avg_kpa"),
-        avgD("vento_mps").as("vento_avg_mps"),
-        avgD("umidade_porcentagem").as("umidade_avg_pct"),
-        count(lit(1)).as("registros_horarios"))
-      .orderBy("wmo", "data_medicao")
-  }
+  /** The warehouse's daily rollup (Warehouse.fatoAggPrevisoesDia) of the
+    * fixtures, as Pipeline.run computes it. */
+  def inmetDaily(spark: SparkSession, dir: String): DataFrame =
+    fixtureAnalytics(spark).fatoAggPrevisoesDia.orderBy("wmo", "data_medicao")
 
-  /** Monthly KPIs with the avg-of-daily-avgs level in exact fixed point
-    * (1e-6 quantized integer division — portable across engines). */
-  def inmetKpis(spark: SparkSession, dir: String): DataFrame = {
-    val st = Pipeline.stage(spark, fixtures())
-    val dim = Warehouse.dimCidadeAtributos(st.cidades)
-    val daily = st.previsoes
-      .join(broadcast(dim.select("wmo", "cidade_sk")), Seq("wmo"))
-      .groupBy("wmo", "cidade_sk", "data_medicao")
-      .agg(
-        sum(Star.cents(col("temperatura_c"))).as("temp_c_sum"),
-        max("temperatura_c").as("temp_max_c"),
-        sum(Star.cents(col("precipitacao_mm"))).as("precip_c"),
-        count(lit(1)).as("n"))
-      // daily avg in exact 1e-6 degC units
-      .withColumn("temp_avg_u", Star.idiv(col("temp_c_sum") * 10000L, col("n")))
-    daily
-      .groupBy(col("cidade_sk"),
-        year(col("data_medicao")).cast("long").as("ano"),
-        month(col("data_medicao")).cast("long").as("mes"))
-      .agg(
-        (Star.idiv(sum(col("temp_avg_u")), count(lit(1))).cast("double") / 1e6)
-          .as("mensal_temp_media"),
-        max("temp_max_c").as("mensal_temp_max"),
-        (sum(col("precip_c")).cast("double") / 100.0).as("mensal_precip_total"),
-        count(when(col("precip_c") > 0L, 1)).as("dias_com_precip"))
-      .orderBy("cidade_sk", "ano", "mes")
-  }
+  /** The warehouse's monthly KPIs (Warehouse.cidadeKpisMensal) of the
+    * fixtures, as Pipeline.run computes them. */
+  def inmetKpis(spark: SparkSession, dir: String): DataFrame =
+    fixtureAnalytics(spark).cidadeKpisMensal.orderBy("cidade_sk", "ano", "mes")
+
+  private def fixtureAnalytics(spark: SparkSession): Pipeline.Analytics =
+    Pipeline.analytics(Pipeline.stage(spark, fixtures()))
 
   /** Shared oracle scaffolding: raw INMET files -> cleansed hourly rows
     * joined with the metadata-derived station key, in DuckDB SQL. Mirrors
@@ -200,11 +159,11 @@ object InmetQueries {
        |SELECT wmo, cidade_sk, data_medicao,
        |  MIN(temperatura_c) AS temp_min_c,
        |  MAX(temperatura_c) AS temp_max_c,
-       |  CAST(SUM(temp_c) AS DOUBLE) / 100.0 / COUNT(*) AS temp_avg_c,
+       |  CAST(SUM(temp_c) AS DOUBLE) / CAST(100 * COUNT(*) AS DOUBLE) AS temp_avg_c,
        |  CAST(SUM(precip_c) AS DOUBLE) / 100.0 AS precip_total_mm,
-       |  CAST(SUM(pressao_c) AS DOUBLE) / 100.0 / COUNT(*) AS pressao_avg_kpa,
-       |  CAST(SUM(vento_c) AS DOUBLE) / 100.0 / COUNT(*) AS vento_avg_mps,
-       |  CAST(SUM(umid_c) AS DOUBLE) / 100.0 / COUNT(*) AS umidade_avg_pct,
+       |  CAST(SUM(pressao_c) AS DOUBLE) / CAST(100 * COUNT(*) AS DOUBLE) AS pressao_avg_kpa,
+       |  CAST(SUM(vento_c) AS DOUBLE) / CAST(100 * COUNT(*) AS DOUBLE) AS vento_avg_mps,
+       |  CAST(SUM(umid_c) AS DOUBLE) / CAST(100 * COUNT(*) AS DOUBLE) AS umidade_avg_pct,
        |  COUNT(*) AS registros_horarios
        |FROM hourly
        |GROUP BY wmo, cidade_sk, data_medicao
@@ -213,14 +172,14 @@ object InmetQueries {
   private val inmetKpisSql =
     s"""$parsedCte,
        |daily AS (
-       |  SELECT wmo, cidade_sk, data_medicao,
-       |    SUM(temp_c) AS temp_c_sum, MAX(temperatura_c) AS temp_max_c,
-       |    SUM(precip_c) AS precip_c, COUNT(*) AS n,
-       |    (SUM(temp_c) * 10000) // COUNT(*) AS temp_avg_u
+       |  SELECT cidade_sk, data_medicao,
+       |    MAX(temperatura_c) AS temp_max_c, SUM(precip_c) AS precip_c,
+       |    CAST(trunc(CAST(SUM(temp_c) AS DOUBLE) /
+       |      CAST(100 * COUNT(*) AS DOUBLE) * 1e12) AS BIGINT) AS temp_avg_u
        |  FROM hourly GROUP BY wmo, cidade_sk, data_medicao)
-       |SELECT cidade_sk, CAST(year(data_medicao) AS BIGINT) AS ano,
-       |  CAST(month(data_medicao) AS BIGINT) AS mes,
-       |  CAST(SUM(temp_avg_u) // COUNT(*) AS DOUBLE) / 1e6 AS mensal_temp_media,
+       |SELECT cidade_sk, year(data_medicao) AS ano, month(data_medicao) AS mes,
+       |  CAST(SUM(temp_avg_u) // COUNT(temp_avg_u) AS DOUBLE) / 1e12
+       |    AS mensal_temp_media,
        |  MAX(temp_max_c) AS mensal_temp_max,
        |  CAST(SUM(precip_c) AS DOUBLE) / 100.0 AS mensal_precip_total,
        |  CAST(COUNT_IF(precip_c > 0) AS BIGINT) AS dias_com_precip

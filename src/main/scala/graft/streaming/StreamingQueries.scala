@@ -3,6 +3,7 @@ package graft.streaming
 import graft.QueryDef
 import graft.operators.Star
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming entries in the correctness gate: the streaming
@@ -423,82 +424,66 @@ object StreamingQueries {
       |ORDER BY user_id, event_type""".stripMargin
 
   /** foreachBatch incremental upsert into a parquet serving table: the
-    * INMET fixture CSVs arrive one file per micro-batch; each batch
-    * reduces to MERGEABLE per-(station, day) partials (min/max/exact
-    * cents sums/count) and upserts them into the running daily table,
-    * which the next batch reads back. After the 3-file replay the serving
-    * table IS the batch daily rollup — shared oracle with q_inmet_daily.
+    * INMET fixture CSVs are read through the DSv2 source's micro-batch
+    * face (`readStream.format(InmetSource)`, every file visible at a
+    * trigger is one batch); each batch reduces to the warehouse's
+    * mergeable station-day states (Warehouse.dayState) and merges them
+    * into the running state table (Warehouse.mergeDayStates), which the
+    * next batch reads back. The result is the state finalized by
+    * Warehouse.finalizeDay: after the replay it IS the batch daily rollup,
+    * bit for bit — shared oracle with q_inmet_daily.
     *
     * Scale note: the state is ONE parquet dir hash-bucketed on the
-    * station key. Per batch: the batch's partials name their buckets (a
+    * station key. Per batch: the batch's states name their buckets (a
     * driver-side list bounded by the bucket count, never by data), the
     * state read is partition-PRUNED to exactly those buckets, and the
     * merged result is written back with dynamic partition overwrite —
     * untouched buckets are neither read nor rewritten. Per batch the
-    * loop shuffles only that batch's partials plus the touched state
+    * loop shuffles only that batch's states plus the touched state
     * rows, never the history. With a transactional format the same
     * dataflow becomes MERGE on the touched keys. */
-  def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    import graft.inmet.{Ingest, Pipeline, Warehouse}
-    val fixtureGlob = graft.operators.InmetQueries.fixtures()
-    val fixtureDir = graft.operators.InmetQueries.fixtureDir
-    val work = java.nio.file.Paths.get(
-      replayCheckpoint("upsert_work"))
+  def streamUpsert(spark: SparkSession, dir: String): DataFrame =
+    upsertDaily(spark, graft.operators.InmetQueries.fixtures(),
+      replayCheckpoint("upsert_work"))(_.processAllAvailable())
+
+  /** `streamUpsert` over the INMET files matching `glob`, with its state
+    * and checkpoint under `work`; `drive` runs the started query (a spec
+    * lands files between its triggers), which is stopped after it. */
+  private[graft] def upsertDaily(spark: SparkSession, glob: String,
+      work: String)(drive: StreamingQuery => Unit): DataFrame = {
+    import graft.inmet.{Pipeline, Warehouse}
     val stateDir = s"$work/state"
     val nBuckets = 8
-    // materialized once — the dim lineage is a full CSV stage parse and
-    // would otherwise re-run inside every micro-batch's broadcast; the
-    // 3-row materialization doesn't need 32 shuffle partitions
-    val dim = withStreamPartitions(spark) {
-      Warehouse
-        .dimCidadeAtributos(Pipeline.stage(spark, fixtureGlob).cidades)
-        .select("wmo", "cidade_sk")
-        .transform(graft.operators.Star.pin)
-    }
-    val keys = Seq("wmo", "cidade_sk", "data_medicao")
-    def partials(df: DataFrame): DataFrame = df
-      .join(broadcast(dim), Seq("wmo"))
-      .groupBy(keys.map(col): _*)
-      .agg(min("temperatura_c").as("temp_min_c"),
-        max("temperatura_c").as("temp_max_c"),
-        sum(Star.cents(col("temperatura_c"))).as("temp_c"),
-        sum(Star.cents(col("precipitacao_mm"))).as("precip_c"),
-        sum(Star.cents(col("pressao_atm_kpa"))).as("pressao_c"),
-        sum(Star.cents(col("vento_mps"))).as("vento_c"),
-        sum(Star.cents(col("umidade_porcentagem"))).as("umid_c"),
-        count(lit(1)).as("n"))
-      .withColumn("__bk", pmod(xxhash64(col("wmo")), lit(nBuckets)))
-    def merge(cur: Option[DataFrame], batch: DataFrame): DataFrame = {
-      val both = cur.fold(batch)(_.unionByName(batch))
-      both.groupBy((keys :+ "__bk").map(col): _*)
-        .agg(min("temp_min_c").as("temp_min_c"),
-          max("temp_max_c").as("temp_max_c"),
-          sum("temp_c").as("temp_c"), sum("precip_c").as("precip_c"),
-          sum("pressao_c").as("pressao_c"), sum("vento_c").as("vento_c"),
-          sum("umid_c").as("umid_c"), sum("n").as("n"))
-    }
+    def bucketed(states: DataFrame): DataFrame =
+      states.withColumn("__bk", pmod(xxhash64(col("wmo")), lit(nBuckets)))
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prevOverwriteMode =
       spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val src = InmetStreaming.previsoesStream(spark, fixtureDir, fixtureGlob)
+    val src = spark.readStream
+      .format(classOf[graft.sources.v2.InmetSource].getName).load(glob)
     try withStreamPartitions(spark) {
       val q = src.writeStream
         .option("checkpointLocation", s"$work/ckpt")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          // one materialization of the batch partials feeds both the
+          // the station dim of every file visible now, the batch's own
+          // included (a few metadata lines per file)
+          val dim = Warehouse.dimCidadeAtributos(Pipeline.stage(spark, glob).cidades)
+          // one materialization of the batch states feeds both the
           // touched-bucket probe and the merge (no double aggregation)
-          val bp = graft.operators.Star.pin(partials(batch))
+          val bp = Star.pin(bucketed(Warehouse.dayState(batch, dim)))
           val touched = bp.select("__bk").distinct()
             .collect().map(_.getLong(0))
-          val cur =
-            if (!fs.exists(new org.apache.hadoop.fs.Path(stateDir))) None
-            else Some(spark.read.parquet(stateDir)
-              .filter(col("__bk").isin(touched: _*)))
+          val both =
+            if (!fs.exists(new org.apache.hadoop.fs.Path(stateDir))) bp
+            else spark.read.parquet(stateDir)
+              .filter(col("__bk").isin(touched: _*))
+              .unionByName(bp)
           // localCheckpoint materializes the merged buckets so the
           // overwrite below does not read from the path it replaces
-          val merged = graft.operators.Star.pin(merge(cur, bp))
+          val merged = Star.pin(
+            bucketed(Warehouse.mergeDayStates(both.drop("__bk"))))
           merged.write.mode("overwrite").partitionBy("__bk")
             .parquet(stateDir)
           merged.unpersist()
@@ -506,23 +491,14 @@ object StreamingQueries {
           ()
         }
         .start()
-      try q.processAllAvailable() finally q.stop()
+      try drive(q) finally q.stop()
     } finally prevOverwriteMode match {
       case Some(v) =>
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None =>
         spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
-    val state = spark.read.parquet(stateDir)
-    def avgD(c: String) = col(c).cast("double") / 100.0 / col("n")
-    state.select(col("wmo"), col("cidade_sk"), col("data_medicao"),
-        col("temp_min_c"), col("temp_max_c"),
-        avgD("temp_c").as("temp_avg_c"),
-        (col("precip_c").cast("double") / 100.0).as("precip_total_mm"),
-        avgD("pressao_c").as("pressao_avg_kpa"),
-        avgD("vento_c").as("vento_avg_mps"),
-        avgD("umid_c").as("umidade_avg_pct"),
-        col("n").as("registros_horarios"))
+    Warehouse.finalizeDay(spark.read.parquet(stateDir))
       .orderBy("wmo", "data_medicao")
   }
 

@@ -2,12 +2,13 @@ package graft.inmet
 
 import graft.SparkSuite
 
-/** The catalog/CTAS path (S8-S10) must land the same results as the
-  * DataFrame pipeline, queryable by name through spark.sql. */
+/** The catalog path (S8-S10) must land the same results as the DataFrame
+  * pipeline, queryable by name through spark.sql. */
 class CatalogSpec extends SparkSuite {
 
-  test("runCatalog: stage saveAsTable + SQL CTAS chain lands queryable tables") {
-    Pipeline.runCatalog(spark, resourcePath("/inmet") + "/*.csv")
+  test("runCatalog: saveAsTable chain equals Pipeline.analytics") {
+    val glob = resourcePath("/inmet") + "/*.csv"
+    Pipeline.runCatalog(spark, glob)
     assert(spark.sql("SELECT count(*) FROM stage.fato_previsoes")
       .collect()(0).getLong(0) === 13032L)
     assert(spark.sql("SELECT count(*) FROM analitic.dim_cidade_atributos")
@@ -21,8 +22,17 @@ class CatalogSpec extends SparkSuite {
         |""".stripMargin).collect()(0)
     assert(approx(kpi.getDouble(0), 24.20322580645162, 1e-9))
     assert(kpi.getLong(1) === 22L)
+    // the three analitic tables are exactly what Pipeline.analytics computes
+    val an = Pipeline.analytics(Pipeline.stage(spark, glob))
+    Seq("analitic.dim_cidade_atributos" -> an.dimCidadeAtributos,
+      "analitic.fato_agg_previsoes_dia" -> an.fatoAggPrevisoesDia,
+      "analitic.cidade_kpis_mensal" -> an.cidadeKpisMensal).foreach {
+      case (table, df) =>
+        assert(spark.table(table).schema.fieldNames === df.schema.fieldNames, table)
+        assert(exactMultiset(spark.table(table)) === exactMultiset(df), table)
+    }
     // re-run is idempotent (CREATE OR REPLACE semantics)
-    Pipeline.runCatalog(spark, resourcePath("/inmet") + "/*.csv")
+    Pipeline.runCatalog(spark, glob)
     assert(spark.sql("SELECT count(*) FROM analitic.cidade_kpis_mensal")
       .collect()(0).getLong(0) === 18L)
   }

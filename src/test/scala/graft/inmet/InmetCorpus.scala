@@ -7,7 +7,8 @@ import java.nio.file.{Files, Paths}
   * where the DSv2 reader and Ingest's plan could disagree: invalid
   * calendar days, padded and malformed numerals, a missing measure
   * column, no station code, two different headers, CRLF and a BOM,
-  * metadata after the header, and a file without metadata. */
+  * metadata after the header, a file without metadata, and numerals
+  * whose cents overflow a long. */
 object InmetCorpus {
 
   private def fixture(dir: String, name: String): Seq[String] =
@@ -82,11 +83,14 @@ object InmetCorpus {
       (meta("P006").tail ++ Seq(dayFirstHeader,
         row("01/03/2024", "0", "17", trailing = false))), eol = "\r\n")
     // station code after the header, a data line before it, duplicate
-    // and oddly spaced keys: first one wins, values after the last `:;`
+    // and oddly spaced keys: first one wins, values after the last `:;`;
+    // 20-digit numerals, finite doubles whose cents overflow a long
     write("late_meta.csv", Seq(row("2024/03/05", "3", "23"),
       "REGIAO:;SE", " uf :;\tMG ", "UF:;XX", "ESTACAO:;A:;B",
       "LATITUDE:;-18,9", "DATA DE FUNDACAO:;01/01/2020", isoHeader,
-      row("2024/03/06", "4", "24"), "CODIGO (WMO):;P007",
+      row("2024/03/06", "4", "24"),
+      row("2024/03/06", "98765432109876543210", "12345678901234567890"),
+      "CODIGO (WMO):;P007",
       "CODIGO (WMO):;P999"))
     // no metadata line at all: no station, and no hourly rows
     write("no_meta.csv", Seq(isoHeader, row("2024/03/07", "0", "19")))

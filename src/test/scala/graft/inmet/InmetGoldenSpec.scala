@@ -2,7 +2,6 @@ package graft.inmet
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
 
 /** Golden end-to-end pipeline test on the three real INMET fixture files
   * (see FIXTURES.md). Expected values computed independently from the raw
@@ -89,20 +88,5 @@ class InmetGoldenSpec extends SparkSuite {
     assert(approx(r.getAs[Double]("mensal_temp_media"), 24.20322580645162, 1e-9))
     assert(r.getAs[Long]("dias_com_precip") === 22L)
     assert(approx(r.getAs[Double]("mensal_precip_total"), 199.0, 1e-9))
-  }
-
-  test("spark.sql chain produces identical results to the DataFrame plans") {
-    val (dimSql, fatoSql, kpiSql) =
-      Warehouse.runSqlChain(spark, st.previsoes, st.cidades, st.datas)
-    def key(r: Row): String = r.toSeq.map {
-      case d: Double => f"$d%.9f"
-      case x => String.valueOf(x)
-    }.mkString("|")
-    assert(dimSql.collect().map(key).sorted.toSeq ===
-      an.dimCidadeAtributos.collect().map(key).sorted.toSeq)
-    assert(fatoSql.collect().map(key).sorted.toSeq ===
-      an.fatoAggPrevisoesDia.collect().map(key).sorted.toSeq)
-    assert(kpiSql.collect().map(key).sorted.toSeq ===
-      an.cidadeKpisMensal.collect().map(key).sorted.toSeq)
   }
 }

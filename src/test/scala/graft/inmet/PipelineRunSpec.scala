@@ -1,25 +1,16 @@
 package graft.inmet
 
 import graft.SparkSuite
-import java.math.MathContext
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
 
 /** Pipeline.run overlaps its branches and holds the small dimensions on
   * the driver; what it writes must still be what Pipeline.stage and
   * Pipeline.analytics compute, and a failing branch must leave no job or
   * thread of the run behind. */
 class PipelineRunSpec extends SparkSuite {
-
-  /** Rows as a multiset; doubles to 12 significant digits, because a sum
-    * over the written tables may add the same doubles in another order. */
-  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
-    df.collect().toSeq.map(_.toSeq.map {
-      case d: Double => BigDecimal(d).round(new MathContext(12))
-      case v => v
-    }).groupBy(identity).view.mapValues(_.size).toMap
 
   private def parquetFiles(dir: Path): Int =
     dir.toFile.list().count(_.endsWith(".parquet"))
@@ -40,7 +31,7 @@ class PipelineRunSpec extends SparkSuite {
     want.foreach { case (dir, df) =>
       val written = spark.read.parquet(dir.toString)
       assert(written.schema.fieldNames === df.schema.fieldNames, dir)
-      assert(multiset(written) === multiset(df), dir)
+      assert(exactMultiset(written) === exactMultiset(df), dir)
     }
     Seq(stageDir.resolve("cidades"), stageDir.resolve("datas"),
       analyticDir.resolve("dim_cidade_atributos"))
@@ -53,6 +44,69 @@ class PipelineRunSpec extends SparkSuite {
 
   test("run writes what stage + analytics compute: adversarial corpus") {
     checkRun(InmetCorpus.adversarial(resourcePath("/inmet")))
+  }
+
+  test("fato and KPIs are bit-identical over reversed, repartitioned previsoes") {
+    val st = Pipeline.stage(spark, resourcePath("/inmet") + "/*.csv")
+    val an = Pipeline.analytics(st)
+    val reversed = st.previsoes
+      .withColumn("__i", monotonically_increasing_id())
+      .orderBy(col("__i").desc).drop("__i")
+      .repartition(7)
+    val fato = Warehouse.fatoAggPrevisoesDia(reversed, an.dimCidadeAtributos)
+    assert(exactMultiset(fato) === exactMultiset(an.fatoAggPrevisoesDia))
+    assert(exactMultiset(Warehouse.cidadeKpisMensal(fato, an.dimCidadeAtributos,
+      st.datas)) === exactMultiset(an.cidadeKpisMensal))
+  }
+
+  test("merged states of a split previsoes equal the states of the whole") {
+    val st = Pipeline.stage(spark, resourcePath("/inmet") + "/*.csv")
+    val an = Pipeline.analytics(st)
+    val dim = an.dimCidadeAtributos
+    // every third row apart: nearly every station-day is in both halves
+    val rows = st.previsoes.withColumn("__i", monotonically_increasing_id())
+    def part(keep: org.apache.spark.sql.Column) =
+      Warehouse.dayState(rows.filter(keep).drop("__i"), dim)
+    val merged = Warehouse.mergeDayStates(
+      part(col("__i") % 3 === 0).unionByName(part(col("__i") % 3 =!= 0)))
+    assert(exactMultiset(Warehouse.finalizeDay(merged)) ===
+      exactMultiset(an.fatoAggPrevisoesDia))
+  }
+
+  test("a reading whose cents overflow a long finalizes its day's measure to null") {
+    val st = Pipeline.stage(spark,
+      InmetCorpus.adversarial(resourcePath("/inmet")))
+    val an = Pipeline.analytics(st)
+    val day = an.fatoAggPrevisoesDia.filter(col("wmo") === "P007" &&
+      col("data_medicao") === "2024-03-06").collect()
+    assert(day.length === 1)
+    val r = day.head
+    // temperature and precipitation: 24 and 4, and 20-digit numerals
+    assert(r.getAs[Double]("temp_min_c") === 24.0)
+    assert(r.getAs[Double]("temp_max_c") === 12345678901234567890.0)
+    assert(r.isNullAt(r.fieldIndex("temp_avg_c")))
+    assert(r.isNullAt(r.fieldIndex("precip_total_mm")))
+    // the other measures stay exact
+    assert(r.getAs[Double]("pressao_avg_kpa") === 915.6)
+    assert(r.getAs[Double]("umidade_avg_pct") === 87.0)
+    assert(r.getAs[Double]("vento_avg_mps") === 2.1)
+    assert(r.getAs[Long]("registros_horarios") === 2L)
+    // the month skips the null day, as AVG and SUM over the fato do: only
+    // 2024-03-05 (23 degC, 3 mm) counts
+    val kpi = an.cidadeKpisMensal.filter(col("cidade_sk").startsWith("P007"))
+      .collect()
+    assert(kpi.length === 1)
+    assert(kpi.head.getAs[Double]("mensal_temp_media") === 23.0)
+    assert(kpi.head.getAs[Double]("mensal_temp_max") === 12345678901234567890.0)
+    assert(kpi.head.getAs[Double]("mensal_precip_total") === 3.0)
+    assert(kpi.head.getAs[Long]("dias_com_precip") === 1L)
+    // a month of null days only is null, not a division by zero
+    val nullMonth = Warehouse.cidadeKpisMensal(
+      an.fatoAggPrevisoesDia.filter(col("temp_avg_c").isNull),
+      an.dimCidadeAtributos, st.datas).collect()
+    assert(nullMonth.length === 1)
+    Seq("mensal_temp_media", "mensal_precip_total")
+      .foreach(c => assert(nullMonth.head.isNullAt(nullMonth.head.fieldIndex(c)), c))
   }
 
   test("a failing branch fails run, which leaves no job or branch thread behind") {
