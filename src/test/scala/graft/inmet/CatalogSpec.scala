@@ -6,7 +6,7 @@ import graft.SparkSuite
   * pipeline, queryable by name through spark.sql. */
 class CatalogSpec extends SparkSuite {
 
-  test("runCatalog: saveAsTable chain equals Pipeline.analytics") {
+  test("runCatalog: stage saveAsTable + SQL CTAS chain lands queryable tables") {
     val glob = resourcePath("/inmet") + "/*.csv"
     Pipeline.runCatalog(spark, glob)
     assert(spark.sql("SELECT count(*) FROM stage.fato_previsoes")

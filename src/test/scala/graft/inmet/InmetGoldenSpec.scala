@@ -89,4 +89,24 @@ class InmetGoldenSpec extends SparkSuite {
     assert(r.getAs[Long]("dias_com_precip") === 22L)
     assert(approx(r.getAs[Double]("mensal_precip_total"), 199.0, 1e-9))
   }
+
+  test("spark.sql chain produces identical results to the DataFrame plans") {
+    // the analytic plans over stage tables resolved by name through
+    // spark.sql (the relations runCatalog hands them) equal the plans over
+    // the stage DataFrames, bit for bit
+    st.cidades.createOrReplaceTempView("golden_cidades")
+    st.previsoes.createOrReplaceTempView("golden_previsoes")
+    st.datas.createOrReplaceTempView("golden_datas")
+    val viaSql = Pipeline.analytics(Pipeline.Stage(
+      cidades = spark.sql("SELECT * FROM golden_cidades"),
+      previsoes = spark.sql("SELECT * FROM golden_previsoes"),
+      datas = spark.sql("SELECT * FROM golden_datas")))
+    Seq(viaSql.dimCidadeAtributos -> an.dimCidadeAtributos,
+      viaSql.fatoAggPrevisoesDia -> an.fatoAggPrevisoesDia,
+      viaSql.cidadeKpisMensal -> an.cidadeKpisMensal).foreach {
+      case (sqlDf, df) =>
+        assert(sqlDf.schema.fieldNames === df.schema.fieldNames)
+        assert(exactMultiset(sqlDf) === exactMultiset(df))
+    }
+  }
 }
