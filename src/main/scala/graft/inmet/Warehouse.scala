@@ -41,14 +41,26 @@ import org.apache.spark.sql.functions._
 object Warehouse {
 
   /** Surrogate-keyed station dimension
-    * (create_dim_cidade_atributos.sql:5-22). */
+    * (create_dim_cidade_atributos.sql:5-22), one row per `wmo`. INMET
+    * publishes one file per station per year, so a multi-year load has a
+    * `cidades` row per file for the same station; the reference keeps
+    * them all, and its fato join then counts every hourly row once per
+    * file. Here the station's records collapse to one: the greatest of
+    * them, compared as a struct of the columns below in that order, a
+    * choice that does not depend on file order or partitioning. A
+    * station table is small (a row per station file), so it is reduced
+    * in one partition, with no shuffle. */
   def dimCidadeAtributos(cidades: DataFrame): DataFrame = {
     def part(c: String) = trim(upper(coalesce(col(c), lit(""))))
-    cidades.select(
-      concat(part("wmo"), lit("-"), part("uf"), lit("-"), part("estacao"))
-        .as("cidade_sk"),
-      col("wmo"), col("uf"), col("estacao"), col("regiao"),
-      col("latitude"), col("longitude"), col("altitude"), col("data_fundacao"))
+    val attrs = Seq("uf", "estacao", "regiao", "latitude", "longitude",
+      "altitude", "data_fundacao")
+    cidades.coalesce(1).groupBy("wmo")
+      .agg(max(struct(attrs.map(col): _*)).as("r"))
+      .select(col("wmo") +: attrs.map(a => col(s"r.$a").as(a)): _*)
+      .select(
+        concat(part("wmo"), lit("-"), part("uf"), lit("-"), part("estacao"))
+          .as("cidade_sk") +:
+        (col("wmo") +: attrs.map(col)): _*)
   }
 
   /** The station-day key. */

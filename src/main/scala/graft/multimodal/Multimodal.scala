@@ -459,11 +459,11 @@ object Multimodal {
     * the stream wins, none → loud failure. Hoisted per PARTITION (r16,
     * guide §1.2 per-task work): `AudioSystem.getAudioInputStream` runs
     * every call through `JDK13Services.getProviders`, a class-global
-    * SYNCHRONIZED ServiceLoader re-scan — measured by AudioLockProbe at
-    * ~79 µs/clip single-threaded AND zero parallel speedup (8 threads ×
-    * 2000 clips: 1.47 s, the registry lock serializes all cores); the
-    * hoisted reader decodes the same clips at 6.5 µs/clip and scales
-    * (8×2000 in 0.021 s). The reader instance is stateless — every call
+    * SYNCHRONIZED ServiceLoader re-scan — measured (OPTIMIZATION_r16.md
+    * item 9) at ~79 µs/clip single-threaded AND zero parallel speedup
+    * (8 threads × 2000 clips: 1.47 s, the registry lock serializes all
+    * cores); the hoisted reader decodes the same clips at 6.5 µs/clip
+    * and scales (8×2000 in 0.021 s). The reader instance is stateless — every call
     * parses only its argument stream — so per-partition reuse is safe. */
   private[multimodal] def resolveAudioReader(
       probe: Array[Byte]): javax.sound.sampled.spi.AudioFileReader = {

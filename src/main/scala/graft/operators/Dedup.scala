@@ -890,7 +890,7 @@ object Dedup {
       labelSum)
   }
 
-  /** Small-graph components gate (r16 optimization): near-dup edge sets
+  /* Small-graph components gate (r16 optimization): near-dup edge sets
     * are O(duplicate pairs), and at harness scale they are a few hundred
     * rows — yet every CC consumer paid 4–6 iterative rounds of
     * join+groupBy+materialize jobs (~0.1 s of pure scheduling each) to
@@ -902,15 +902,13 @@ object Dedup {
     * graph is under the gate the components are resolved by a driver
     * union-find over the collected pairs — one job total instead of one
     * per round. Bounded by construction: the collect happens only under
-    * the gate (default 2^16 edges ≈ 1 MB of longs; conf-overridable),
-    * and the min-id-per-component labels are EXACTLY the iterative
-    * fixpoint, so results are identical on either path (pinned by
+    * the gate (default 2^16 edges ≈ 1 MB of longs), and the
+    * min-id-per-component labels are EXACTLY the iterative fixpoint, so
+    * results are identical on either path (pinned by
     * CcEquivalenceSpec against the forced-distributed form). Above the
     * gate the existing distributed loop runs unchanged — at 100 TB dup
-    * rates the dispatch always takes that branch. */
-  private def ccCollectGate(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.cc.collectThreshold")
-      .map(_.toLong).getOrElse(1L << 16)
+    * rates the dispatch always takes that branch. The gate is
+    * `Star.collectGate`. */
 
   /** Driver union-find over a bounded edge array: every endpoint labeled
     * with the min id reachable from it — the same (doc_id, cluster_id)
@@ -969,7 +967,7 @@ object Dedup {
     // MEMORY_AND_DISK — see materializeRound (r17 spill-safety sweep)
     val rdd = edges.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = rdd.count() // materializes the (expensive) edge lineage once
-    if (n <= ccCollectGate(spark)) {
+    if (n <= Star.collectGate(spark)) {
       val arr = rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
       rdd.unpersist(blocking = false)
       Left(smallComponents(spark, arr))
@@ -1420,32 +1418,6 @@ object Dedup {
     val newBands = bandRows(withMinhashBands(shingleRows(docs.filter(isNew))))
     val dropIds =
       bandProbeDropIds(docs, Seq(index, newBands), newBands)
-    docs.filter(isNew)
-      .join(dropIds.withColumn("__d", lit(1)), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"), col("source"),
-        when(col("__d").isNotNull, lit("drop")).otherwise(lit("keep"))
-          .as("verdict"))
-      .orderBy("doc_id")
-  }
-
-  /** Probe seam (BASELINE fixed-shard campaign, r11 verdict item 5):
-    * [[dedupIncremental]] with the arriving shard TRUNCATED to
-    * doc_id < cap — a constant-size arrival batch at any corpus scale,
-    * so the measured exponent isolates the serve chain from the
-    * fixture's shard-grows-with-corpus design. The persisted index is
-    * the registered "mhband" snapshot, untouched. */
-  private[graft] def dedupIncrementalFixedShard(
-      spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    val docs = Star.table(spark, dir, "documents")
-    val index = graft.sources.IndexStore.cachedBucketTable(
-      spark, dir, "documents", "mhband", 8,
-      Seq("band_id", "h"), Seq("band_id", "h")) {
-      bandRows(withMinhashBands(shingleRows(
-        docs.filter(!(col("doc_id") % 10 === 0)))))
-    }
-    val isNew = col("doc_id") % 10 === 0 && col("doc_id") < cap
-    val newBands = bandRows(withMinhashBands(shingleRows(docs.filter(isNew))))
-    val dropIds = bandProbeDropIds(docs, Seq(index, newBands), newBands)
     docs.filter(isNew)
       .join(dropIds.withColumn("__d", lit(1)), Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"), col("source"),
@@ -2062,26 +2034,11 @@ object Dedup {
     * batch twin — same tombstone set, same probes): retract-by-
     * tombstone and retract-by-rewrite are the SAME logical operation
     * at two maintenance stages, so they share the oracle verbatim. */
-  def dedupIndexRewrite(spark: SparkSession, dir: String): DataFrame =
-    dedupIndexRewriteOf(spark, dir, lit(true))
-
-  /** Probe seam (r14 verdict item 6): the rewrite-served dedup chain at
-    * a FIXED arrival (doc_id < cap within the modeled-new slice) — the
-    * rewrite amortizes build-once; this isolates the serve exponent
-    * against the rewritten generation. */
-  private[graft] def dedupIndexRewriteFixedShard(
-      spark: SparkSession, dir: String, cap: Long): DataFrame =
-    dedupIndexRewriteOf(spark, dir, col("doc_id") < cap)
-
-  private def dedupIndexRewriteOf(spark: SparkSession, dir: String,
-      shardExtra: Column): DataFrame = {
+  def dedupIndexRewrite(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.IndexStore
     val docs = Star.table(spark, dir, "documents")
-    // the ARRIVAL is the %10 == 0 slice (shardExtra caps it for the
-    // fixed-shard probe); base/segment/rewrite content is arrival-
-    // independent — the snapshot identity must not depend on which
-    // serve form touched it first
-    val isNew = col("doc_id") % 10 === 0 && shardExtra
+    // the ARRIVAL is the %10 == 0 slice
+    val isNew = col("doc_id") % 10 === 0
     // own snapshot identity: mhband's lane receives arrival segments
     // from the compaction query, which would make the rewrite's folded
     // content depend on query execution order

@@ -90,8 +90,7 @@ object Graph {
     // truncating division equals the plan's IntegralDivide) — instead of
     // 5 × (join + aggregate + left join) jobs over 25-row frames. Above
     // the gate the distributed loop below runs unchanged.
-    val gate = spark.conf.getOption("spark.graft.graph.collectThreshold")
-      .map(_.toLong).getOrElse(1L << 16)
+    val gate = Star.collectGate(spark)
     val nodesHead =
       if (nEdges <= gate) nodesDf.take(math.min(gate, Int.MaxValue.toLong).toInt)
       else null

@@ -1393,16 +1393,19 @@ object Similarity {
     math.max(8L, math.sqrt(n.toDouble).toLong).toInt
 
   /** The IVF family's trainer: corpus-size-driven nlist over a pinned
-    * vector relation (the count is one job over the checkpointed leaf),
-    * 2 Lloyd rounds — a coarse quantizer needs a stable partition, not
-    * convergence. */
-  private def ivfTrained(vecs: DataFrame): (DataFrame, DataFrame) =
-    exactKmeans(vecs, nlistFor(vecs.count()), 2)
+    * vector relation (the count is one job over the checkpointed leaf,
+    * and the trainer's driver gate reuses it), 2 Lloyd rounds — a
+    * coarse quantizer needs a stable partition, not convergence. */
+  private[graft] def ivfTrained(vecs: DataFrame): (DataFrame, DataFrame) = {
+    val nRows = vecs.count()
+    exactKmeans(vecs, nRows, nlistFor(nRows), 2)
+  }
 
   /** Exact-integer Lloyd iterations (see [[kmeans]] for the full scale
-    * doctrine): returns (centroids (cid, carr), assignment (vec_id, cid))
-    * after `iters` rounds from the deterministic vec_id < k seed. */
-  private def exactKmeans(vecs: DataFrame, k: Int, iters: Int)
+    * doctrine) over `vecs`, whose row count is `nRows`: returns (centroids
+    * (cid, carr), assignment (vec_id, cid)) after `iters` rounds from
+    * the deterministic vec_id < k seed. */
+  private def exactKmeans(vecs: DataFrame, nRows: Long, k: Int, iters: Int)
       : (DataFrame, DataFrame) = {
     val spark = vecs.sparkSession
     import spark.implicits._
@@ -1420,11 +1423,9 @@ object Similarity {
     // out like groupBy drops empty groups — spec-pinned equal against
     // the forced-distributed path (R17DispatchSpec). Above the gate
     // (default 2^16 vectors) the distributed loop below is unchanged —
-    // at 100 TB the dispatch always takes that branch.
-    val collectGate = spark.conf
-      .getOption("spark.graft.kmeans.collectThreshold")
-      .map(_.toLong).getOrElse(1L << 16)
-    if (vecs.count() <= collectGate) {
+    // at 100 TB the dispatch always takes that branch. The gate is
+    // Star.collectGate.
+    if (nRows <= Star.collectGate(spark)) {
       val arr = vecs.select(col("vec_id"), col("varr")).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
       def dist(a: Array[Long], b: Array[Long]): Long = {
@@ -1544,7 +1545,7 @@ object Similarity {
 
   def kmeans(spark: SparkSession, dir: String): DataFrame = {
     val vecs = quantVecs(spark, dir)
-    val (cent, assign) = exactKmeans(vecs, 8, 3)
+    val (cent, assign) = exactKmeans(vecs, vecs.count(), 8, 3)
     val members = assign.groupBy("cid").agg(count(lit(1)).as("n_members"))
     val norms = cent.select(col("cid"),
       expr("aggregate(transform(carr, c -> c * c), CAST(0 AS BIGINT), " +
@@ -1692,12 +1693,13 @@ object Similarity {
     * bucket-skew factor, and at population ~15 the verify join shuffled
     * ~90 M candidate rows each carrying a 512-byte vector — 20.2×
     * time for 10× data (e100 1.30). At the cap geometry the same corpus
-    * measures 15.6 M candidate mass (EmbBandProbe). Band count is FIXED
-    * at 16: recall for the verdict-deciding ~0.9999-cosine re-crawl
-    * pairs is 1-(1-p^bits)^16 with p ≈ 0.999 — ≥ 1-1e-29 even at a
-    * 16-bit key, so growing bits never costs a pair (borderline
-    * 0.9-cosine pairs would need more BANDS, not fewer bits — the
-    * family's dup model is re-crawl-grade, where bits are free).
+    * measures 15.6 M candidate mass (BASELINE.md, round-10 case study
+    * 3). Band count is FIXED at 16: recall for the verdict-deciding
+    * ~0.9999-cosine re-crawl pairs is 1-(1-p^bits)^16 with p ≈ 0.999 —
+    * ≥ 1-1e-29 even at a 16-bit key, so growing bits never costs a
+    * pair (borderline 0.9-cosine pairs would need more BANDS, not fewer
+    * bits — the family's dup model is re-crawl-grade, where bits are
+    * free).
     *
     * The clamp was 16 through round 10; the round-11 ×1000 probe (2 M
     * vectors) showed a saturated 16-bit key space at 1.56 B candidate
@@ -1856,7 +1858,7 @@ object Similarity {
     val tbl = graft.sources.IndexStore.cachedTable(
       spark, dir, "embeddings", "embresidmodel1") {
       val vecs = quantVecs(spark, dir)
-      val (cent, _) = exactKmeans(vecs, 16, 2)
+      val (cent, _) = exactKmeans(vecs, vecs.count(), 16, 2)
       val seq = cent.collect().sortBy(_.getInt(0))
         .map(_.getSeq[Long](1).toSeq).toSeq
       val minD = array_min(org.apache.spark.sql.functions.transform(
@@ -1877,11 +1879,6 @@ object Similarity {
     centCache.put(dir, (tag, model))
     model
   }
-
-  /** Test seam: drop the in-JVM model memo so a spec can prove the
-    * PERSISTED model alone (empty catalog + cleared memo = a fresh
-    * serving process) reproduces banding without retraining. */
-  private[graft] def resetResidualMemo(): Unit = centCache.clear()
 
   /** CELL-RESIDUAL hyperplane banding — the corpus-size-driven DEFAULT
     * since round 11. On clustered corpora (every real embedding corpus),
@@ -1982,8 +1979,8 @@ object Similarity {
     semanticCandPlan(index, shardBands)
   }
 
-  /** Probe seam: the serve chain's (index bands, shard bands) pair, for
-    * bucket-population diagnostics (graft.tools.SemCandProbe). */
+  /** Test seam: the serve chain's (index bands, shard bands) pair, for
+    * bucket-population checks. */
   private[graft] def semanticServeBands(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (_, _, index, shardBands) = semanticServeParts(spark, dir)
@@ -2001,48 +1998,10 @@ object Similarity {
     * MEMORY_ONLY RDD blocks behind even if the result is never
     * evaluated. Callers release them between queries
     * (`spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist)`
-    * — the winnowPairs contract; Bench, Verify, and the probe tools all
-    * do). */
+    * — the winnowPairs contract; Bench and Verify do). */
   def semanticDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val (base, shard, index, shardBands) = semanticServeParts(spark, dir)
     semanticIncrementalChain(base, shard, index, shardBands)
-  }
-
-  /** Probe seam (BASELINE fixed-shard campaign, r11 verdict item 5):
-    * the incremental serve chain with an arriving shard of FIXED size —
-    * derived exactly like [[semanticServePartsAt]]'s but from source
-    * vec_id < cap only, so the arrival batch holds the same few hundred
-    * vectors at ANY corpus scale. The registered fixture's shard is 10 %
-    * OF the corpus (grows 10× per decade), which folds fixture growth
-    * into the measured serve exponent; this seam isolates the CHAIN
-    * (persisted-index probe + verify). Index, banding model, and base
-    * corpus are the registered snapshots — nothing rebuilds. */
-  private[graft] def semanticDedupIncrementalFixedShard(
-      spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    val (base, _, index, _) = semanticServeParts(spark, dir)
-    val (planes, bands) = defaultGeometry(spark, dir)
-    val shard = fixedSemanticShard(base, cap)
-    semanticIncrementalChain(base, shard, index,
-      semanticResidualBandsOf(spark, dir, shard, planes, bands))
-  }
-
-  /** The fixed-size arrival shard shared by the semantic fixed-shard
-    * probe seams: [[semanticServePartsAt]]'s derivation restricted to
-    * source vec_id < cap, so the batch holds the same few hundred
-    * vectors at ANY corpus scale. */
-  private def fixedSemanticShard(base: DataFrame, cap: Long): DataFrame = {
-    val src = base.filter(col("vec_id") < cap)
-    val rearrivals = src.filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id").as("o"), col("v"))
-      .select((col("o") + 1000000L).as("vec_id"),
-        expr("transform(v, (x, j) -> x * (1.0D + " +
-          "CAST((o * 7 + j * 13) % 11 - 5 AS DOUBLE) / 1000.0D))").as("v"))
-    val fresh = src.filter(col("vec_id") % 7 === 3)
-      .select(col("vec_id").as("o"), col("v"))
-      .select((col("o") + 2000000L).as("vec_id"),
-        expr("transform(v, (x, j) -> x * " +
-          "(CAST((o * 11 + j * 17) % 21 - 10 AS DOUBLE) / 10.0D))").as("v"))
-    rearrivals.unionByName(fresh)
   }
 
   /** [[semanticDedupIncremental]] with an ABSOLUTE band-bucket CAP (64)
@@ -2296,24 +2255,6 @@ object Similarity {
     (served, idxPop)
   }
 
-  /** Probe seam (r12 verdict item 6): the capped serve through the
-    * APPEND LANE with a FIXED-size arrival shard — isolates the append
-    * lane's population-delta maintenance (companion counts + applied
-    * markers) from fixture shard growth, the same split
-    * [[semanticDedupIncrementalFixedShard]] makes for the base chain.
-    * Same snapshot family, lanes, and cap as the registered query. */
-  private[graft] def semanticDedupCappedAppendFixedShard(
-      spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    val (planes, bands) = defaultGeometry(spark, dir)
-    val base = Star.table(spark, dir, "embeddings")
-      .select(col("vec_id"), asDouble("embedding").as("v"))
-    val shard = fixedSemanticShard(base, cap)
-    val sb = pinnedLeaf(spark,
-      semanticResidualBandsOf(spark, dir, shard, planes, bands))
-    val (served, idxPop) = cappedAppendParts(spark, dir, base, sb)
-    cappedChain(spark, base, shard, served, sb, idxPop)
-  }
-
   /** [[semanticDedupIncremental]] PINNED at the 16-band × 16-bit cap
     * geometry (256 planes, 2^16 buckets per band) — the sizing-doctrine
     * ceiling [[bandBitsFor]] reaches at n ≈ 1 M vectors. Since round 10
@@ -2353,9 +2294,9 @@ object Similarity {
     // re-encodes every row through the Row converter both ways (the
     // bandProbeDropIds lesson); the checkpoint stores compact
     // InternalRows and keeps the plan's size stats, so downstream join
-    // planning is unchanged. SemBreakProbe split the incremental serve
-    // 0.62 s construction / 0.99 s execution before the switch — the
-    // pin job was ~40 % of the query.
+    // planning is unchanged. Before the switch the incremental serve
+    // split 0.62 s construction / 0.99 s execution — the pin job was
+    // ~40 % of the query (OPTIMIZATION_r16.md item 11).
     val shardBands = Star.pin(shardBands0)
     // the index joins the probe DIRECTLY (a pre-join union would force
     // the bucketed index rows through a shuffle); intra-shard pairs come
@@ -2537,29 +2478,6 @@ object Similarity {
     cappedChain(spark, liveBase, shard, live, sb, netPop)
   }
 
-  /** Probe seam (r13 verdict item 6): [[semanticDedupCappedRetract]]
-    * with a FIXED-size arrival shard — isolates the tombstone-netting
-    * legs' cost from fixture shard growth. The netting rides the same
-    * post-join sum as every other population leg, restricted to the
-    * arrival's touched buckets, so its per-serve cost must track the
-    * policy-bounded tombstone list and the shard — never the corpus. */
-  private[graft] def semanticDedupCappedRetractFixedShard(
-      spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    val (base, _, index, _) = semanticServeParts(spark, dir)
-    val (planes, bands) = defaultGeometry(spark, dir)
-    val shard = fixedSemanticShard(base, cap)
-    val sb = pinnedLeaf(spark,
-      semanticResidualBandsOf(spark, dir, shard, planes, bands))
-    val tombIds = base.filter(col("vec_id") % 10 === 0).select("vec_id")
-    val live = index.join(tombIds, Seq("vec_id"), "left_anti")
-    val liveBase = base.join(tombIds, Seq("vec_id"), "left_anti")
-    val idxPop = cappedPopRaw(spark, dir,
-      semanticIndexName(planes, bands), sb)(index)
-    val netPop = netPopulationRows(idxPop,
-      index.join(tombIds, Seq("vec_id"), "left_semi"), sb)
-    cappedChain(spark, liveBase, shard, live, sb, netPop)
-  }
-
   /** Semantic index MAJOR REWRITE — the vector-space twin of
     * [[graft.operators.Dedup.dedupIndexRewrite]], closing the deferred
     * half of [[semanticDedupRetract]]'s contract: the tombstoned
@@ -2589,9 +2507,8 @@ object Similarity {
   }
 
   /** The maintenance half of [[semanticDedupRewrite]] (build → lockstep
-    * append → major rewrite → promoted generation), shared with the
-    * fixed-shard probe seam so both serve the SAME rewritten snapshot.
-    * Build-once per corpus; returns the serving generation's table. */
+    * append → major rewrite → promoted generation). Build-once per
+    * corpus; returns the serving generation's table. */
   private def semanticRewriteServingIndex(spark: SparkSession,
       dir: String): DataFrame = {
     import graft.sources.IndexStore
@@ -2621,22 +2538,6 @@ object Similarity {
     }
     IndexStore.openTable(spark, dir, "embeddings",
       IndexStore.servingName(dir, "embeddings", name))
-  }
-
-  /** Probe seam (r14 verdict item 6): the rewrite-served semantic chain
-    * at a FIXED arrival — the rewrite itself amortizes (build-once per
-    * corpus; its one-time cost is priced separately), and this isolates
-    * the serve exponent against the REWRITTEN generation the way the
-    * incremental seam does against the bootstrap snapshot. */
-  private[graft] def semanticDedupRewriteFixedShard(
-      spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    val live = semanticRewriteServingIndex(spark, dir)
-    val (planes, bands) = defaultGeometry(spark, dir)
-    val base = Star.table(spark, dir, "embeddings")
-      .select(col("vec_id"), asDouble("embedding").as("v"))
-    val shard = fixedSemanticShard(base, cap)
-    semanticIncrementalChain(base, shard, live,
-      semanticResidualBandsOf(spark, dir, shard, planes, bands))
   }
 
   /** Oracle: the incremental twin on the REDUCED corpus — retracted base

@@ -135,6 +135,15 @@ object Star {
       p
     } else df.localCheckpoint(true)
 
+  /** The one driver-collect gate of the small-input dispatches (CC
+    * union-find, PageRank, the k-means trainer): at or under this many
+    * rows the input is collected and finished on the driver, above it
+    * the distributed loop runs. `spark.graft.collectThreshold`, default
+    * 2^16 rows; set it to 0 to force every distributed branch. */
+  def collectGate(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.collectThreshold")
+      .map(_.toLong).getOrElse(1L << 16)
+
   /** `events` has shipped as both parquet TIMESTAMP(NANOS) (which Spark's
     * vectorized reader rejects — read as long nanos, truncate to micros,
     * matching DuckDB) and TIMESTAMP(MICROS) (reads directly as a

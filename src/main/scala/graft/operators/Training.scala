@@ -548,7 +548,7 @@ object Training {
     contaminationServeOf(spark, dir, col("bucket") >= 90,
       FamilyDistributed)
 
-  /** Probe seam: the distributed serve at a capped arrival, with the
+  /** Test seam: the distributed serve at a capped arrival, with the
     * per-task resident-bytes accumulator wired out. */
   private[graft] def contaminationDistributedFixedShard(
       spark: SparkSession, dir: String, cap: Long,
@@ -558,7 +558,7 @@ object Training {
       col("bucket") >= 90 && col("doc_id") < cap, FamilyDistributed,
       residentAcc)
 
-  /** Probe seam (BASELINE fixed-shard campaign, r11 verdict item 5):
+  /** Test seam (BASELINE fixed-shard campaign, r11 verdict item 5):
     * [[contaminationServe]] with the arriving eval shard TRUNCATED to
     * doc_id < cap — constant-size arrival at any corpus scale, isolating
     * the persisted-n-gram-index probe cost from the fixture's
@@ -567,14 +567,6 @@ object Training {
       spark: SparkSession, dir: String, cap: Long): DataFrame =
     contaminationServeOf(spark, dir,
       col("bucket") >= 90 && col("doc_id") < cap, FamilyWhole)
-
-  /** [[contaminationServeFixedShard]] at ROUTED residency — the probe
-    * pair that prices arrival-sized family loading against the whole-
-    * family form at ×100/×1000 (and records loaded vs total bytes). */
-  private[graft] def contaminationServeRoutedFixedShard(
-      spark: SparkSession, dir: String, cap: Long): DataFrame =
-    contaminationServeOf(spark, dir,
-      col("bucket") >= 90 && col("doc_id") < cap, FamilyRouted)
 
   /** The persisted benchmark n-gram index (bucketed on the shingle
     * hash) — one build shared by every contamination serve form. */
@@ -589,9 +581,7 @@ object Training {
   }
 
   /** The contamination index's bucketed snapshot + its sharded bloom
-    * family, ALL shards loaded (shared by the serve chain and the probe
-    * tooling — the FixedShardProbe fpp measurement must probe the very
-    * family the serve uses). */
+    * family, ALL shards loaded — the very family the serve uses. */
   private[graft] def contamIndexAndBloom(spark: SparkSession, dir: String)
       : (DataFrame, graft.functions.BloomFamily) = {
     val index = contamIndex(spark, dir)
@@ -717,51 +707,6 @@ object Training {
     contamAssemble(contamTotalsOf(spark, shard), hits)
   }
 
-  /** Probe seam (r13 verdict item 5): exact-membership serve through a
-    * KEY-SORTED SECONDARY LAYOUT + a pushed IN-list — the candidate
-    * answer to the one honest floor left in this chain (the bucketed
-    * index's column scan is linear in index size per arrival: uniform
-    * hash keys make every bucket file one full-range row group, so no
-    * stat prunes it). The secondary layout range-partitions the SAME
-    * key set globally by h, so each file covers a NARROW key range;
-    * the probe collects its bloom survivors' distinct keys (bounded by
-    * the ARRIVAL, not the corpus — that boundedness is the adoption
-    * precondition) and pushes them as an IN filter, which parquet
-    * row-group stats can evaluate per file. If the scan then touches
-    * only the survivor-covering files, exact membership goes sub-linear
-    * in index size for small arrivals; FixedShardProbe A/Bs this
-    * against the join form at ×100/×1000 — adopt or record the
-    * negative in BASELINE.md either way. */
-  private[graft] def contaminationServePointLookup(
-      spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    val docs = contamDocs(spark, dir)
-    val (index, bloom) = contamIndexAndBloom(spark, dir)
-    val nb = contamBucketsFor(spark, dir)
-    val sorted = graft.sources.IndexStore.cachedTable(
-      spark, dir, "documents", "bench_ngrams_srt") {
-      index.repartitionByRange(nb, col("h")).sortWithinPartitions("h")
-    }
-    val shard = docs.filter(col("bucket") >= 90 && col("doc_id") < cap)
-    val test = contamShingled(spark, shard)
-    val mightContain =
-      graft.functions.BloomOps.familyMightContainLong(col("h"), bloom)
-    // pinned ONCE (bandProbeDropIds doctrine): the survivors feed both
-    // the keys collect and the hits join, and an un-pinned lineage
-    // would re-run the shingle + bloom pass per reference — inflating
-    // the very side of the A/B this seam exists to measure
-    val survivors = Star.pin(test.filter(mightContain))
-    // bounded driver collect — the survivors are the arrival's true
-    // hits plus ~1 % bloom fpp, never corpus-sized; the caller (probe)
-    // keeps the arrival small enough for a literal IN list
-    val keys = survivors.select("h").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val matched = sorted.filter(col("h").isInCollection(keys))
-      .select("h").distinct()
-    val hits = survivors.join(broadcast(matched), Seq("h"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
-    contamAssemble(contamTotalsOf(spark, shard), hits)
-  }
-
   /** ADAPTIVE small-arrival dispatch (r14 verdict item 2): the r14 A/B
     * measured the key-sorted secondary layout + pushed-IN point lookup
     * winning ~30 % at ×1000 for arrivals whose bloom-survivor set fits
@@ -777,7 +722,7 @@ object Training {
     * → point path (collected keys pushed as an IN filter over the
     * range-sorted secondary layout, built lazily on first dispatch);
     * over it → the exact bucketed join finishes on the SAME pinned
-    * survivors. Row-identical on every branch (the probe seam's spec);
+    * survivors. Row-identical on every branch (TrainingSpec pins both);
     * deployment note: the IN list only reaches parquet row-group stats
     * past `spark.sql.parquet.pushdown.inFilterThreshold` (default 10 —
     * the measured win was taken at 200 000), but the filter itself is
@@ -836,27 +781,12 @@ object Training {
     contaminationAdaptiveOf(spark, dir,
       col("bucket") >= 90 && col("doc_id") < 120)
 
-  /** Probe seam: the adaptive dispatch at a capped arrival (the A/B's
-    * small-arrival shape) — prices the dispatch overhead against the
-    * raw point/join forms at ×100/×1000. */
+  /** Test seam: the adaptive dispatch at a capped arrival (the A/B's
+    * small-arrival shape), checked row for row against the join form. */
   private[graft] def contaminationAdaptiveFixedShard(
       spark: SparkSession, dir: String, cap: Long): DataFrame =
     contaminationAdaptiveOf(spark, dir,
       col("bucket") >= 90 && col("doc_id") < cap)
-
-  /** Probe-only residency measurement: load the family ROUTED for a
-    * capped arrival and report (loadedShards, shards, loadedBytes,
-    * wholeBytes estimate). MUST run before any whole-family load in the
-    * process — the memo upgrades the shared instance in place, so a
-    * later routed call on an already-whole entry reads fully loaded. */
-  private[graft] def contamRoutedFamilyStats(spark: SparkSession,
-      dir: String, cap: Long): (Int, Int, Long) = {
-    val docs = contamDocs(spark, dir)
-    val test = contamShingled(spark,
-      docs.filter(col("bucket") >= 90 && col("doc_id") < cap))
-    val fam = contamBloom(spark, dir, test, FamilyRouted)
-    (fam.loadedShards, fam.shards, fam.loadedBytes)
-  }
 
   /** Per-doc shingle totals of an arriving shard, MAP-SIDE as the
     * shingle array's size — no explode, no count shuffle (doc_id is

@@ -1,7 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Filesystem-facing source utilities (SURVEY.md §2.1 S1/S2, §7.3).
   * Directory enumeration goes through the Hadoop FileSystem API directly —
@@ -19,13 +19,6 @@ object Files {
       .filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
       .map(_.getPath.toString)
       .sorted
-  }
-
-  /** Ensure a directory exists (S2 parity; writers normally do this). */
-  def ensureDir(spark: SparkSession, dir: String): Boolean = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(path)
   }
 
   /** Drop the first `n` lines of each file, the `zipWithIndex` route

@@ -367,8 +367,8 @@ object StreamingQueries {
     // chronoReplayWithSentinel contract) — a no-data batch after it would
     // re-run the stateful plan one more time only to apply sentinel 2's
     // own watermark, emitting nothing that survives the user filter
-    // (~0.35 s/replay of pure batch machinery, measured by
-    // StreamProgressProbe; oracle rows byte-identical either way).
+    // (~0.35 s/replay of pure batch machinery, NOTES.md round 13;
+    // oracle rows byte-identical either way).
     appendReplayToParquet(spark, agg, "sessionize")
       .filter(col("user_id") >= 0) // drop the sentinel's own sessions
       .withColumn("session_id", row_number().over(

@@ -73,6 +73,43 @@ class PipelineRunSpec extends SparkSuite {
       exactMultiset(an.fatoAggPrevisoesDia))
   }
 
+  test("a station split over two files is one dim row; fato and KPIs unchanged") {
+    val fixtures = java.nio.file.Paths.get(resourcePath("/inmet"))
+    val dir = Files.createTempDirectory("inmet_split")
+    val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+    Seq("A508_ALMENARA", "A509_MONTEVERDE").foreach { s =>
+      Files.copy(fixtures.resolve(s"INMET_SE_MG_$s.csv"),
+        dir.resolve(s"INMET_SE_MG_$s.csv"))
+    }
+    // A507 split at a day boundary, each part with its own header, the
+    // way INMET publishes a station's years
+    val lines = Files.readAllLines(
+      fixtures.resolve("INMET_SE_MG_A507_UBERLANDIA.csv"), latin1).asScala
+    val (head, rows) = lines.splitAt(9)
+    val (q1, rest) = rows.partition(_ < "2025/04/01")
+    assert(q1.nonEmpty && rest.nonEmpty)
+    Seq("01-01-2025_A_31-03-2025" -> q1, "01-04-2025_A_30-06-2025" -> rest)
+      .foreach { case (span, part) =>
+        Files.write(dir.resolve(s"INMET_SE_MG_A507_UBERLANDIA_$span.csv"),
+          (head ++ part).asJava, latin1)
+      }
+    val out = Files.createTempDirectory("inmet_split_run")
+    Pipeline.run(spark, s"$dir/*.csv", out.resolve("stage").toString,
+      out.resolve("analytic").toString)
+    def written(t: String) = spark.read.parquet(out.resolve(t).toString)
+    assert(written("stage/cidades").filter(col("wmo") === "A507").count() === 2)
+    assert(written("analytic/dim_cidade_atributos").count() === 3)
+    val fato = written("analytic/fato_agg_previsoes_dia")
+    assert(fato.groupBy("wmo").count().collect().map(_.getLong(1)).toSeq ===
+      Seq(181L, 181L, 181L))
+    assert(fato.filter(col("registros_horarios") =!= 24).isEmpty)
+    val whole = Pipeline.analytics(
+      Pipeline.stage(spark, resourcePath("/inmet") + "/*.csv"))
+    assert(exactMultiset(fato) === exactMultiset(whole.fatoAggPrevisoesDia))
+    assert(exactMultiset(written("analytic/cidade_kpis_mensal")) ===
+      exactMultiset(whole.cidadeKpisMensal))
+  }
+
   test("a reading whose cents overflow a long finalizes its day's measure to null") {
     val st = Pipeline.stage(spark,
       InmetCorpus.adversarial(resourcePath("/inmet")))

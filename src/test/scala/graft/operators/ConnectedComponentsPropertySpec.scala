@@ -27,7 +27,7 @@ class ConnectedComponentsPropertySpec extends SparkSuite {
   /** Force the distributed CC loop (gate 0) for a block — the adaptive
     * dispatch otherwise resolves every test-scale graph on the driver. */
   private def forcedDistributed[T](body: => T): T = {
-    val key = "spark.graft.cc.collectThreshold"
+    val key = "spark.graft.collectThreshold"
     spark.conf.set(key, "0")
     try body finally spark.conf.unset(key)
   }

@@ -33,7 +33,7 @@ class GraphSpec extends SparkSuite {
 
   test("pageRank: driver-gated path == forced-distributed iteration") {
     val a = Graph.pageRank(spark, sf).collect().map(_.toString)
-    val key = "spark.graft.graph.collectThreshold"
+    val key = "spark.graft.collectThreshold"
     spark.conf.set(key, "0")
     val b =
       try Graph.pageRank(spark, sf).collect().map(_.toString)

@@ -8,7 +8,8 @@ import org.apache.spark.sql.DataFrame
   *  - winnowPairsCapped's heavy-hash broadcast guard (broadcast vs
   *    shuffled left_anti above the doc gate)
   *  - Star.pin's reliable (persist+materialize) fallback vs the default
-  *    localCheckpoint pin */
+  *    localCheckpoint pin
+  *  - the IVF trainer's job count: its input is counted once */
 class R17DispatchSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
@@ -30,11 +31,37 @@ class R17DispatchSpec extends SparkSuite {
     // across the dispatch
     val km = rows(Similarity.kmeans(spark, sf))
     val ivf = rows(graft.SparkEntry.queries("q_ann_ivf")(spark, sf))
-    spark.conf.set("spark.graft.kmeans.collectThreshold", "0")
+    spark.conf.set("spark.graft.collectThreshold", "0")
     try {
       assert(rows(Similarity.kmeans(spark, sf)) === km)
       assert(rows(graft.SparkEntry.queries("q_ann_ivf")(spark, sf)) === ivf)
-    } finally spark.conf.unset("spark.graft.kmeans.collectThreshold")
+    } finally spark.conf.unset("spark.graft.collectThreshold")
+  }
+
+  test("ivfTrained counts its input once: one count, one collect") {
+    import org.apache.spark.sql.functions.{col, expr}
+    val vecs = Star.pin(Star.table(spark, sf, "embeddings").select(
+      col("vec_id"),
+      expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * " +
+        "1000) AS BIGINT))").as("varr")))
+    def jobsOf(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(l)
+      jobs.get
+    }
+    // under the driver gate the trainer reads its input twice: the count
+    // that sizes nlist (and gates the branch) and the collect it trains on
+    val once = jobsOf(vecs.count()) + jobsOf(vecs.collect())
+    assert(once > 0)
+    assert(jobsOf(Similarity.ivfTrained(vecs)) === once)
   }
 
   test("Star.pin reliable branch equals localCheckpoint branch") {

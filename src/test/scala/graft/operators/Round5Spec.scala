@@ -100,13 +100,13 @@ class Round5Spec extends SparkSuite {
     // driver-resident, so no distance expression remains in the plan;
     // the DISTRIBUTED branch must still show the per-row codegen argmin
     // (vector_dist_sq against literal centroid structs)
-    spark.conf.set("spark.graft.kmeans.collectThreshold", "0")
+    spark.conf.set("spark.graft.collectThreshold", "0")
     try {
       val dplan = Similarity.kmeans(spark, sf)
         .queryExecution.executedPlan.toString
       assert(dplan.contains("vector_dist_sq"), dplan.take(2000))
       assert(!dplan.toLowerCase.contains("posexplode"), dplan.take(2000))
       assert(!dplan.contains("CartesianProduct"), dplan.take(2000))
-    } finally spark.conf.unset("spark.graft.kmeans.collectThreshold")
+    } finally spark.conf.unset("spark.graft.collectThreshold")
   }
 }

@@ -210,20 +210,6 @@ class TrainingSpec extends SparkSuite {
     byIdx.sliding(2).foreach { case Array(a, b) => assert(a <= b) }
   }
 
-  test("point-lookup contamination probe matches the join form " +
-    "(secondary layout answers identically)") {
-    // the key-sorted layout + pushed-IN variant is a PHYSICAL A/B of
-    // the exact-membership serve (r13 verdict item 5) — any row-level
-    // divergence would mean the lookup path is answering a different
-    // question, not serving the same one faster
-    val a = Training.contaminationServeFixedShard(spark, sf, 50L)
-      .collect().toSeq
-    val b = Training.contaminationServePointLookup(spark, sf, 50L)
-      .collect().toSeq
-    assert(a === b)
-    assert(a.nonEmpty)
-  }
-
   test("distributed shard-local probe answers identically; a task's " +
     "resident bloom bytes are a strict fraction of the family") {
     import scala.jdk.CollectionConverters._
