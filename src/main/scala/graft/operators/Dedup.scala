@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryDef
+import graft.sources.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1409,21 +1410,7 @@ object Dedup {
     * index's bucketing and the shard side alone shuffles. */
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Star.table(spark, dir, "documents")
-    val isNew = col("doc_id") % 10 === 0
-    val index = graft.sources.IndexStore.cachedBucketTable(
-      spark, dir, "documents", "mhband", 8,
-      Seq("band_id", "h"), Seq("band_id", "h")) {
-      bandRows(withMinhashBands(shingleRows(docs.filter(!isNew))))
-    }
-    val newBands = bandRows(withMinhashBands(shingleRows(docs.filter(isNew))))
-    val dropIds =
-      bandProbeDropIds(docs, Seq(index, newBands), newBands)
-    docs.filter(isNew)
-      .join(dropIds.withColumn("__d", lit(1)), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"), col("source"),
-        when(col("__d").isNotNull, lit("drop")).otherwise(lit("keep"))
-          .as("verdict"))
-      .orderBy("doc_id")
+    arrivalVerdicts(docs, mhband(spark, dir, docs))
   }
 
   /** Test seam: the serve path's candidate-generation plan BEFORE its
@@ -1432,26 +1419,49 @@ object Dedup {
   private[graft] def dedupIncrementalCandPlan(
       spark: SparkSession, dir: String): DataFrame = {
     val docs = Star.table(spark, dir, "documents")
-    val isNew = col("doc_id") % 10 === 0
-    val index = graft.sources.IndexStore.cachedBucketTable(
-      spark, dir, "documents", "mhband", 8,
-      Seq("band_id", "h"), Seq("band_id", "h")) {
-      bandRows(withMinhashBands(shingleRows(docs.filter(!isNew))))
-    }
-    val newBands = bandRows(withMinhashBands(shingleRows(docs.filter(isNew))))
+    val index = mhband(spark, dir, docs)
+    val newBands = bandsOf(docs.filter(isArrival))
     bandCandidatePlan(Seq(index, newBands), newBands)
   }
 
-  /** Shared serve-side verify: band rows of every EARLIER doc (the
-    * `earlier` relations, kept SEPARATE so the persisted bucketed index
-    * joins the probe directly — a pre-join union would force the index
-    * rows through a shuffle and waste the bucketing) probed by the
-    * arriving docs' band rows (`probe`), candidates verified by exact
-    * Jaccard computed over ONLY the candidate docs' shingles (semi-join
-    * pruned from `docs`). Returns the arriving doc_ids with a verified
-    * earlier near-dup — the drop set. Used by both the batch serve path
-    * ([[dedupIncremental]]) and the streaming arrival path
-    * ([[streamDedupIndex]]). */
+  /** The arriving shard of the band-index lifecycle. */
+  private def isArrival: Column = col("doc_id") % 10 === 0
+
+  /** Exploded (doc_id, band_id, h) MinHash band rows of `docs`. */
+  private def bandsOf(docs: DataFrame): DataFrame =
+    bandRows(withMinhashBands(shingleRows(docs)))
+
+  /** `mhband`, the persisted MinHash band index: the band rows of every
+    * doc but the arriving shard, in 8 buckets on (band_id, h) so the
+    * probe join co-locates on its bucketing. Built once per corpus by
+    * whichever user runs first: [[dedupIncremental]] and its plan seam,
+    * [[streamDedupIndex]], [[dedupIndexAppend]], [[dedupIndexRetract]],
+    * and [[dedupIndexCompact]], which also appends arrival segments to
+    * its lane. */
+  private def mhband(spark: SparkSession, dir: String,
+      docs: DataFrame): DataFrame =
+    IndexStore.cachedBucketTable(spark, dir, "documents", "mhband", 8,
+      Seq("band_id", "h"), Seq("band_id", "h")) {
+      bandsOf(docs.filter(!isArrival))
+    }
+
+  /** Keep/drop verdict per arriving doc: drop iff it is in `dropIds`. */
+  private def verdicts(arrivals: DataFrame, dropIds: DataFrame): DataFrame =
+    arrivals.join(dropIds.withColumn("__d", lit(1)), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("lang"), col("source"),
+        when(col("__d").isNotNull, lit("drop")).otherwise(lit("keep"))
+          .as("verdict"))
+
+  /** The batch serve: the arriving shard's bands probe `index` (the band
+    * index as served) and themselves, so intra-shard dups are caught;
+    * verdicts ordered by doc_id. */
+  private def arrivalVerdicts(docs: DataFrame, index: DataFrame): DataFrame = {
+    val newBands = bandsOf(docs.filter(isArrival))
+    verdicts(docs.filter(isArrival),
+      bandProbeDropIds(docs, Seq(index, newBands), newBands))
+      .orderBy("doc_id")
+  }
+
   /** (A ∪ B) ⋈ probe ≡ (A ⋈ probe) ∪ (B ⋈ probe); the split form lets
     * each earlier relation keep its own physical join strategy. */
   private def bandCandidatePlan(
@@ -1465,6 +1475,16 @@ object Dedup {
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
     }.reduce(_.unionByName(_)).distinct()
 
+  /** Shared serve-side verify: band rows of every EARLIER doc (the
+    * `earlier` relations, kept SEPARATE so the persisted bucketed index
+    * joins the probe directly — a pre-join union would force the index
+    * rows through a shuffle and waste the bucketing) probed by the
+    * arriving docs' band rows (`probe`), candidates verified by exact
+    * Jaccard computed over ONLY the candidate docs' shingles (semi-join
+    * pruned from `docs`). Returns the arriving doc_ids with a verified
+    * earlier near-dup — the drop set. Used by both the batch serve path
+    * ([[arrivalVerdicts]]) and the streaming arrival path
+    * ([[streamDedupIndex]]). */
   private def bandProbeDropIds(
       docs: DataFrame, earlier: Seq[DataFrame], probe: DataFrame): DataFrame = {
     val candPlan = bandCandidatePlan(earlier, probe)
@@ -1500,11 +1520,10 @@ object Dedup {
     * online form of [[dedupIncremental]], and the shape a 100 TB ingest
     * actually runs: documents arrive as micro-batches, each batch is
     * sketched fresh, probed against (a) the persisted base-corpus band
-    * index — the SAME IndexStore snapshot the batch serve path uses,
-    * never re-derived — and (b) the accumulated band rows of all earlier
-    * arrivals, then verified by candidate-pruned exact Jaccard, and the
-    * batch's bands are appended to the arrival state for the next
-    * trigger.
+    * index ([[mhband]]), never re-derived, and (b) the accumulated band
+    * rows of all earlier arrivals, then verified by candidate-pruned
+    * exact Jaccard, and the batch's bands are appended to the arrival
+    * state for the next trigger.
     *
     * Replay fixture: the arriving shard (doc_id % 10 = 0) split into 3
     * CONTIGUOUS doc_id ranges written with strictly increasing mtimes,
@@ -1540,15 +1559,10 @@ object Dedup {
       spark: SparkSession, dir: String): (DataFrame, String) = {
     import org.apache.spark.sql.types._
     val docs = Star.table(spark, dir, "documents")
-    val isNew = col("doc_id") % 10 === 0
-    val index = graft.sources.IndexStore.cachedBucketTable(
-      spark, dir, "documents", "mhband", 8,
-      Seq("band_id", "h"), Seq("band_id", "h")) {
-      bandRows(withMinhashBands(shingleRows(docs.filter(!isNew))))
-    }
+    val index = mhband(spark, dir, docs)
     val base = graft.sources.FixtureCache.buildReplayShards(
       spark, "graft_stream_dedupidx", dir, "documents", 3)(
-      docs.filter(isNew), "doc_id")
+      docs.filter(isArrival), "doc_id")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -1559,15 +1573,9 @@ object Dedup {
       .parquet(base.toString)
     graft.streaming.StreamingQueries.replayIndexedDedup(
       spark, src, "dedupidx", "dedupidx_work", "doc_id",
-      batch => bandRows(withMinhashBands(shingleRows(batch))),
-      (batch, state, probe) => {
-        val dropIds = bandProbeDropIds(docs, Seq(index, state), probe)
-        batch
-          .join(dropIds.withColumn("__d", lit(1)), Seq("doc_id"), "left")
-          .select(col("doc_id"), col("lang"), col("source"),
-            when(col("__d").isNotNull, lit("drop")).otherwise(lit("keep"))
-              .as("verdict"))
-      },
+      bandsOf,
+      (batch, state, probe) =>
+        verdicts(batch, bandProbeDropIds(docs, Seq(index, state), probe)),
       Seq("doc_id", "lang", "source", "verdict"))
   }
 
@@ -1880,25 +1888,22 @@ object Dedup {
     * generators key on), an order-independent exact aggregate. */
   def dedupIndexAppend(spark: SparkSession, dir: String): DataFrame = {
     val docs = Star.table(spark, dir, "documents")
-    val isNew = col("doc_id") % 10 === 0
-    // same IndexStore identity as dedupIncremental -> shared snapshot
-    val index = graft.sources.IndexStore.cachedBucketTable(
-      spark, dir, "documents", "mhband", 8,
-      Seq("band_id", "h"), Seq("band_id", "h")) {
-      bandRows(withMinhashBands(shingleRows(docs.filter(!isNew))))
-    }
+    val index = mhband(spark, dir, docs)
     val kept = dedupIncremental(spark, dir)
       .filter(col("verdict") === "keep").select("doc_id")
-    val keptBands = bandRows(withMinhashBands(shingleRows(
-      docs.filter(isNew).join(kept, Seq("doc_id"), "left_semi"))))
-    index.unionByName(keptBands)
-      .groupBy("band_id", "h").agg(count(lit(1)).as("df"))
+    bandProfile(index.unionByName(bandsOf(
+      docs.filter(isArrival).join(kept, Seq("doc_id"), "left_semi"))))
+  }
+
+  /** Per-band profile of band rows: doc rows, distinct buckets and the
+    * hottest bucket's DF, ordered by band. */
+  private def bandProfile(bands: DataFrame): DataFrame =
+    bands.groupBy("band_id", "h").agg(count(lit(1)).as("df"))
       .groupBy("band_id")
       .agg(sum("df").cast("long").as("n_docs"),
         count(lit(1)).as("n_buckets"),
         max("df").as("max_df"))
       .orderBy("band_id")
-  }
 
   /** Oracle: the incremental-dedup oracle's keep set, then bands over
     * (base ∪ kept shard) profiled per band. */
@@ -1959,24 +1964,10 @@ object Dedup {
     * blocks any arrival (additionally spec-pinned on a planted pair). */
   def dedupIndexRetract(spark: SparkSession, dir: String): DataFrame = {
     val docs = Star.table(spark, dir, "documents")
-    val isNew = col("doc_id") % 10 === 0
-    // same IndexStore identity as dedupIncremental -> shared snapshot
-    val index = graft.sources.IndexStore.cachedBucketTable(
-      spark, dir, "documents", "mhband", 8,
-      Seq("band_id", "h"), Seq("band_id", "h")) {
-      bandRows(withMinhashBands(shingleRows(docs.filter(!isNew))))
-    }
     val tombstones = docs.filter((col("doc_id") % 10).isin(5, 8))
       .select("doc_id")
-    val live = index.join(broadcast(tombstones), Seq("doc_id"), "left_anti")
-    val newBands = bandRows(withMinhashBands(shingleRows(docs.filter(isNew))))
-    val dropIds = bandProbeDropIds(docs, Seq(live, newBands), newBands)
-    docs.filter(isNew)
-      .join(dropIds.withColumn("__d", lit(1)), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"), col("source"),
-        when(col("__d").isNotNull, lit("drop")).otherwise(lit("keep"))
-          .as("verdict"))
-      .orderBy("doc_id")
+    arrivalVerdicts(docs, mhband(spark, dir, docs)
+      .join(broadcast(tombstones), Seq("doc_id"), "left_anti"))
   }
 
   /** Oracle: the incremental-dedup twin on the reduced corpus — the
@@ -2035,38 +2026,25 @@ object Dedup {
     * tombstone and retract-by-rewrite are the SAME logical operation
     * at two maintenance stages, so they share the oracle verbatim. */
   def dedupIndexRewrite(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.IndexStore
     val docs = Star.table(spark, dir, "documents")
-    // the ARRIVAL is the %10 == 0 slice
-    val isNew = col("doc_id") % 10 === 0
     // own snapshot identity: mhband's lane receives arrival segments
     // from the compaction query, which would make the rewrite's folded
     // content depend on query execution order
     val base = IndexStore.cachedBucketTable(
       spark, dir, "documents", "mhbandrw", 8,
       Seq("band_id", "h"), Seq("band_id", "h")) {
-      bandRows(withMinhashBands(shingleRows(
-        docs.filter(col("doc_id") % 10 =!= 0 &&
-          col("doc_id") % 10 =!= 1))))
+      bandsOf(docs.filter(col("doc_id") % 10 =!= 0 &&
+        col("doc_id") % 10 =!= 1))
     }
     IndexStore.appendSegment(spark, dir, "documents", "mhbandrw", "s1") {
-      bandRows(withMinhashBands(shingleRows(
-        docs.filter(col("doc_id") % 10 === 1))))
+      bandsOf(docs.filter(col("doc_id") % 10 === 1))
     }
     IndexStore.majorRewrite(spark, dir, "documents", "mhbandrw", "g2",
       8, Seq("band_id", "h"), Seq("band_id", "h"), Seq("doc_id"))(base) {
       docs.filter((col("doc_id") % 10).isin(5, 8)).select("doc_id")
     }
-    val live = IndexStore.openTable(spark, dir, "documents",
-      IndexStore.servingName(dir, "documents", "mhbandrw"))
-    val newBands = bandRows(withMinhashBands(shingleRows(docs.filter(isNew))))
-    val dropIds = bandProbeDropIds(docs, Seq(live, newBands), newBands)
-    docs.filter(isNew)
-      .join(dropIds.withColumn("__d", lit(1)), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"), col("source"),
-        when(col("__d").isNotNull, lit("drop")).otherwise(lit("keep"))
-          .as("verdict"))
-      .orderBy("doc_id")
+    arrivalVerdicts(docs, IndexStore.openTable(spark, dir, "documents",
+      IndexStore.servingName(dir, "documents", "mhbandrw")))
   }
 
   /** Persisted-index APPEND COMPACTION — the maintenance half
@@ -2088,33 +2066,18 @@ object Dedup {
     * corpus profiled per band (base ∪ all three slices = every doc). */
   def dedupIndexCompact(spark: SparkSession, dir: String): DataFrame = {
     val docs = Star.table(spark, dir, "documents")
-    val isNew = col("doc_id") % 10 === 0
-    // same IndexStore identity as dedupIncremental -> shared snapshot
-    val index = graft.sources.IndexStore.cachedBucketTable(
-      spark, dir, "documents", "mhband", 8,
-      Seq("band_id", "h"), Seq("band_id", "h")) {
-      bandRows(withMinhashBands(shingleRows(docs.filter(!isNew))))
-    }
-    // three modeled arrival shards: the isNew docs sliced by residue
+    val index = mhband(spark, dir, docs)
+    // three modeled arrival shards: the arriving docs sliced by residue
     // (doc_id % 10 == 0, so % 30 partitions them into 0/10/20)
     (0 to 2).foreach { k =>
-      graft.sources.IndexStore.appendSegment(
-        spark, dir, "documents", "mhband", s"arr$k") {
-        bandRows(withMinhashBands(shingleRows(
-          docs.filter(isNew && col("doc_id") % 30 === k * 10))))
+      IndexStore.appendSegment(spark, dir, "documents", "mhband", s"arr$k") {
+        bandsOf(docs.filter(isArrival && col("doc_id") % 30 === k * 10))
       }
     }
-    graft.sources.IndexStore.compactAppends(
+    IndexStore.compactAppends(
       spark, dir, "documents", "mhband", maxSegments = 2)
-    val lane = graft.sources.IndexStore
-      .readAppends(spark, dir, "documents", "mhband").get
-    index.unionByName(lane)
-      .groupBy("band_id", "h").agg(count(lit(1)).as("df"))
-      .groupBy("band_id")
-      .agg(sum("df").cast("long").as("n_docs"),
-        count(lit(1)).as("n_buckets"),
-        max("df").as("max_df"))
-      .orderBy("band_id")
+    bandProfile(index.unionByName(
+      IndexStore.readAppends(spark, dir, "documents", "mhband").get))
   }
 
   /** Oracle: bands over every doc (base ∪ the three arrival slices),

@@ -43,29 +43,16 @@ object InmetQueries {
   private def fixtureAnalytics(spark: SparkSession): Pipeline.Analytics =
     Pipeline.analytics(Pipeline.stage(spark, fixtures()))
 
-  /** Shared oracle scaffolding: raw INMET files -> cleansed hourly rows
-    * joined with the metadata-derived station key, in DuckDB SQL. Mirrors
-    * Ingest's line classification and 1-based split indexing exactly. */
   /** Gate for the DataSource V2 reader (graft.sources.v2.InmetSource):
     * the same raw files through the V2 scan — with the March date range
     * pushed INTO the scan and only 3 of 7 columns read — aggregated to
     * a daily rollup; the oracle re-parses the raw files in DuckDB and
     * applies the same range. Proves the custom source end-to-end against
     * an independent engine, not just against our own Ingest path. */
-  def inmetDsv2(spark: SparkSession, dir: String): DataFrame = {
-    val v2 = spark.read.format("graft.sources.v2.InmetSource")
-      .load(fixtures())
-    v2.filter(col("data_medicao") >= lit("2025-03-01") &&
-        col("data_medicao") < lit("2025-04-01"))
-      .groupBy("wmo", "data_medicao")
-      .agg(
-        min("temperatura_c").as("temp_min_c"),
-        max("temperatura_c").as("temp_max_c"),
-        (sum(Star.cents(col("temperatura_c"))).cast("double") / 100.0 /
-          count(lit(1))).as("temp_avg_c"),
-        count(lit(1)).as("registros_horarios"))
+  def inmetDsv2(spark: SparkSession, dir: String): DataFrame =
+    marchRollup(spark.read.format("graft.sources.v2.InmetSource")
+      .load(fixtures()))
       .orderBy("wmo", "data_medicao")
-  }
 
   /** The SAME March rollup ingested through the DSv2 source's
     * MICRO-BATCH face: `readStream.format(InmetSource)` replays the
@@ -76,17 +63,8 @@ object InmetQueries {
     * the BATCH oracle (the DuckDB re-parse of the raw CSVs) gates the
     * streaming ingest path end-to-end, not just a row-parity spec. */
   def inmetStream(spark: SparkSession, dir: String): DataFrame = {
-    val v2 = spark.readStream.format("graft.sources.v2.InmetSource")
-      .load(fixtures())
-    val agg = v2.filter(col("data_medicao") >= lit("2025-03-01") &&
-        col("data_medicao") < lit("2025-04-01"))
-      .groupBy("wmo", "data_medicao")
-      .agg(
-        min("temperatura_c").as("temp_min_c"),
-        max("temperatura_c").as("temp_max_c"),
-        (sum(Star.cents(col("temperatura_c"))).cast("double") / 100.0 /
-          count(lit(1))).as("temp_avg_c"),
-        count(lit(1)).as("registros_horarios"))
+    val agg = marchRollup(spark.readStream
+      .format("graft.sources.v2.InmetSource").load(fixtures()))
     graft.streaming.StreamingQueries.withStreamPartitions(spark, 4) {
       val q = agg.writeStream
         .format("memory")
@@ -99,6 +77,20 @@ object InmetQueries {
     }
     spark.table("graft_inmet_stream").orderBy("wmo", "data_medicao")
   }
+
+  /** The March daily temperature rollup of hourly InmetSource rows — one
+    * aggregate for the batch and the micro-batch face (shared oracle
+    * [[inmetDsv2Sql]]). */
+  private def marchRollup(hourly: DataFrame): DataFrame =
+    hourly.filter(col("data_medicao") >= lit("2025-03-01") &&
+        col("data_medicao") < lit("2025-04-01"))
+      .groupBy("wmo", "data_medicao")
+      .agg(
+        min("temperatura_c").as("temp_min_c"),
+        max("temperatura_c").as("temp_max_c"),
+        (sum(Star.cents(col("temperatura_c"))).cast("double") / 100.0 /
+          count(lit(1))).as("temp_avg_c"),
+        count(lit(1)).as("registros_horarios"))
 
   private val inmetDsv2Sql =
     s"""$parsedCte
@@ -113,6 +105,9 @@ object InmetQueries {
        |GROUP BY wmo, data_medicao
        |ORDER BY wmo, data_medicao""".stripMargin
 
+  /** Shared oracle scaffolding: raw INMET files -> cleansed hourly rows
+    * joined with the metadata-derived station key, in DuckDB SQL. Mirrors
+    * Ingest's line classification and 1-based split indexing exactly. */
   private def parsedCte: String =
     s"""WITH lines AS (
        |  SELECT filename, column0 AS line

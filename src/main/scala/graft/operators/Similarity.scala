@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryDef
+import graft.sources.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -126,7 +127,6 @@ object Similarity {
     * and re-ranks with the same rounded cosine. Recall vs brute force is
     * additionally property-tested. */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Star.table(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble("embedding").as("v"))
     val bands = lshBands(spark, dir)
@@ -135,11 +135,17 @@ object Similarity {
     val cand = bands.join(qBands, Seq("band_id", "band_bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select("q_id", "vec_id").distinct()
-    val scored = cand
+    top3(cand
       .join(e, "vec_id")
       .join(e.select(col("vec_id").as("q_id"), col("v").as("qv")), "q_id")
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine("qv", "v").as("cosine"))
+        cosine("qv", "v").as("cosine")))
+  }
+
+  /** Top-3 per query of scored (q_id, neighbor_id, cosine) rows: cosine
+    * descending, ties to the lowest neighbor_id, ranked 1..3. */
+  private def top3(scored: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("q_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rnk", row_number().over(w).cast("long"))
@@ -249,36 +255,22 @@ object Similarity {
     * identical quantization, Lloyd rounds, probe ranking, and re-rank.
     * Recall vs brute force is additionally property-tested. */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nprobe = 4
     val vecs = quantVecs(spark, dir)
     // 2 Lloyd rounds: a coarse quantizer needs a stable partition, not
     // convergence — the third round costs a full assignment+update pass
     // for no recall change (measured)
     val (cent, assign) = ivfTrained(vecs)
-    val qdist = vecs.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("varr"))
-      .crossJoin(broadcast(cent))
-      .select(col("q_id"), col("cid"), graft.functions.VectorFunctions
-        .vectorDistSq(col("varr"), col("carr")).as("d"))
-    val probeW = Window.partitionBy("q_id").orderBy(col("d"), col("cid"))
-    val probes = qdist.withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nprobe)
-      .select("q_id", "cid")
+    val probes = ivfProbes(vecs.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("varr").as("qarr")), cent)
     // a vector lives in exactly one cell, so the probe join is dup-free
     val e = Star.table(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble("embedding").as("v"))
-    val scored = probes.join(assign, Seq("cid"))
+    top3(probes.join(assign, Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(e, "vec_id")
       .join(e.select(col("vec_id").as("q_id"), col("v").as("qv")), "q_id")
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine("qv", "v").as("cosine"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .orderBy("q_id", "rnk")
+        cosine("qv", "v").as("cosine")))
   }
 
   /** [[annIvf]] split into BUILD and SERVE — the shape a retrieval
@@ -286,71 +278,145 @@ object Similarity {
     * index inside the query; a production ANN service builds ONCE
     * (trainer job: coarse quantizer + cell assignments) and serves
     * probes against the persisted result. The build step persists two
-    * tables via [[graft.sources.IndexStore]]: the centroids (tiny,
-    * broadcast at serve time) and the postings — each vector stored in
-    * its IVF cell, the table PARTITIONED BY cell id so one cell is one
-    * directory. The serve path is read + probe only: score the query
-    * batch against broadcast centroids, take nprobe cells per query,
-    * and push the probed cell ids as a LITERAL partition filter — the
-    * postings scan statically prunes to the probed cells' directories
-    * (plan-asserted), reading nprobe/nlist of the index regardless of
-    * corpus size. The probe list collect is bounded by query-batch x
-    * nprobe (20 rows here), never corpus.
+    * tables via [[graft.sources.IndexStore]] ([[IvfFull]]): the
+    * centroids (tiny, broadcast at serve time) and the postings — each
+    * vector stored in its IVF cell, the table PARTITIONED BY cell id so
+    * one cell is one directory. The serve path is read + probe only
+    * ([[ivfServeTop3]]).
     *
     * Same deterministic trainer as [[annIvf]] (integer Lloyd, vec_id<k
     * seed), so the served result is row-identical to the in-query form
     * and shares its oracle. */
   def annIvfServe(spark: SparkSession, dir: String): DataFrame = {
-    // one trainer run feeds BOTH index tables on first build (lazy: not
-    // evaluated at all when the tables are already cached)
-    lazy val trained = ivfTrained(quantVecs(spark, dir))
-    val cent = graft.sources.IndexStore.cachedTable(
-      spark, dir, "embeddings", "ivfsq_cent") { trained._1 }
-    val post = graft.sources.IndexStore.cachedPartitionedTable(
-      spark, dir, "embeddings", "ivfsq_post", Seq("cid")) {
-      Star.table(spark, dir, "embeddings")
-        .select(col("vec_id"), asDouble("embedding").as("v"))
-        .join(trained._2, "vec_id")
-    }
+    val (cent, post) = new IvfFull(spark, dir).open()
     ivfServeTop3(spark, dir, cent, post)
   }
 
-  /** The IVF serve plan shared by every generation of the lifecycle
-    * ([[annIvfServe]], the retrain-and-swap's [[IvfRetrain.serve]]):
-    * probe selection against the broadcast centroids, probed cell ids
-    * pushed as a LITERAL partition filter on the postings scan
-    * (plan-asserted static pruning), exact-cosine top-3 per query. The
-    * probe-id collect is bounded by queries × nprobe, never corpus. */
-  private def ivfServeTop3(spark: SparkSession, dir: String,
-      cent: DataFrame, post: DataFrame): DataFrame = {
+  /** Milli-unit integer quantization of the embedding — the IVF
+    * trainer's and every probe's vector space. */
+  private def milliQuant: Column =
+    expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
+
+  /** The int8-per-dim code of the embedding, clamp(floor(v·127)). */
+  private def int8Code: Column =
+    expr("transform(embedding, v -> CAST(greatest(-128.0, least(127.0, " +
+      "floor(CAST(v AS DOUBLE) * 127))) AS BIGINT))")
+
+  /** The IVF lifecycle's arriving shard: vec_id % 10 = 9. */
+  private def ivfArrival: Column = col("vec_id") % 10 === 9
+
+  /** Probe selection: each query's nprobe = 4 nearest cells by integer
+    * L2 of its `qarr` against the broadcast centroids, ties to the
+    * lowest cell id, as (q_id, cid). */
+  private def ivfProbes(queries: DataFrame, cent: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nprobe = 4
-    val qv = Star.table(spark, dir, "embeddings").filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"),
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
-          .as("qarr"),
-        asDouble("embedding").as("qv"))
-    val qdist = qv.crossJoin(broadcast(cent))
+    val qdist = queries.crossJoin(broadcast(cent))
       .select(col("q_id"), col("cid"), graft.functions.VectorFunctions
         .vectorDistSq(col("qarr"), col("carr")).as("d"))
     val probeW = Window.partitionBy("q_id").orderBy(col("d"), col("cid"))
-    val probes = qdist.withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nprobe)
+    qdist.withColumn("pr", row_number().over(probeW))
+      .filter(col("pr") <= 4)
       .select("q_id", "cid")
+  }
+
+  /** `post` restricted to the probed cells by a LITERAL partition filter,
+    * so the postings scan prunes statically to their directories
+    * (plan-asserted). The cell-id collect is bounded by queries × nprobe,
+    * never corpus. */
+  private def probedCells(post: DataFrame, probes: DataFrame): DataFrame = {
     val cids = probes.select("cid").distinct()
       .collect().map(_.getInt(0)).sorted
-    val scored = post.filter(col("cid").isin(cids.toIndexedSeq: _*))
+    post.filter(col("cid").isin(cids.toIndexedSeq: _*))
+  }
+
+  /** The IVF serve plan shared by every persisted form of the lifecycle
+    * ([[annIvfServe]], [[annIvfAppend]], [[annIvfRetract]],
+    * [[annIvfRewrite]], the retrain-and-swap's [[IvfRetrain.serve]]):
+    * probe selection against the broadcast centroids, pruned postings
+    * scan, exact-cosine top-3 per query. A filter `post` carries (the
+    * retract's tombstone anti-join) sits above the scan; Catalyst pushes
+    * the cell filter below it, so the pruning holds. */
+  private def ivfServeTop3(spark: SparkSession, dir: String,
+      cent: DataFrame, post: DataFrame): DataFrame = {
+    val qv = Star.table(spark, dir, "embeddings").filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), milliQuant.as("qarr"),
+        asDouble("embedding").as("qv"))
+    val probes = ivfProbes(qv, cent)
+    top3(probedCells(post, probes)
       .join(probes, Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(qv.select(col("q_id"), col("qv")), Seq("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine("qv", "v").as("cosine"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .orderBy("q_id", "rnk")
+        cosine("qv", "v").as("cosine")))
   }
+
+  /** One IVF corpus's persisted index: a trainer run over the vectors
+    * `corpus` keeps, and the postings it assigns. The trainer is lazy,
+    * so a snapshot already in the store never trains, and one run feeds
+    * every snapshot the corpus builds. */
+  private abstract class IvfCorpus(spark: SparkSession, dir: String,
+      corpus: DataFrame => DataFrame) {
+    protected lazy val trained = ivfTrained(corpus(quantVecs(spark, dir)))
+    protected def postings: DataFrame =
+      corpus(Star.table(spark, dir, "embeddings"))
+        .select(col("vec_id"), asDouble("embedding").as("v"))
+        .join(trained._2, "vec_id")
+    /** The centroids (cid, carr). */
+    def cent: DataFrame
+    /** The postings (vec_id, v, cid), partitioned by cid. */
+    def post: DataFrame
+    /** Both snapshots, centroids first — built on first use. */
+    def open(): (DataFrame, DataFrame) = (cent, post)
+  }
+
+  /** The full-corpus IVF snapshots:
+    *   - `ivfsq_cent`: [[annIvfServe]], [[annIvfQuant]], [[annIvfRetract]],
+    *     [[annIvfRewrite]] and [[IvfRetrain]]'s retrained generation;
+    *   - `ivfsq_post`: [[annIvfServe]], [[annIvfRetract]] and the
+    *     retrained generation;
+    *   - `ivfsq_post_rw`: the same postings under their own identity,
+    *     which [[annIvfRewrite]] rewrites, so `ivfsq_post` keeps serving
+    *     the tombstone form unchanged;
+    *   - `ivfsq_code_post`: [[annIvfQuant]]'s int8-code postings. */
+  private final class IvfFull(spark: SparkSession, dir: String)
+      extends IvfCorpus(spark, dir, identity) {
+    def cent: DataFrame = IndexStore.cachedTable(
+      spark, dir, "embeddings", "ivfsq_cent") { trained._1 }
+    def post: DataFrame = IndexStore.cachedPartitionedTable(
+      spark, dir, "embeddings", "ivfsq_post", Seq("cid"))(postings)
+    def postRw: DataFrame = IndexStore.cachedPartitionedTable(
+      spark, dir, "embeddings", "ivfsq_post_rw", Seq("cid"))(postings)
+    def codePost: DataFrame = IndexStore.cachedPartitionedTable(
+      spark, dir, "embeddings", "ivfsq_code_post", Seq("cid")) {
+      Star.table(spark, dir, "embeddings")
+        .select(col("vec_id"), int8Code.as("code"))
+        .join(trained._2, "vec_id")
+    }
+  }
+
+  /** The base-corpus IVF snapshots, trained without the arriving shard
+    * ([[ivfArrival]]): `ivfsq_cent_base` and `ivfsq_post_base` — users
+    * [[annIvfAppend]] (which appends the shard's postings to the
+    * `ivfsq_post_base` lane), [[annIvfDrift]] and [[IvfRetrain]]'s
+    * frozen generation. */
+  private final class IvfBase(spark: SparkSession, dir: String)
+      extends IvfCorpus(spark, dir, _.filter(!ivfArrival)) {
+    def cent: DataFrame = IndexStore.cachedTable(
+      spark, dir, "embeddings", "ivfsq_cent_base") { trained._1 }
+    def post: DataFrame = IndexStore.cachedPartitionedTable(
+      spark, dir, "embeddings", "ivfsq_post_base", Seq("cid"))(postings)
+  }
+
+  /** Frozen-quantizer assignment of (vec_id, varr) rows: each vector's
+    * nearest of the broadcast centroids by the trainer's (min d, min
+    * cid) rule, as (vec_id, cid, d). */
+  private def frozenAssign(vecs: DataFrame, cent: DataFrame): DataFrame =
+    vecs.crossJoin(broadcast(cent))
+      .select(col("vec_id"), col("cid"), graft.functions.VectorFunctions
+        .vectorDistSq(col("varr"), col("carr")).as("d"))
+      .groupBy("vec_id")
+      .agg(min(struct(col("d"), col("cid"))).as("m"))
+      .select(col("vec_id"), col("m.cid").as("cid"), col("m.d").as("d"))
 
   /** Shared oracle CTE chain for the IVF family: the q_kmeans trainer
     * rounds (vecs/cent0..2/assign2) plus the query-probe selection
@@ -442,40 +508,18 @@ object Similarity {
     * trainer, code quantization, integer shortlist, and re-rank. */
   def annIvfQuant(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nprobe = 4
     val rerank = 10
-    // one trainer run feeds BOTH index tables on first build (and the
-    // centroid table is shared with annIvfServe — same name, same
-    // deterministic trainer)
-    lazy val trained = ivfTrained(quantVecs(spark, dir))
-    val cent = graft.sources.IndexStore.cachedTable(
-      spark, dir, "embeddings", "ivfsq_cent") { trained._1 }
-    val codeExpr =
-      "transform(embedding, v -> CAST(greatest(-128.0, least(127.0, " +
-        "floor(CAST(v AS DOUBLE) * 127))) AS BIGINT))"
-    val post = graft.sources.IndexStore.cachedPartitionedTable(
-      spark, dir, "embeddings", "ivfsq_code_post", Seq("cid")) {
-      Star.table(spark, dir, "embeddings")
-        .select(col("vec_id"), expr(codeExpr).as("code"))
-        .join(trained._2, "vec_id")
-    }
+    // one trainer run feeds both snapshots on first build; the centroid
+    // snapshot is annIvfServe's
+    val ivf = new IvfFull(spark, dir)
+    val cent = ivf.cent
+    val post = ivf.codePost
     val qv = Star.table(spark, dir, "embeddings").filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"),
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
-          .as("qarr"),
-        expr(codeExpr).as("qcode"),
-        asDouble("embedding").as("qv"))
-    val qdist = qv.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("cid"), graft.functions.VectorFunctions
-        .vectorDistSq(col("qarr"), col("carr")).as("d"))
-    val probeW = Window.partitionBy("q_id").orderBy(col("d"), col("cid"))
-    val probes = qdist.withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nprobe)
-      .select("q_id", "cid")
-    val cids = probes.select("cid").distinct()
-      .collect().map(_.getInt(0)).sorted
+      .select(col("vec_id").as("q_id"), milliQuant.as("qarr"),
+        int8Code.as("qcode"), asDouble("embedding").as("qv"))
+    val probes = ivfProbes(qv, cent)
     // stage 1: integer code distance, probed cells only (pruned scan)
-    val short = post.filter(col("cid").isin(cids.toIndexedSeq: _*))
+    val short = probedCells(post, probes)
       .join(probes, Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(qv.select(col("q_id"), col("qcode")), Seq("q_id"))
@@ -489,16 +533,11 @@ object Similarity {
     // stage 2: true-cosine re-rank over the 10-candidate shortlist only
     val e = Star.table(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble("embedding").as("v"))
-    val scored = short
+    top3(short
       .join(e, "vec_id")
       .join(qv.select(col("q_id"), col("qv")), Seq("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine("qv", "v").as("cosine"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .orderBy("q_id", "rnk")
+        cosine("qv", "v").as("cosine")))
   }
 
   /** Oracle for [[annIvfQuant]]: shared IVF chain + identical code
@@ -570,42 +609,23 @@ object Similarity {
     * Oracle: DuckDB replays the base-only trainer, the frozen-centroid
     * shard assignment, and the union serve — hash-exact. */
   def annIvfAppend(spark: SparkSession, dir: String): DataFrame = {
-    val isNew = col("vec_id") % 10 === 9
-    // base-corpus index (distinct IndexStore identity from the
-    // full-corpus ivf_cent/ivf_post snapshot of annIvfServe)
-    lazy val trained =
-      ivfTrained(quantVecs(spark, dir).filter(!isNew))
-    val cent = graft.sources.IndexStore.cachedTable(
-      spark, dir, "embeddings", "ivfsq_cent_base") { trained._1 }
-    val post = graft.sources.IndexStore.cachedPartitionedTable(
-      spark, dir, "embeddings", "ivfsq_post_base", Seq("cid")) {
-      Star.table(spark, dir, "embeddings").filter(!isNew)
-        .select(col("vec_id"), asDouble("embedding").as("v"))
-        .join(trained._2, "vec_id")
-    }
+    val (cent, post) = new IvfBase(spark, dir).open()
     // frozen-quantizer append, computed ONCE per shard and persisted to
     // the lane: ONLY the arriving shard is quantized, and assigned by
     // the same (min dist, min cid) rule as the trainer
-    graft.sources.IndexStore.appendSegment(
+    IndexStore.appendSegment(
       spark, dir, "embeddings", "ivfsq_post_base", "shard9") {
-      val shard = Star.table(spark, dir, "embeddings").filter(isNew)
-        .select(col("vec_id"),
-          expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
-            .as("varr"),
+      val shard = Star.table(spark, dir, "embeddings").filter(ivfArrival)
+        .select(col("vec_id"), milliQuant.as("varr"),
           asDouble("embedding").as("v"))
-      val sassign = shard.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("cid"), graft.functions.VectorFunctions
-          .vectorDistSq(col("varr"), col("carr")).as("d"))
-        .groupBy("vec_id")
-        .agg(min(struct(col("d"), col("cid"))).as("m"))
-        .select(col("vec_id"), col("m.cid").as("cid"))
-      shard.select(col("vec_id"), col("v")).join(sassign, "vec_id")
+      shard.select(col("vec_id"), col("v"))
+        .join(frozenAssign(shard, cent).select("vec_id", "cid"), "vec_id")
     }
     // lane maintenance rides along (no-op until segments accumulate)
-    graft.sources.IndexStore.compactAppends(
+    IndexStore.compactAppends(
       spark, dir, "embeddings", "ivfsq_post_base", maxSegments = 2)
-    val shardPost = graft.sources.IndexStore
-      .readAppends(spark, dir, "embeddings", "ivfsq_post_base").get
+    val shardPost =
+      IndexStore.readAppends(spark, dir, "embeddings", "ivfsq_post_base").get
     // serve over the union through the ONE shared serve plan — the
     // probed-cell isin filter pushes through the union, so the base
     // postings keep their static directory pruning while the
@@ -670,39 +690,19 @@ object Similarity {
     * map-side over postings; the output is nlist rows regardless of
     * corpus size. */
   def annIvfDrift(spark: SparkSession, dir: String): DataFrame = {
-    val isNew = col("vec_id") % 10 === 9
-    lazy val trained =
-      ivfTrained(quantVecs(spark, dir).filter(!isNew))
-    val cent = graft.sources.IndexStore.cachedTable(
-      spark, dir, "embeddings", "ivfsq_cent_base") { trained._1 }
     // base cell membership comes from the PERSISTED postings — the index
-    // as built (same IndexStore identity as annIvfAppend's serve), never
-    // a re-assignment; only the distance to the serving centroid is
-    // computed here
-    val post = graft.sources.IndexStore.cachedPartitionedTable(
-      spark, dir, "embeddings", "ivfsq_post_base", Seq("cid")) {
-      Star.table(spark, dir, "embeddings").filter(!isNew)
-        .select(col("vec_id"), asDouble("embedding").as("v"))
-        .join(trained._2, "vec_id")
-    }
-    val qarr = expr(
-      "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
-    val base = Star.table(spark, dir, "embeddings").filter(!isNew)
-      .select(col("vec_id"), qarr.as("varr"))
+    // as built, never a re-assignment; only the distance to the serving
+    // centroid is computed here
+    val (cent, post) = new IvfBase(spark, dir).open()
+    val base = Star.table(spark, dir, "embeddings").filter(!ivfArrival)
+      .select(col("vec_id"), milliQuant.as("varr"))
       .join(post.select("vec_id", "cid"), "vec_id")
       .join(broadcast(cent), "cid")
       .select(col("vec_id"), col("cid"), graft.functions.VectorFunctions
         .vectorDistSq(col("varr"), col("carr")).as("d"))
-    // arrivals follow the append rule: min-(d, cid) over the frozen
-    // serving centroids
-    val shard = Star.table(spark, dir, "embeddings").filter(isNew)
-      .select(col("vec_id"), qarr.as("varr"))
-      .crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("cid"), graft.functions.VectorFunctions
-        .vectorDistSq(col("varr"), col("carr")).as("d"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d"), col("cid"))).as("m"))
-      .select(col("vec_id"), col("m.cid").as("cid"), col("m.d").as("d"))
+    // arrivals follow the append rule over the frozen serving centroids
+    val shard = frozenAssign(Star.table(spark, dir, "embeddings")
+      .filter(ivfArrival).select(col("vec_id"), milliQuant.as("varr")), cent)
     val b = base.groupBy("cid")
       .agg(count(lit(1)).as("n_base"), sum("d").as("sum_d_base"))
     val s = shard.groupBy("cid")
@@ -784,55 +784,22 @@ object Similarity {
     * predates the takedown) served with the tombstoned vectors
     * excluded. */
   def annIvfRetract(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nprobe = 4
-    // SAME IndexStore identity as annIvfServe — retraction serves the
-    // existing snapshot, it never rebuilds
-    lazy val trained = ivfTrained(quantVecs(spark, dir))
-    val cent = graft.sources.IndexStore.cachedTable(
-      spark, dir, "embeddings", "ivfsq_cent") { trained._1 }
-    val post = graft.sources.IndexStore.cachedPartitionedTable(
-      spark, dir, "embeddings", "ivfsq_post", Seq("cid")) {
-      Star.table(spark, dir, "embeddings")
-        .select(col("vec_id"), asDouble("embedding").as("v"))
-        .join(trained._2, "vec_id")
-    }
+    val (cent, post) = new IvfFull(spark, dir).open()
     // NO broadcast hint on the tombstone side: the MODELED set here is a
     // residue class (a corpus fraction, chosen so the takedown provably
     // changes results at every harness scale), while a real takedown
     // list is policy-bounded — the planner should pick broadcast when
     // the list is small and shuffle when it is not, the same no-hint
     // doctrine as semanticDedupKeep's drop set.
-    val tombstones = Star.table(spark, dir, "embeddings")
+    ivfServeTop3(spark, dir, cent,
+      post.join(ivfTombstones(spark, dir), Seq("vec_id"), "left_anti"))
+  }
+
+  /** The modeled IVF takedown set: vec_id % 10 IN (6, 7). */
+  private def ivfTombstones(spark: SparkSession, dir: String): DataFrame =
+    Star.table(spark, dir, "embeddings")
       .filter((col("vec_id") % 10).isin(6, 7))
       .select("vec_id")
-    val qv = Star.table(spark, dir, "embeddings").filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"),
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
-          .as("qarr"),
-        asDouble("embedding").as("qv"))
-    val qdist = qv.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("cid"), graft.functions.VectorFunctions
-        .vectorDistSq(col("qarr"), col("carr")).as("d"))
-    val probeW = Window.partitionBy("q_id").orderBy(col("d"), col("cid"))
-    val probes = qdist.withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nprobe)
-      .select("q_id", "cid")
-    val cids = probes.select("cid").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val live = post.filter(col("cid").isin(cids.toIndexedSeq: _*))
-      .join(tombstones, Seq("vec_id"), "left_anti")
-    val scored = live.join(probes, Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(qv.select(col("q_id"), col("qv")), Seq("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine("qv", "v").as("cosine"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .orderBy("q_id", "rnk")
-  }
 
   /** Oracle for [[annIvfRetract]]: the FULL-corpus IVF chain (index
     * built before the takedown) served with tombstoned vectors
@@ -868,57 +835,21 @@ object Similarity {
     * plan. The coarse quantizer stays frozen (centroids don't move on
     * deletes — drift triggers the next retrain, which is the OTHER
     * maintenance op, [[annIvfRetrain]]; a rewrite only sheds rows).
-    * Own snapshot identity (ivf_post_rw): the shared ivf_post snapshot
-    * must keep serving the tombstone-form queries unchanged. Shares
+    * Own postings snapshot ([[IvfFull]]'s `ivfsq_post_rw`): the shared
+    * `ivfsq_post` must keep serving the tombstone form unchanged. Shares
     * [[annIvfRetract]]'s oracle verbatim. */
   def annIvfRewrite(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nprobe = 4
-    lazy val trained = ivfTrained(quantVecs(spark, dir))
-    val cent = graft.sources.IndexStore.cachedTable(
-      spark, dir, "embeddings", "ivfsq_cent") { trained._1 }
-    val post = graft.sources.IndexStore.cachedPartitionedTable(
-      spark, dir, "embeddings", "ivfsq_post_rw", Seq("cid")) {
-      Star.table(spark, dir, "embeddings")
-        .select(col("vec_id"), asDouble("embedding").as("v"))
-        .join(trained._2, "vec_id")
+    val ivf = new IvfFull(spark, dir)
+    val cent = ivf.cent
+    val post = ivf.postRw
+    IndexStore.majorRewritePartitioned(spark, dir, "embeddings",
+      "ivfsq_post_rw", "g2", Seq("cid"), Seq("vec_id"))(post) {
+      ivfTombstones(spark, dir)
     }
-    graft.sources.IndexStore.majorRewritePartitioned(spark, dir,
-      "embeddings", "ivfsq_post_rw", "g2", Seq("cid"), Seq("vec_id"))(post) {
-      Star.table(spark, dir, "embeddings")
-        .filter((col("vec_id") % 10).isin(6, 7))
-        .select("vec_id")
-    }
-    val served = graft.sources.IndexStore.openTable(spark, dir,
-      "embeddings", graft.sources.IndexStore.servingName(
-        dir, "embeddings", "ivfsq_post_rw"))
-    val qv = Star.table(spark, dir, "embeddings").filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"),
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
-          .as("qarr"),
-        asDouble("embedding").as("qv"))
-    val qdist = qv.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("cid"), graft.functions.VectorFunctions
-        .vectorDistSq(col("qarr"), col("carr")).as("d"))
-    val probeW = Window.partitionBy("q_id").orderBy(col("d"), col("cid"))
-    val probes = qdist.withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nprobe)
-      .select("q_id", "cid")
-    val cids = probes.select("cid").distinct()
-      .collect().map(_.getInt(0)).sorted
-    // probed-cell partition pruning against the REWRITTEN generation;
-    // no tombstone anti-join — the takedown is physical
-    val live = served.filter(col("cid").isin(cids.toIndexedSeq: _*))
-    val scored = live.join(probes, Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(qv.select(col("q_id"), col("qv")), Seq("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine("qv", "v").as("cosine"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 3)
-      .orderBy("q_id", "rnk")
+    // probed-cell pruning against the REWRITTEN generation; no tombstone
+    // anti-join — the takedown is physical
+    ivfServeTop3(spark, dir, cent, IndexStore.openTable(spark, dir,
+      "embeddings", IndexStore.servingName(dir, "embeddings", "ivfsq_post_rw")))
   }
 
   /** IVF RETRAIN-AND-SWAP — the executor for what [[annIvfDrift]]
@@ -944,52 +875,20 @@ object Similarity {
     * postings scan, exact top-3) is identical to [[annIvfServe]]'s. */
   private[graft] final class IvfRetrain(
       spark: SparkSession, dir: String, alias: String) {
-    import graft.sources.IndexStore
 
-    /** The frozen-quantizer generation (bootstrap) — SAME IndexStore
-      * identities as [[annIvfAppend]]/[[annIvfDrift]]: base-corpus
-      * trainer, base-corpus postings. */
-    private def frozenGen(): (DataFrame, DataFrame) = {
-      val isNew = col("vec_id") % 10 === 9
-      lazy val trained =
-        ivfTrained(quantVecs(spark, dir).filter(!isNew))
-      val cent = IndexStore.cachedTable(
-        spark, dir, "embeddings", "ivfsq_cent_base") { trained._1 }
-      val post = IndexStore.cachedPartitionedTable(
-        spark, dir, "embeddings", "ivfsq_post_base", Seq("cid")) {
-        Star.table(spark, dir, "embeddings").filter(!isNew)
-          .select(col("vec_id"), asDouble("embedding").as("v"))
-          .join(trained._2, "vec_id")
-      }
-      (cent, post)
-    }
-
-    /** The retrained generation: full-corpus trainer over persisted ∪
-      * arrivals — SAME IndexStore identities as [[annIvfServe]] (the
-      * retrained index over everything IS the full-corpus snapshot). */
-    private def retrainedGen(): (DataFrame, DataFrame) = {
-      lazy val trained = ivfTrained(quantVecs(spark, dir))
-      val cent = IndexStore.cachedTable(
-        spark, dir, "embeddings", "ivfsq_cent") { trained._1 }
-      val post = IndexStore.cachedPartitionedTable(
-        spark, dir, "embeddings", "ivfsq_post", Seq("cid")) {
-        Star.table(spark, dir, "embeddings")
-          .select(col("vec_id"), asDouble("embedding").as("v"))
-          .join(trained._2, "vec_id")
-      }
-      (cent, post)
-    }
-
-    /** Steady state: ensure the frozen generation exists and the alias
-      * serves SOMETHING (never clobbers a later promotion). */
+    /** Steady state: ensure the frozen generation ([[IvfBase]]) exists
+      * and the alias serves SOMETHING (never clobbers a later
+      * promotion). */
     def init(): Unit = {
-      frozenGen()
+      new IvfBase(spark, dir).open()
       IndexStore.promoteIfAbsent(dir, "embeddings", alias, "frozen")
     }
 
-    /** Build + publish the retrained snapshot. Does NOT touch the
+    /** Build + publish the retrained snapshot: the full-corpus trainer
+      * over persisted ∪ arrivals ([[IvfFull]] — the retrained index over
+      * everything IS the full-corpus snapshot). Does NOT touch the
       * alias — serving continues from the old generation. */
-    def rebuild(): Unit = { retrainedGen(); () }
+    def rebuild(): Unit = { new IvfFull(spark, dir).open(); () }
 
     /** The atomic pointer swap. */
     def promote(): Unit =
@@ -997,11 +896,11 @@ object Similarity {
 
     /** Serve through the alias — whatever generation it names NOW. */
     def serve(): DataFrame = {
-      val (cent, post) =
-        IndexStore.resolveAlias(dir, "embeddings", alias) match {
-          case Some("retrained") => retrainedGen()
-          case _ => frozenGen()
-        }
+      val (cent, post) = (IndexStore.resolveAlias(dir, "embeddings", alias)
+        match {
+          case Some("retrained") => new IvfFull(spark, dir)
+          case _ => new IvfBase(spark, dir)
+        }).open()
       ivfServeTop3(spark, dir, cent, post)
     }
   }
@@ -1370,9 +1269,7 @@ object Similarity {
     * twice). */
   private def quantVecs(spark: SparkSession, dir: String): DataFrame = {
     val vecsPlan = Star.fan(spark, Star.table(spark, dir, "embeddings"), "vec_id")
-      .select(col("vec_id"),
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
-          .as("varr"))
+      .select(col("vec_id"), milliQuant.as("varr"))
     // localCheckpoint, NOT .rdd.persist (r16): every k-means iteration's
     // two reads re-decoded boxed Row arrays from the persisted-Row leaf;
     // the checkpoint serves InternalRows and keeps plan stats.
@@ -2222,16 +2119,31 @@ object Similarity {
     cappedChain(spark, base, shard, served, sb, idxPop)
   }
 
-  /** The append-lane snapshot family behind [[semanticDedupCappedAppend]]
-    * (and its fixed-shard probe seam): base index over two thirds of the
-    * corpus, the last third appended ONCE through both the index lane and
-    * the counts lane (same segId — the two appends converge independently
-    * under at-least-once retry), returning (served bands, populations). */
+  /** The append-lane snapshot family behind [[semanticDedupCappedAppend]]:
+    * [[lockstepLaneIndex]] under `emblshr3a_*`, returning (served bands
+    * = base ∪ lane, populations). */
   private def cappedAppendParts(spark: SparkSession, dir: String,
       base: DataFrame, sb: DataFrame): (DataFrame, DataFrame) = {
-    import graft.sources.IndexStore
+    val (name, baseIdx) = lockstepLaneIndex(spark, dir, "emblshr3a", base)
+    val served = IndexStore.readAppends(spark, dir, "embeddings", name)
+      .map(a => baseIdx.unionByName(a.select(
+        Seq("vec_id", "band_id", "h").map(col): _*)))
+      .getOrElse(baseIdx)
+    val idxPop = cappedPopRaw(spark, dir, name, sb)(baseIdx)
+    (served, idxPop)
+  }
+
+  /** A residual-banded snapshot maintained through its lanes, named
+    * `<prefix>_<planes>x<bands>`: the base index over the vec_id % 3 ≠ 1
+    * vectors of `base`, the rest appended ONCE through both the index
+    * lane and the counts lane (same segId — the two appends converge
+    * independently under at-least-once retry). Returns (name, base
+    * index). Users: [[cappedAppendParts]] (`emblshr3a`) and
+    * [[semanticRewriteServingIndex]] (`emblshr3rw`). */
+  private def lockstepLaneIndex(spark: SparkSession, dir: String,
+      prefix: String, base: DataFrame): (String, DataFrame) = {
     val (planes, bands) = defaultGeometry(spark, dir)
-    val name = s"emblshr3a_${planes}x$bands"
+    val name = s"${prefix}_${planes}x$bands"
     val keys = Seq("band_id", "h")
     val early = base.filter(col("vec_id") % 3 =!= 1)
     val late = base.filter(col("vec_id") % 3 === 1)
@@ -2247,12 +2159,7 @@ object Similarity {
       spark, dir, "embeddings", name, "late", keys) {
       semanticResidualBandsOf(spark, dir, late, planes, bands)
     }
-    val served = IndexStore.readAppends(spark, dir, "embeddings", name)
-      .map(a => baseIdx.unionByName(a.select(
-        (Seq("vec_id") ++ keys).map(col): _*)))
-      .getOrElse(baseIdx)
-    val idxPop = cappedPopRaw(spark, dir, name, sb)(baseIdx)
-    (served, idxPop)
+    (name, baseIdx)
   }
 
   /** [[semanticDedupIncremental]] PINNED at the 16-band × 16-bit cap
@@ -2507,30 +2414,15 @@ object Similarity {
   }
 
   /** The maintenance half of [[semanticDedupRewrite]] (build → lockstep
-    * append → major rewrite → promoted generation). Build-once per
-    * corpus; returns the serving generation's table. */
+    * append, [[lockstepLaneIndex]] under `emblshr3rw_*` → major rewrite
+    * → promoted generation). Build-once per corpus; returns the serving
+    * generation's table. */
   private def semanticRewriteServingIndex(spark: SparkSession,
       dir: String): DataFrame = {
-    import graft.sources.IndexStore
-    val (planes, bands) = defaultGeometry(spark, dir)
-    val name = s"emblshr3rw_${planes}x$bands"
     val keys = Seq("band_id", "h")
     val base = Star.table(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble("embedding").as("v"))
-    val early = base.filter(col("vec_id") % 3 =!= 1)
-    val late = base.filter(col("vec_id") % 3 === 1)
-    val baseIdx = IndexStore.cachedBucketTable(
-      spark, dir, "embeddings", name,
-      semanticBucketsFor(spark, dir), keys, keys) {
-      semanticResidualBandsOf(spark, dir, early, planes, bands)
-    }
-    IndexStore.appendSegment(spark, dir, "embeddings", name, "late") {
-      semanticResidualBandsOf(spark, dir, late, planes, bands)
-    }
-    IndexStore.appendCountsSegment(
-      spark, dir, "embeddings", name, "late", keys) {
-      semanticResidualBandsOf(spark, dir, late, planes, bands)
-    }
+    val (name, baseIdx) = lockstepLaneIndex(spark, dir, "emblshr3rw", base)
     IndexStore.majorRewrite(spark, dir, "embeddings", name, "g2",
       semanticBucketsFor(spark, dir), keys, keys, Seq("vec_id"),
       countsKeyCols = Some(keys))(baseIdx) {

@@ -600,9 +600,12 @@ object Training {
     * routing pass at small corpus scales), routed past it (a serving
     * JVM's residency must not scale with index size). */
   private[graft] sealed trait FamilyResidency
-  private[graft] case object FamilyWhole extends FamilyResidency
-  private[graft] case object FamilyRouted extends FamilyResidency
-  private[graft] case object FamilyAdaptive extends FamilyResidency
+  /** The residencies that load a family into the serving JVM
+    * ([[contamBloom]]); [[FamilyDistributed]] never does. */
+  private[graft] sealed trait LoadedResidency extends FamilyResidency
+  private[graft] case object FamilyWhole extends LoadedResidency
+  private[graft] case object FamilyRouted extends LoadedResidency
+  private[graft] case object FamilyAdaptive extends LoadedResidency
 
   /** [[FamilyDistributed]] is the 1000-executor form (r14 verdict item
     * 1's endgame): NO merged family exists anywhere — the arriving
@@ -630,7 +633,7 @@ object Training {
 
   /** The serve family at the requested residency. */
   private def contamBloom(spark: SparkSession, dir: String,
-      test: DataFrame, residency: FamilyResidency)
+      test: DataFrame, residency: LoadedResidency)
       : graft.functions.BloomFamily = {
     import graft.sources.IndexStore
     val nb = contamBucketsFor(spark, dir)
@@ -814,18 +817,6 @@ object Training {
           col("n_shingles")).as("contamination"))
       .orderBy("doc_id")
 
-  /** The serve chain body: persisted bucketed n-gram index + its BLOOM
-    * SIDE-FILE (r12 verdict item 2 — the one serve chain that was
-    * honestly linear in index size per arrival). The shard's shingles
-    * are prefiltered through the snapshot's bloom BEFORE any join, so
-    * the join input is ≈ the shard's true hits + the bloom's 1 % false
-    * positives instead of every shingle of every arriving document;
-    * the join itself stays EXACT (inner, on the index's bucketed key),
-    * so bloom fpp is correctness-neutral and the DuckDB oracle is
-    * unchanged. Per-doc totals are map-side (a group-by of the shard
-    * alone) — they never needed the index. Join strategy is the
-    * planner's: survivors are usually broadcast-small, but a massive
-    * arrival batch falls back to the bucket-co-located shuffle join. */
   /** Per-task shard-local bloom prefilter — the [[FamilyDistributed]]
     * body. The arrival repartitions by `pmod(hash(h), shards)` (the
     * family's own routing), then each task lazily OR-merges just the
@@ -876,6 +867,18 @@ object Training {
       .toDF("doc_id", "h")
   }
 
+  /** The serve chain body: persisted bucketed n-gram index + its BLOOM
+    * SIDE-FILE (r12 verdict item 2 — the one serve chain that was
+    * honestly linear in index size per arrival). The shard's shingles
+    * are prefiltered through the snapshot's bloom BEFORE any join, so
+    * the join input is ≈ the shard's true hits + the bloom's 1 % false
+    * positives instead of every shingle of every arriving document;
+    * the join itself stays EXACT (inner, on the index's bucketed key),
+    * so bloom fpp is correctness-neutral and the DuckDB oracle is
+    * unchanged. Per-doc totals are map-side (a group-by of the shard
+    * alone) — they never needed the index. Join strategy is the
+    * planner's: survivors are usually broadcast-small, but a massive
+    * arrival batch falls back to the bucket-co-located shuffle join. */
   private def contaminationServeOf(spark: SparkSession, dir: String,
       shardPred: Column, residency: FamilyResidency,
       residentAcc: Option[org.apache.spark.util.CollectionAccumulator[
@@ -890,25 +893,22 @@ object Training {
     val index = contamIndex(spark, dir)
     val shard = docs.filter(shardPred)
     val test = contamShingled(spark, shard)
-    if (residency == FamilyDistributed) {
-      val sm = graft.sources.IndexStore.bloomShardFileMap(
-        spark, dir, "documents", "bench_ngrams", "h",
-        contamBucketsFor(spark, dir))(index)
-      val survivors = distributedBloomFilter(spark, test, sm, residentAcc)
-      val hits = survivors.join(index, Seq("h"))
-        .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
-      return contamAssemble(contamTotalsOf(spark, shard), hits)
+    val survivors = residency match {
+      case FamilyDistributed =>
+        val sm = graft.sources.IndexStore.bloomShardFileMap(
+          spark, dir, "documents", "bench_ngrams", "h",
+          contamBucketsFor(spark, dir))(index)
+        distributedBloomFilter(spark, test, sm, residentAcc)
+      case r: LoadedResidency =>
+        // custom expression, not BloomFilterMightContain(Literal(bloom), _):
+        // a corpus-scaled bloom inside a Literal makes Catalyst hash/compare
+        // the full bit array on every canonicalization during optimization —
+        // a ~4 s per-serve plateau once the ×100 corpus hit the 32 MB cap
+        // (probe numbers in BASELINE.md). The family compares by reference.
+        test.filter(graft.functions.BloomOps.familyMightContainLong(
+          col("h"), contamBloom(spark, dir, test, r)))
     }
-    val bloom = contamBloom(spark, dir, test, residency)
-    // custom expression, not BloomFilterMightContain(Literal(bloom), _):
-    // a corpus-scaled bloom inside a Literal makes Catalyst hash/compare
-    // the full bit array on every canonicalization during optimization —
-    // a ~4 s per-serve plateau once the ×100 corpus hit the 32 MB cap
-    // (probe numbers in BASELINE.md). The family compares by reference.
-    val mightContain =
-      graft.functions.BloomOps.familyMightContainLong(col("h"), bloom)
-    val hits = test.filter(mightContain)
-      .join(index, Seq("h"))
+    val hits = survivors.join(index, Seq("h"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
     contamAssemble(contamTotalsOf(spark, shard), hits)
   }

@@ -279,6 +279,21 @@ class PlanSpec extends SparkSuite {
         scanLine.get)
   }
 
+  test("annIvfRetract: the tombstone anti-join keeps the probed-cell " +
+    "pruning on the postings scan") {
+    val p = plan(Similarity.annIvfRetract(spark, dir))
+    // the cell filter is applied above the anti-join; Catalyst must push
+    // it below, into the persisted postings scan
+    val scanLine = p.split("\n").find(_.contains("graft_idx_ivfsq_post"))
+    assert(scanLine.isDefined,
+      "retract must scan the persisted postings\n" + p)
+    assert(scanLine.get.contains("PartitionFilters: [cid") &&
+      (scanLine.get.contains(" IN ") || scanLine.get.contains(" INSET ")),
+      "postings scan must prune by probed cell ids\n" + scanLine.get)
+    assert(p.contains("LeftAnti"),
+      "tombstones are excluded by an anti-join\n" + p)
+  }
+
   test("annIvfRewrite: the REWRITTEN generation still prunes to the " +
     "probed cells, and no anti-join survives in the plan") {
     val p = plan(Similarity.annIvfRewrite(spark, dir))
