@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on
   * `$SPARK_GRAFT_SF_DIR`, printing ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -14,37 +12,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "2").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Testdata parquet timestamps carry isAdjustedToUTC=false; read them as
-      // session-TZ (UTC) TIMESTAMP, not TIMESTAMP_NTZ, so timestamp functions
-      // (unix_micros, watermarks) keep their pre-Spark-4-inference semantics.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // ~200 queries x several codegen stages each overflow the default
-      // 100-entry generated-class cache, so every timed pass recompiles
-      // stages the warm-up already compiled (janino ~10-50 ms/stage —
-      // pure context tax on the tiny-query floor). Size it to hold the
-      // whole suite. Static conf: must be set before session creation.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k2=v2": extra session confs for A/B probes
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not k=v (full value: " +
-              s"${sys.env("SPARK_GRAFT_CONF")})")
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-bench", Harness.cpus(32), "ERROR")
 
     // Columnar buffer pool (r12 verdict item 1): one analyzed + cached
     // set of star relations shared across the whole bench pass,
@@ -66,45 +35,13 @@ object Bench {
       else {
         graft.operators.Star.pinTables(spark, sfDir)
         // the pinned DataFrames' columnar-buffer RDDs are what
-        // getPersistentRDDs reports — snapshot them so cleanup can
-        // release everything EXCEPT the pool
+        // getPersistentRDDs reports — snapshot them so Harness.cleanup
+        // releases everything EXCEPT the pool
         spark.sparkContext.getPersistentRDDs.keySet.toSet
       }
 
-    // Between-query hygiene, UNTIMED: queries are independent, but the
-    // streaming replays register memory-sink tables (whole result sets
-    // pinned on the heap) and iterative queries persist RDD leaves — left
-    // in place they tax every query that runs after them (measured: the
-    // alphabetically-adjacent q_string_*/q_text_* block ran ~2x slower
-    // after the round-4 stream block grew). Clearing between runs makes
-    // each timing stand alone. DataFrame-level persists (the winnow
-    // materialize site) release through their registry — df.unpersist
-    // removes the CacheManager entry too, which a raw RDD unpersist
-    // would leave stale — instead of a global clearCache that would
-    // evict the pinned pool.
-    def cleanup(gc: Boolean): Unit = {
-      spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("graft_stream"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      graft.operators.Dedup.releaseMaterialized()
-      if (!pin) spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !pinnedIds(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      // Timed passes only: a full collection between queries makes each
-      // timing start from the same heap state instead of inheriting the
-      // allocation debt of ~200 preceding queries (measured as 160-230%
-      // second-run spreads on state-heavy neighbors). Untimed by
-      // construction — cleanup runs before the timer starts. A/B (r8):
-      // -6.4 s single-run / -5.4 s best-of-n together with the codegen
-      // cache sizing; a stream-family exclusion variant measured worse
-      // (the apparent stream+GC penalty was host drift — streams timed
-      // identically with and without it).
-      if (gc) System.gc()
-    }
-
     def exec(name: String, gc: Boolean = false): Double = {
-      cleanup(gc)
+      Harness.cleanup(spark, pinnedIds, gc) // untimed
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir)

@@ -1,23 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Testdata parquet timestamps carry isAdjustedToUTC=false; read them as
-      // session-TZ (UTC) TIMESTAMP, not TIMESTAMP_NTZ, so timestamp functions
-      // (unix_micros, watermarks) keep their pre-Spark-4-inference semantics.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify", Harness.cpus(4), "WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b narrows the dump for focused iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -31,24 +19,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name
       }
-      // Bench-style between-query hygiene: the serve chains pin
-      // persisted-RDD leaves (winnowPairs contract — callers unpersist)
-      // and the streaming replays register memory-sink views; this loop
-      // runs all 222 queries in ONE JVM, so without a release here the
-      // MEMORY_ONLY blocks of every preceding query stay resident for
-      // the whole dump (eviction keeps results correct, but memory
-      // pressure can slow or destabilize the run).
-      spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("graft_stream"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      // the winnow-materialize sites register their persisted frames in
-      // a release queue (Bench's contract); without draining it here the
-      // queue retains one analyzed plan tree per construction for the
-      // whole 223-query dump
-      graft.operators.Dedup.releaseMaterialized()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // the dump runs every query in ONE JVM: release what each one
+      // pinned before the next (Harness.cleanup)
+      Harness.cleanup(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,7 +1,5 @@
 package graft.inmet
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point for the full INMET pipeline — the engine's equivalent of
   * the reference's `spark-submit job_parquet.py` + DAG chain. Usage:
   *
@@ -22,22 +20,10 @@ object InmetPipelineMain {
     val Array(inputGlob, stageDir, analyticDir) = args.take(3)
     val partitioned = args.length == 4 && args(3) == "--partitioned"
     val catalog = args.length == 4 && args(3) == "--catalog"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-inmet-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Testdata parquet timestamps carry isAdjustedToUTC=false; read them as
-      // session-TZ (UTC) TIMESTAMP, not TIMESTAMP_NTZ, so timestamp functions
-      // (unix_micros, watermarks) keep their pre-Spark-4-inference semantics.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // warehouse dir is a static conf — set before session creation
-    if (catalog) builder.config("spark.sql.warehouse.dir", stageDir)
-    val spark = builder
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("graft-inmet-pipeline",
+      graft.Harness.cpus(4), "WARN", sys.env.get("SPARK_GRAFT_MASTER"),
+      // warehouse dir is a static conf — set before session creation
+      if (catalog) Seq("spark.sql.warehouse.dir" -> stageDir) else Nil)
     if (catalog) {
       Pipeline.runCatalog(spark, inputGlob)
       val n = spark.sql("SELECT count(*) FROM analitic.cidade_kpis_mensal")

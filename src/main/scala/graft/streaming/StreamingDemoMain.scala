@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CLI demo of the streaming + multimodal surfaces. Usage:
@@ -17,20 +16,9 @@ object StreamingDemoMain {
     require(args.length == 2,
       "usage: StreamingDemoMain <eventsParquetDir> <docsParquetFile>")
     val Array(eventsDir, docsFile) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-streaming-demo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Testdata parquet timestamps carry isAdjustedToUTC=false; read them as
-      // session-TZ (UTC) TIMESTAMP, not TIMESTAMP_NTZ, so timestamp functions
-      // (unix_micros, watermarks) keep their pre-Spark-4-inference semantics.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session("graft-streaming-demo",
+      graft.Harness.cpus(4), "WARN")
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val stream = EventsStreaming.readEvents(spark, eventsDir)
     val wq = EventsStreaming.hourlyWindowed(stream)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.sources.IndexStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Second-JVM worker for the CROSS-PROCESS lifecycle stress
@@ -44,13 +43,7 @@ object LifecycleStressMain {
     }
     val Array(dir, lane, alias, gen, loStr, hiStr) = args.take(6)
     val (lo, hi) = (loStr.toInt, hiStr.toInt)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("graft-lifecycle-stress", 2, "ERROR")
     try {
       var seg = lo
       while (seg < hi) {
@@ -70,13 +63,7 @@ object LifecycleStressMain {
 
   private def rewriteMain(args: Array[String]): Unit = {
     val Array(_, dir, lane, gen) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("graft-lifecycle-stress", 2, "ERROR")
     try {
       import spark.implicits._
       // fixture contract shared with MajorRewriteSpec: ids 0-99 (base)
@@ -95,13 +82,7 @@ object LifecycleStressMain {
   private def appendLoopMain(args: Array[String]): Unit = {
     val Array(_, dir, lane, nStr) = args.take(4)
     val n = nStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("graft-lifecycle-stress", 2, "ERROR")
     try {
       var i = 0
       while (i < n) {

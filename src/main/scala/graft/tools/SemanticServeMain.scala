@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-JVM worker for the persisted-residual-model spec
   * (ConcurrentLifecycleSpec): serves the semantic incremental-dedup
   * chain in a FRESH process — empty catalog, empty in-JVM memos — so
@@ -16,14 +14,7 @@ import org.apache.spark.sql.SparkSession
 object SemanticServeMain {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("graft-semantic-serve", 4, "ERROR")
     try {
       val rows = graft.operators.Similarity
         .semanticDedupIncremental(spark, dir)

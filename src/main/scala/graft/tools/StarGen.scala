@@ -43,14 +43,8 @@ object StarGen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val mult = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-stargen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("graft-stargen",
+      graft.Harness.cpus(32), "ERROR")
     generate(spark, out, mult)
     spark.stop()
   }

@@ -23,8 +23,11 @@ object ChildJvm {
       "java.base/sun.security.action", "java.base/sun.util.calendar"
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val log = java.nio.file.Files.createTempFile("child_jvm", ".log")
+    // the parent's temp dir, so both processes share one index store
     val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx3g",
-      "-Dspark.sql.session.timeZone=UTC") ++ props.map(p => s"-D$p") ++
+      "-Dspark.sql.session.timeZone=UTC",
+      s"-Djava.io.tmpdir=${System.getProperty("java.io.tmpdir")}") ++
+      props.map(p => s"-D$p") ++
       Seq("-cp", System.getProperty("java.class.path"), mainClass) ++ args
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)

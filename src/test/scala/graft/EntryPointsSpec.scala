@@ -12,7 +12,7 @@ class EntryPointsSpec extends AnyFunSuite {
   private val expected = Set(
     "graft.Bench", "graft.Verify",
     "graft.inmet.InmetPipelineMain", "graft.streaming.StreamingDemoMain",
-    "graft.tools.StarGen", "graft.tools.PlanDump",
+    "graft.tools.StarGen",
     "graft.tools.LifecycleStressMain", "graft.tools.SemanticServeMain")
 
   /** Every compiled main class with a static `main(Array[String])`: the

@@ -6,18 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for suites. Deliberately leaves Spark 4 defaults
   * (ANSI on) in place — the engine must behave identically either way. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // Testdata parquet timestamps carry isAdjustedToUTC=false; read them as
-    // session-TZ (UTC) TIMESTAMP, not TIMESTAMP_NTZ, so timestamp functions
-    // (unix_micros, watermarks) keep their pre-Spark-4-inference semantics.
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session("graft-test", 4, "WARN",
+    conf = Seq("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
 
   def resourcePath(p: String): String =
     getClass.getResource(p).getPath

@@ -70,28 +70,9 @@ class ConcurrentLifecycleSpec extends SparkSuite {
 
     // real second JVM: appends [100,112) + shared [200,203), compacting
     // every 4th append, promoting genB last
-    val javaBin = java.nio.file.Paths
-      .get(System.getProperty("java.home"), "bin", "java").toString
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val log = java.nio.file.Files.createTempFile("stress_child", ".log")
-    val childCmd: Seq[String] =
-      Seq(javaBin) ++ addOpens ++ Seq("-Xmx3g",
-        "-Dspark.sql.session.timeZone=UTC",
-        "-cp", System.getProperty("java.class.path"),
-        "graft.tools.LifecycleStressMain",
-        dir, lane, alias, "genB", "100", "112")
-    val pb = new ProcessBuilder(childCmd: _*)
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(log.toFile)
-    val child = pb.start()
+    val (child, log) = graft.ChildJvm.start(
+      "graft.tools.LifecycleStressMain",
+      Seq(dir, lane, alias, "genB", "100", "112"))
 
     // meanwhile, racing threads in THIS JVM: appends [0,12) + the SAME
     // shared ids the child publishes, interleaved compactions, and a
