@@ -629,12 +629,10 @@ object Dedup {
     // measured map-side broadcast filter; above it the planner shuffles
     // the (h)-keyed anti-join like any other join. Results identical on
     // either path (left_anti semantics; spec-pinned).
-    val bcastGate = spark.conf
-      .getOption("spark.graft.winnow.broadcastDocGate")
-      .map(_.toLong).getOrElse(1L << 21)
     val docCount = Star.table(spark, dir, "documents").count()
     val anti =
-      if (docCount <= bcastGate) all.join(broadcast(heavy), Seq("h"), "left_anti")
+      if (docCount <= Dispatch.WinnowBroadcastDocGate(spark))
+        all.join(broadcast(heavy), Seq("h"), "left_anti")
       else all.join(heavy, Seq("h"), "left_anti")
     val f = anti
       .withColumn("c", count(lit(1)).over(Window.partitionBy("doc_id")))
@@ -849,68 +847,6 @@ object Dedup {
        |SELECT * FROM intra UNION ALL SELECT * FROM cross_pairs
        |ORDER BY id_a, id_b""".stripMargin
 
-  /** Connected components over an undirected edge list (id_a, id_b) →
-    * (doc_id, cluster_id = min doc_id reachable). Iterative min-label
-    * propagation: each round every node takes the min of its own label and
-    * its neighbors' labels; converges in O(graph diameter) rounds.
-    *
-    * Scale notes (the 100 TB story): this is the standard MapReduce-era CC
-    * formulation — per round one shuffle keyed on node id, state is one
-    * (node, label) row per node, never adjacency matrices. Near-dup graphs
-    * are overwhelmingly tiny star-shaped components (diameter 2-4), so the
-    * round count stays single-digit regardless of corpus size; a
-    * large-star/small-star rewrite (O(log n) rounds worst-case) is the
-    * upgrade path if adversarial chains appear. `localCheckpoint` truncates
-    * the per-round lineage so the plan does not grow with iterations. */
-  /** Materialize a (small) iteration frontier: persist its row RDD, force
-    * computation, and wrap it back as a flat `LogicalRDD` plan. This does
-    * BOTH things an iterative algorithm needs and neither `persist` nor
-    * `localCheckpoint` alone provides: the logical lineage is truncated
-    * (each round references the previous frontier twice, so an
-    * un-truncated plan TREE doubles per round — AQE's explain-string
-    * rendering of round ~8 OOMed a 12g heap), and the returned `free`
-    * handle lets the loop release superseded blocks (leaked checkpoint
-    * blocks from earlier rounds were measured degrading every subsequent
-    * query in the session). */
-  private def materializeRound(df: DataFrame)
-      : (DataFrame, () => Unit, Long) = {
-    // MEMORY_AND_DISK (r17 spill-safety sweep, guide §5): an un-gated
-    // MEMORY_ONLY Row pin is an OOM seam at 100 TB edge counts —
-    // pressure now spills the frontier instead of failing the round
-    val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one job materializes the cache AND yields the round metric: the sum
-    // of labels (column 1). Min-label propagation only ever DECREASES a
-    // label, so the sum is strictly decreasing until the fixpoint —
-    // convergence falls out of the materialization job, no extra
-    // compare-join per round.
-    val labelSum = rdd.mapPartitions { it =>
-      var s = 0L; while (it.hasNext) s += it.next().getLong(1); Iterator(s)
-    }.fold(0L)(_ + _)
-    (df.sparkSession.createDataFrame(rdd, df.schema),
-      () => { rdd.unpersist(blocking = false); () },
-      labelSum)
-  }
-
-  /* Small-graph components gate (r16 optimization): near-dup edge sets
-    * are O(duplicate pairs), and at harness scale they are a few hundred
-    * rows — yet every CC consumer paid 4–6 iterative rounds of
-    * join+groupBy+materialize jobs (~0.1 s of pure scheduling each) to
-    * label them. This is the repo's adaptive-dispatch doctrine (the
-    * q_contamination_point limit+collect gate) applied to the cluster
-    * chains: the edge lineage is materialized ONCE (the same
-    * materialization job the distributed path's adjacency build paid
-    * anyway), its row count read off the persisted blocks, and when the
-    * graph is under the gate the components are resolved by a driver
-    * union-find over the collected pairs — one job total instead of one
-    * per round. Bounded by construction: the collect happens only under
-    * the gate (default 2^16 edges ≈ 1 MB of longs), and the
-    * min-id-per-component labels are EXACTLY the iterative fixpoint, so
-    * results are identical on either path (pinned by
-    * CcEquivalenceSpec against the forced-distributed form). Above the
-    * gate the existing distributed loop runs unchanged — at 100 TB dup
-    * rates the dispatch always takes that branch. The gate is
-    * `Star.collectGate`. */
-
   /** Driver union-find over a bounded edge array: every endpoint labeled
     * with the min id reachable from it — the same (doc_id, cluster_id)
     * relation the iterative forms converge to. Path-halving find keeps
@@ -958,17 +894,30 @@ object Dedup {
       StructField("cluster_id", LongType, nullable = false))))
   }
 
-  /** Materialize an edge lineage once and dispatch: Left(result) when the
-    * graph fit under the gate and was resolved on the driver,
+  /** Small-graph components gate (r16): near-dup edge sets are
+    * O(duplicate pairs), and at harness scale a few hundred rows — yet
+    * every CC consumer paid several rounds of join+groupBy+materialize
+    * jobs (~0.1 s of pure scheduling each) to label them. The edge
+    * lineage is materialized ONCE (the job the distributed rounds need
+    * anyway), its row count read off the persisted blocks, and under
+    * [[Dispatch.CollectThreshold]] (default 2^16 edges ≈ 1 MB of longs)
+    * the components are resolved by the driver union-find over the
+    * collected pairs — one job in all. The min-id-per-component labels
+    * are exactly the distributed fixpoint, so both branches give the
+    * same rows (ConnectedComponentsPropertySpec runs both). At 100 TB
+    * dup rates the dispatch always takes the distributed branch.
+    * Returns Left(result) when the graph was resolved on the driver,
     * Right(materialized frame) — persisted, count already forced — for
-    * the distributed loop to consume without re-evaluating the lineage. */
+    * the distributed rounds to consume without re-evaluating the
+    * lineage. */
   private def componentsDispatch(edges: DataFrame)
       : Either[DataFrame, (DataFrame, () => Unit)] = {
     val spark = edges.sparkSession
-    // MEMORY_AND_DISK — see materializeRound (r17 spill-safety sweep)
+    // MEMORY_AND_DISK (r17 spill-safety sweep, guide §5): an un-gated
+    // MEMORY_ONLY Row pin is an OOM seam at 100 TB edge counts
     val rdd = edges.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = rdd.count() // materializes the (expensive) edge lineage once
-    if (n <= Star.collectGate(spark)) {
+    if (n <= Dispatch.CollectThreshold(spark)) {
       val arr = rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
       rdd.unpersist(blocking = false)
       Left(smallComponents(spark, arr))
@@ -977,23 +926,24 @@ object Dedup {
       () => { rdd.unpersist(blocking = false); () }))
   }
 
-  /** Alternating large-star / small-star connected components (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC'14):
-    * converges in O(log n) rounds on ANY graph, where the min-label
-    * propagation below needs diameter+1 — the variant to reach for when
-    * the near-dup graph is not star-shaped (adversarial chains of
-    * almost-identical documents). Both phases are expressed as
-    * (per-center min) joins, never collected adjacency lists, so a
-    * high-degree node costs a groupBy + join, not a buffered row.
+  /** Connected components over an undirected edge list (id_a, id_b) →
+    * (doc_id, cluster_id = min doc_id reachable), by alternating
+    * large-star / small-star rounds (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14). It converges in
+    * O(log n) rounds on ANY graph, so an adversarial chain of
+    * almost-identical documents does not cost the diameter + 1 rounds
+    * of a min-label propagation. Both phases are (per-center min)
+    * joins, never collected adjacency lists, so a high-degree node
+    * costs a groupBy + join, not a buffered row. Self-loops carry no
+    * connectivity and are dropped.
     *
     * Each phase rewires edges (u,v) to (v, m) with m <= the endpoint it
     * replaces, so sum(u+v) over the edge multiset strictly decreases on
-    * any change — the same materialization-job convergence metric the
-    * min-label loop uses (no extra compare join).
-    *
-    * Returns the same (doc_id, cluster_id = min id of component) frame
-    * as [[connectedComponents]]; equivalence is property-tested. */
-  def starComponents(edges0: DataFrame): DataFrame = {
+    * any change: the round's materialization job is also its
+    * convergence test (no extra compare join). Each round is pinned, so
+    * the plan does not grow with the round count. Small graphs resolve
+    * on the driver ([[componentsDispatch]]). */
+  def connectedComponents(edges0: DataFrame): DataFrame = {
     def canon(df: DataFrame): DataFrame =
       df.filter(col("u") =!= col("v"))
         .select(greatest(col("u"), col("v")).as("u"),
@@ -1001,7 +951,7 @@ object Dedup {
         .distinct()
     // materialize an edge frame; metric = sum(u + v), strictly decreasing
     def mat(df: DataFrame): (DataFrame, () => Unit, Long) = {
-      // MEMORY_AND_DISK — see materializeRound (r17 spill-safety sweep)
+      // MEMORY_AND_DISK — see componentsDispatch
       val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val s = rdd.mapPartitions { it =>
         var acc = 0L
@@ -1048,40 +998,6 @@ object Dedup {
           .distinct()
     }
   }
-
-  def connectedComponents(edges: DataFrame): DataFrame =
-    // the dispatch ALSO fixes a distributed-path inefficiency: the
-    // previous adjacency build unioned two selects over the raw edge
-    // lineage, so the (expensive) pair join ran twice — both union
-    // branches now read the one persisted edge materialization
-    componentsDispatch(edges.select(col("id_a"), col("id_b"))) match {
-      case Left(result) => result
-      case Right((e, freeE)) =>
-        val (adj, freeAdj, _) = materializeRound(
-          e.select(col("id_a").as("src"), col("id_b").as("dst"))
-            .union(e.select(col("id_b").as("src"), col("id_a").as("dst"))))
-        freeE()
-        var (labels, freeLabels, labelSum) = materializeRound(
-          adj.select(col("src").as("id")).distinct()
-            .select(col("id"), col("id").as("comp")))
-        var converged = false
-        while (!converged) {
-          val prop = adj.join(labels, adj("dst") === labels("id"))
-            .select(adj("src").as("id"), col("comp"))
-          val (next, freeNext, nextSum) = materializeRound(
-            labels.union(prop).groupBy("id").agg(min("comp").as("comp")))
-          converged = nextSum == labelSum
-          freeLabels()
-          labels = next
-          freeLabels = freeNext
-          labelSum = nextSum
-        }
-        freeAdj()
-        // the final frontier's RDD stays persisted until the returned
-        // frame is garbage-collected (ContextCleaner) — one label-table,
-        // not per-round.
-        labels.select(col("id").as("doc_id"), col("comp").as("cluster_id"))
-    }
 
   /** Dedup cluster resolution: near-dup PAIRS are only half a dedup
     * pipeline — keep-one-per-group needs transitive closure (a~b, b~c ⇒
@@ -1312,7 +1228,7 @@ object Dedup {
       .filter(Star.ratio6(col("shared"),
         col("ca") + col("cb") - col("shared")) >= 0.5)
       .select("id_a", "id_b")
-    val drop = starComponents(verified)
+    val drop = connectedComponents(verified)
       .filter(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
     // no broadcast hint: the drop set is O(duplicates) — at a high dup

@@ -90,7 +90,7 @@ object Graph {
     // truncating division equals the plan's IntegralDivide) — instead of
     // 5 × (join + aggregate + left join) jobs over 25-row frames. Above
     // the gate the distributed loop below runs unchanged.
-    val gate = Star.collectGate(spark)
+    val gate = Dispatch.CollectThreshold(spark)
     val nodesHead =
       if (nEdges <= gate) nodesDf.take(math.min(gate, Int.MaxValue.toLong).toInt)
       else null
@@ -127,17 +127,22 @@ object Graph {
         StructField("rank", DoubleType, nullable = false))))
         .orderBy(col("rank").desc, col("node"))
     } else {
+      // the node set and each round's rank are pinned leaves, the way
+      // the k-means trainer localizes its model per round: a lazy rank
+      // would nest every earlier round, and a node-table scan per
+      // round, into the next round's plan
       val ew = spark.createDataFrame(ewRdd, ewPlan.schema)
-      var rank = nodesDf.withColumn("r", lit(Scale))
+      val nodes = Star.pin(nodesDf)
+      var rank = nodes.withColumn("r", lit(Scale))
       for (_ <- 1 to Iters) {
         val inflow = ew.join(rank, col("src") === col("node"))
           .select(col("dst"), expr("(r * share6) div 1000000").as("c"))
           .groupBy("dst").agg(sum("c").as("inflow"))
-        rank = nodesDf
+        rank = Star.pin(nodes
           .join(inflow, col("node") === col("dst"), "left_outer")
           .select(col("node"),
             (lit(Scale * 15L / 100L) +
-              expr("(coalesce(inflow, bigint(0)) * 85) div 100")).as("r"))
+              expr("(coalesce(inflow, bigint(0)) * 85) div 100")).as("r")))
       }
       val outDeg = ew.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
       rank.join(outDeg.withColumnRenamed("src", "node"),

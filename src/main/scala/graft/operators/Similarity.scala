@@ -1267,7 +1267,7 @@ object Similarity {
   /** Milli-unit integer quantization of the embedding table, materialized
     * ONCE as a persisted-RDD leaf (every k-means iteration reads it
     * twice). */
-  private def quantVecs(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def quantVecs(spark: SparkSession, dir: String): DataFrame = {
     val vecsPlan = Star.fan(spark, Star.table(spark, dir, "embeddings"), "vec_id")
       .select(col("vec_id"), milliQuant.as("varr"))
     // localCheckpoint, NOT .rdd.persist (r16): every k-means iteration's
@@ -1302,7 +1302,8 @@ object Similarity {
     * doctrine) over `vecs`, whose row count is `nRows`: returns (centroids
     * (cid, carr), assignment (vec_id, cid)) after `iters` rounds from
     * the deterministic vec_id < k seed. */
-  private def exactKmeans(vecs: DataFrame, nRows: Long, k: Int, iters: Int)
+  private[graft] def exactKmeans(vecs: DataFrame, nRows: Long, k: Int,
+      iters: Int)
       : (DataFrame, DataFrame) = {
     val spark = vecs.sparkSession
     import spark.implicits._
@@ -1321,8 +1322,8 @@ object Similarity {
     // the forced-distributed path (R17DispatchSpec). Above the gate
     // (default 2^16 vectors) the distributed loop below is unchanged —
     // at 100 TB the dispatch always takes that branch. The gate is
-    // Star.collectGate.
-    if (nRows <= Star.collectGate(spark)) {
+    // Dispatch.CollectThreshold.
+    if (nRows <= Dispatch.CollectThreshold(spark)) {
       val arr = vecs.select(col("vec_id"), col("varr")).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
       def dist(a: Array[Long], b: Array[Long]): Long = {
@@ -1406,11 +1407,9 @@ object Similarity {
     // the broadcast k-row centroid table, reduced map-side by
     // min(struct(d, cid)) — the IDENTICAL (min d, tie-to-lowest-cid)
     // lexicographic-min semantics, one n-row exchange per round.
-    val literalGate = spark.conf
-      .getOption("spark.graft.kmeans.literalMapCells")
-      .map(_.toInt).getOrElse(64)
     def assigned(c: Seq[(Int, Seq[Long])]): DataFrame =
-      if (c.size <= literalGate) vecs.withColumn("cid", bestCid(c))
+      if (c.size <= Dispatch.KmeansLiteralMapCells)
+        vecs.withColumn("cid", bestCid(c))
       else {
         val a = vecs.select(col("vec_id"), col("varr"))
           .crossJoin(broadcast(toDf(c)))

@@ -123,26 +123,16 @@ object Star {
     * recomputing. That is the right default for the local[n] harness
     * and for short-lived intra-query pins (the only uses here), and the
     * wrong one for long-lived cluster state: deployments that need
-    * fault-tolerant pins set `spark.graft.pin.reliable=true` to take
-    * the recompute-safe persist(MEMORY_AND_DISK)+materialize path
-    * (lineage kept, so a lost block is re-derived; branch-identity is
+    * fault-tolerant pins set [[Dispatch.PinReliableKey]] to take the
+    * recompute-safe persist(MEMORY_AND_DISK)+materialize path (lineage
+    * kept, so a lost block is re-derived; branch-identity is
     * spec-pinned). */
   def pin(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption("spark.graft.pin.reliable")
-        .contains("true")) {
+    if (Dispatch.pinReliable(df.sparkSession)) {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count() // materialize eagerly, matching localCheckpoint(eager=true)
       p
     } else df.localCheckpoint(true)
-
-  /** The one driver-collect gate of the small-input dispatches (CC
-    * union-find, PageRank, the k-means trainer): at or under this many
-    * rows the input is collected and finished on the driver, above it
-    * the distributed loop runs. `spark.graft.collectThreshold`, default
-    * 2^16 rows; set it to 0 to force every distributed branch. */
-  def collectGate(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.collectThreshold")
-      .map(_.toLong).getOrElse(1L << 16)
 
   /** `events` has shipped as both parquet TIMESTAMP(NANOS) (which Spark's
     * vectorized reader rejects — read as long nanos, truncate to micros,

@@ -716,28 +716,27 @@ object Training {
     * a literal IN list, and losing below that (fixed overhead: second
     * layout resolve, survivors collect, two extra jobs). This serve
     * CHOOSES: (1) a cheap arrival gate — a shard over
-    * `graft.contam.pointMaxDocs` (default 2000) docs cannot fit the IN
-    * bound, so it takes the bucketed join immediately with NO survivor
-    * materialization (the production path's plan, unchanged); (2) under
-    * the gate, the bloom survivors are pinned once
+    * [[Dispatch.ContamPointMaxDocs]] (default 2000) docs cannot fit the
+    * IN bound, so it takes the bucketed join immediately with NO
+    * survivor materialization (the production path's plan, unchanged);
+    * (2) under the gate, the bloom survivors are pinned once
     * (localCheckpoint — the r14 double-billing lesson) and counted up
-    * to `graft.contam.pointMaxKeys` (default 20 000): within the bound
+    * to `maxKeys` ([[Dispatch.ContamPointMaxKeys]]): within the bound
     * → point path (collected keys pushed as an IN filter over the
     * range-sorted secondary layout, built lazily on first dispatch);
     * over it → the exact bucketed join finishes on the SAME pinned
-    * survivors. Row-identical on every branch (TrainingSpec pins both);
+    * survivors. Row-identical on every branch (TrainingSpec pins all three);
     * deployment note: the IN list only reaches parquet row-group stats
     * past `spark.sql.parquet.pushdown.inFilterThreshold` (default 10 —
     * the measured win was taken at 200 000), but the filter itself is
     * exact either way, so the dispatch is correctness-neutral under any
     * conf. */
   private[graft] def contaminationAdaptiveOf(spark: SparkSession,
-      dir: String, shardPred: Column): DataFrame = {
+      dir: String, shardPred: Column,
+      maxKeys: Int = Dispatch.ContamPointMaxKeys): DataFrame = {
     val docs = contamDocs(spark, dir)
     val shard = docs.filter(shardPred)
-    val maxDocs = java.lang.Long.getLong("graft.contam.pointMaxDocs", 2000L)
-    val maxKeys =
-      java.lang.Long.getLong("graft.contam.pointMaxKeys", 20000L).toInt
+    val maxDocs = Dispatch.ContamPointMaxDocs(spark)
     // the gate asks "more than maxDocs?", not "how many?" — limit+count
     // stops the scan at the bound (CollectLimit reads splits until it
     // has maxDocs+1 rows), so the gate costs O(maxDocs) at any corpus

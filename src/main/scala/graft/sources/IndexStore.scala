@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.Dispatch
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -449,10 +450,10 @@ object IndexStore {
 
   /** Adaptive residency: whole-family load while the family's
     * footprint (shards × bits) stays under
-    * `graft.bloom.wholeFamilyBudgetBytes` (default 32 MB — skips the
-    * extra arrival routing pass at small corpus scales), touched-shard
-    * load past it (the budget is what keeps a serving JVM's residency
-    * from scaling with index size). */
+    * [[Dispatch.BloomWholeFamilyBudgetBytes]] (default 32 MB — skips
+    * the extra arrival routing pass at small corpus scales),
+    * touched-shard load past it (the budget is what keeps a serving
+    * JVM's residency from scaling with index size). */
   def bloomFamilyAdaptive(spark: SparkSession, dir: String,
       srcTable: String, name: String, keyCol: String, shardsHint: Int)
       (index: => DataFrame)(touchedOf: Int => Set[Int])
@@ -655,7 +656,8 @@ object IndexStore {
       // families skip the routing pass entirely
       val footprint = shards.toLong * (bits / 8 + 40)
       val want: Seq[Int] = touchedOf match {
-        case Some(f) if !adaptive || footprint > bloomWholeFamilyBudget =>
+        case Some(f) if !adaptive ||
+            footprint > Dispatch.BloomWholeFamilyBudgetBytes(spark) =>
           f(shards).toSeq.filter(i => i >= 0 && i < shards).sorted
         case _ => 0 until shards
       }
@@ -696,7 +698,8 @@ object IndexStore {
             mergedShard.writeTo(bos)
             val arr = bos.toByteArray
             entry.slots.set(i, arr) // volatile store = safe publication
-            bloomCacheCharge(root.toString, arr.length.toLong)
+            bloomCacheCharge(root.toString, arr.length.toLong,
+              Dispatch.BloomCacheBudgetBytes(spark))
           }
         }
       }
@@ -723,16 +726,12 @@ object IndexStore {
   // byte-budget LRU of lazily-merged family slots (r14 advice: the
   // entry-count-capped clear-all memo held up to 16 corpus-scaled
   // whole families). Access-ordered; eviction drops least-recently-
-  // served roots until loaded bytes fit the budget, never the root
-  // being served. Guarded by IndexStore's lock (all callers hold it).
+  // served roots until loaded bytes fit the budget
+  // (Dispatch.BloomCacheBudgetBytes), never the root being served.
+  // Guarded by IndexStore's lock (all callers hold it).
   private val bloomSlotCache =
     new java.util.LinkedHashMap[String, BloomSlots](16, 0.75f, true)
   private var bloomSlotBytes = 0L
-
-  private def bloomCacheBudget: Long =
-    java.lang.Long.getLong("graft.bloom.cacheBudgetBytes", 256L << 20)
-  private def bloomWholeFamilyBudget: Long =
-    java.lang.Long.getLong("graft.bloom.wholeFamilyBudgetBytes", 32L << 20)
 
   /** Loaded bloom bytes across all memoized snapshots (spec probe). */
   private[graft] def bloomCacheLoadedBytes: Long =
@@ -754,11 +753,11 @@ object IndexStore {
     }
   }
 
-  private def bloomCacheCharge(key: String, n: Long): Unit = {
+  private def bloomCacheCharge(key: String, n: Long, budget: Long): Unit = {
     val e = bloomSlotCache.get(key)
     if (e != null) { e.bytes += n; bloomSlotBytes += n }
     val it = bloomSlotCache.entrySet().iterator()
-    while (bloomSlotBytes > bloomCacheBudget && bloomSlotCache.size > 1 &&
+    while (bloomSlotBytes > budget && bloomSlotCache.size > 1 &&
       it.hasNext) {
       val eldest = it.next()
       if (eldest.getKey != key) {

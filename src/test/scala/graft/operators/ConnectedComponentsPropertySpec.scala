@@ -4,8 +4,9 @@ import graft.SparkSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Property-based check of the distributed connected-components operator
-  * against a driver-side union-find reference on random graphs. */
+/** Property-based check of the connected-components operator — its
+  * driver union-find branch and its distributed large-star/small-star
+  * rounds — against a union-find reference on random graphs. */
 class ConnectedComponentsPropertySpec extends SparkSuite {
   import spark.implicits._
 
@@ -24,10 +25,10 @@ class ConnectedComponentsPropertySpec extends SparkSuite {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  /** Force the distributed CC loop (gate 0) for a block — the adaptive
+  /** Force the distributed CC rounds (gate 0) for a block — the adaptive
     * dispatch otherwise resolves every test-scale graph on the driver. */
   private def forcedDistributed[T](body: => T): T = {
-    val key = "spark.graft.collectThreshold"
+    val key = Dispatch.CollectThreshold.key
     spark.conf.set(key, "0")
     try body finally spark.conf.unset(key)
   }
@@ -58,7 +59,7 @@ class ConnectedComponentsPropertySpec extends SparkSuite {
     }
   }
 
-  test("starComponents == union-find on random graphs (10 seeds)") {
+  test("connectedComponents == union-find on random graphs (seeds 101-110)") {
     val edgeGen = for {
       n <- Gen.choose(2, 60)
       m <- Gen.choose(1, 120)
@@ -70,10 +71,10 @@ class ConnectedComponentsPropertySpec extends SparkSuite {
     (1 to 10).foreach { i =>
       val edges = edgeGen(Gen.Parameters.default, Seed(100L + i))
         .getOrElse(Seq((0L, 1L)))
-      val got = Dedup.starComponents(edges.toDF("id_a", "id_b"))
+      val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val gotDist = forcedDistributed {
-        Dedup.starComponents(edges.toDF("id_a", "id_b"))
+        Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }
       assert(got === unionFind(edges), s"seed $i, edges $edges")
@@ -82,34 +83,46 @@ class ConnectedComponentsPropertySpec extends SparkSuite {
     }
   }
 
-  test("starComponents: 96-node chain converges (min-label would need 96 rounds)") {
+  test("connectedComponents: a 96-node chain converges in O(log n) rounds") {
     // forced distributed: the chain exists to exercise the large-star/
-    // small-star convergence, which the driver gate would bypass
+    // small-star convergence, which the driver gate would bypass. A loop
+    // that needed diameter + 1 = 96 rounds would run at least one job
+    // per round; the star rounds finish in fewer jobs than that (69 when
+    // this was written, shuffle stages included).
     val chain = (0L until 96L).sliding(2).map(s => (s(0), s(1))).toSeq
-    val got = forcedDistributed {
-      Dedup.starComponents(chain.toDF("id_a", "id_b"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val got = try forcedDistributed {
+      Dedup.connectedComponents(chain.toDF("id_a", "id_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    } finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(l)
     }
     assert(got.size === 96)
     assert(got.values.forall(_ == 0L))
+    assert(jobs.get < 96, s"${jobs.get} jobs for a 96-node chain")
   }
 
-  test("starComponents == connectedComponents on the real jaccard edge set") {
+  test("connectedComponents forced distributed == driver union-find on " +
+    "the real jaccard edge set") {
     val edges = Dedup.ngramJaccard(spark, "/root/testdata/sf0.001")
       .select("id_a", "id_b")
-    val a = Dedup.starComponents(edges)
+    val driver = Dedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Dedup.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // and the forced-distributed forms agree on the real edge set too
-    val (aDist, bDist) = forcedDistributed {
-      (Dedup.starComponents(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-        Dedup.connectedComponents(edges)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val dist = forcedDistributed {
+      Dedup.connectedComponents(edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
-    assert(a === b)
-    assert(aDist === a)
-    assert(bDist === b)
+    assert(driver.nonEmpty)
+    assert(dist === driver)
+    assert(driver === unionFind(edges.collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq))
   }
 }

@@ -65,8 +65,8 @@ class PlanSpec extends SparkSuite {
   /** `body` with every driver-collect gate forced to its distributed
     * branch (the CC rounds, PageRank and the k-means trainer). */
   private def distributed[T](body: => T): T = {
-    spark.conf.set("spark.graft.collectThreshold", "0")
-    try body finally spark.conf.unset("spark.graft.collectThreshold")
+    spark.conf.set(Dispatch.CollectThreshold.key, "0")
+    try body finally spark.conf.unset(Dispatch.CollectThreshold.key)
   }
 
   /** The executed plans of the SQL actions `body` runs — the per-round
@@ -318,16 +318,12 @@ class PlanSpec extends SparkSuite {
     // layout anywhere. At this fixture scale even the full shard is a
     // handful of docs, so the doc gate is forced to zero to drive the
     // same arrival down the big-arrival branch.
-    val key = "graft.contam.pointMaxDocs"
-    val old = System.getProperty(key)
+    val key = Dispatch.ContamPointMaxDocs.key
     val big = try {
-      System.setProperty(key, "0")
+      spark.conf.set(key, "0")
       plan(Training.contaminationAdaptiveOf(spark, dir,
         col("bucket") >= 90))
-    } finally {
-      if (old == null) System.clearProperty(key)
-      else System.setProperty(key, old)
-    }
+    } finally spark.conf.unset(key)
     assert(!big.contains("graft_idx_bench_ngrams_srt"),
       "big arrival must take the bucketed join, not the point path\n" +
         big)
@@ -606,14 +602,27 @@ class PlanSpec extends SparkSuite {
 
   test("q_pagerank (distributed): the edge relation is one materialized " +
     "leaf, every iteration reads it, no fact table is scanned") {
-    val p = distributed(plan(q("q_pagerank")))
-    // five iterations plus the out-degree read the same (src, dst, share6)
-    // leaf; the fact-scale edge build never appears in the plan
-    assert("Scan ExistingRDD\\[src#\\d+,dst#\\d+,share6#".r.findAllIn(p).size === 6, p)
-    Seq("lineitem", "orders", "customer", "supplier").foreach(t =>
-      assert(!p.contains(s"$t.parquet"), s"$t scanned\n$p"))
-    // one inflow aggregate per iteration
-    assert("functions=\\[sum\\(c#".r.findAllIn(p).size === 5, p)
+    var df: DataFrame = null
+    val actions = distributed(actionPlans { df = q("q_pagerank") })
+    val p = plan(df)
+    // each iteration pins its rank: one inflow aggregate over the
+    // (src, dst, share6) leaf, joined to the pinned node set
+    val rounds = actions.filter("functions=\\[sum\\(c#".r.findFirstIn(_).nonEmpty)
+    assert(rounds.size === 5, actions.mkString("\n"))
+    // a finished action prints its final and its initial plan: read one
+    rounds.map(_.split("== Initial Plan ==")(0)).foreach { r =>
+      assert("Scan ExistingRDD\\[src#\\d+,dst#\\d+,share6#".r.findAllIn(r).size === 1, r)
+      assert("functions=\\[sum\\(c#".r.findAllIn(r).size === 1, r)
+    }
+    // the fact-scale edge build runs once; past it no plan scans a fact
+    // table, no round nests an earlier one, the final plan reads the
+    // last rank leaf, and the node table is scanned once, by the node pin
+    val (build, rest) = (p +: actions).partition(_.contains("lineitem.parquet"))
+    assert(build.size === 1, build.mkString("\n"))
+    assert(!p.contains("sum(c#"), p)
+    assert(rest.count(_.contains("nation.parquet")) === 1, rest.mkString("\n"))
+    Seq("orders", "customer", "supplier").foreach(t =>
+      rest.foreach(a => assert(!a.contains(s"$t.parquet"), s"$t scanned\n$a")))
   }
 
   test("q_agg_pricing: the scan reads the 7 referenced columns and the " +
@@ -802,12 +811,12 @@ class PlanSpec extends SparkSuite {
     // the candidates are pinned inside the query; the reliable pin
     // materializes them with a SQL action whose plan the listener sees
     var df: DataFrame = null
-    spark.conf.set("spark.graft.pin.reliable", "true")
+    spark.conf.set(Dispatch.PinReliableKey, "true")
     val served = try actionPlans { df = q("q_dedup_index_rewrite") }
       .filter(s => !s.contains("InsertIntoHadoopFsRelationCommand") &&
         s.linesIterator.exists(l => l.contains("FileScan") &&
           l.contains("graft_idx_mhbandrw_g2")))
-    finally spark.conf.unset("spark.graft.pin.reliable")
+    finally spark.conf.unset(Dispatch.PinReliableKey)
     assert(served.nonEmpty, "no serve action read the rewritten generation")
     (plan(df) +: served).foreach(s => assert(!s.contains("LeftAnti"), s))
     Harness.cleanup(spark)
@@ -816,7 +825,10 @@ class PlanSpec extends SparkSuite {
   // -- One row per headline query: the shuffle and broadcast exchanges and
   // the joins by physical type of its pre-execution plan (the tree `plan`
   // prints, subqueries included). A change in any count fails here; the
-  // gated queries also get a row for their distributed branch.
+  // gated queries also get a row for their distributed branch. The rows
+  // are built with size-based broadcasting off, so only hinted sides
+  // broadcast: at this scale the planner would broadcast nearly every
+  // side on its size, and a dropped hint would change no count.
   private def shape(df: DataFrame): String = {
     val names = nodes(tree(df)).map(_.nodeName)
     val joinCounts = names
@@ -831,19 +843,19 @@ class PlanSpec extends SparkSuite {
   private val shapes: Seq[(String, Boolean, String)] = Seq(
     // (query, distributed branch forced, shape)
     ("q_tpch_q21", false,
-      "Exchange:3 BroadcastExchange:5 BroadcastHashJoin:5 SortMergeJoin:1"),
+      "Exchange:6 BroadcastExchange:2 BroadcastHashJoin:2 SortMergeJoin:4"),
     ("q_tpch_q2", false,
       "Exchange:3 BroadcastExchange:9 BroadcastHashJoin:9"),
     ("q_pagerank", false,
       "Exchange:1 BroadcastExchange:0"),
     ("q_pagerank", true,
-      "Exchange:16 BroadcastExchange:1 BroadcastHashJoin:1 SortMergeJoin:10"),
+      "Exchange:3 BroadcastExchange:0 SortMergeJoin:1"),
     ("q_agg_pricing", false,
       "Exchange:2 BroadcastExchange:0"),
     ("q_join_multi", false,
       "Exchange:2 BroadcastExchange:3 BroadcastHashJoin:3"),
     ("q_dedup_ngram_jaccard", false,
-      "Exchange:3 BroadcastExchange:1 BroadcastHashJoin:1"),
+      "Exchange:6 BroadcastExchange:0 SortMergeJoin:1"),
     ("q_topk_per_group", false,
       "Exchange:2 BroadcastExchange:0"),
     ("q_vocab_topk", false,
@@ -853,44 +865,48 @@ class PlanSpec extends SparkSuite {
     ("q_tfidf_topk", false,
       "Exchange:4 BroadcastExchange:2 BroadcastHashJoin:1 BroadcastNestedLoopJoin:1"),
     ("q_bucketed_join", false,
-      "Exchange:2 BroadcastExchange:1 BroadcastHashJoin:1"),
+      "Exchange:2 BroadcastExchange:0 SortMergeJoin:1"),
     ("q_salted_agg", false,
       "Exchange:3 BroadcastExchange:0"),
     ("q_bm25_topk", false,
-      "Exchange:6 BroadcastExchange:3 BroadcastHashJoin:2 BroadcastNestedLoopJoin:1"),
+      "Exchange:6 BroadcastExchange:2 BroadcastHashJoin:1 BroadcastNestedLoopJoin:1 SortMergeJoin:1"),
     ("q_bloom_prefilter_join", false,
-      "Exchange:2 BroadcastExchange:1 BroadcastHashJoin:1"),
+      "Exchange:3 BroadcastExchange:0 SortMergeJoin:1"),
     ("q_dedup_jaccard_capped", false,
-      "Exchange:9 BroadcastExchange:5 BroadcastHashJoin:3 BroadcastNestedLoopJoin:2"),
+      "Exchange:12 BroadcastExchange:4 BroadcastHashJoin:2 BroadcastNestedLoopJoin:2 SortMergeJoin:1"),
     ("q_tpch_q17", false,
       "Exchange:3 BroadcastExchange:2 BroadcastHashJoin:2 SortMergeJoin:1"),
     ("q_kmeans", false,
-      "Exchange:2 BroadcastExchange:1 BroadcastHashJoin:1"),
+      "Exchange:3 BroadcastExchange:0 SortMergeJoin:1"),
     ("q_kmeans", true,
-      "Exchange:2 BroadcastExchange:1 BroadcastHashJoin:1"),
+      "Exchange:3 BroadcastExchange:0 SortMergeJoin:1"),
     ("q_substring_dedup", false,
       "Exchange:5 BroadcastExchange:0"),
     ("q_dedup_lsh_keep", false,
-      "Exchange:1 BroadcastExchange:1 BroadcastHashJoin:1"),
+      "Exchange:3 BroadcastExchange:0 SortMergeJoin:1"),
     ("q_dedup_lsh_keep", true,
       "Exchange:4 BroadcastExchange:0 SortMergeJoin:1"),
     ("q_dedup_incremental", false,
-      "Exchange:4 BroadcastExchange:2 BroadcastHashJoin:2 SortMergeJoin:1"),
+      "Exchange:8 BroadcastExchange:0 SortMergeJoin:3"),
     ("q_ann_ivf_quant", false,
-      "Exchange:3 BroadcastExchange:6 BroadcastHashJoin:4 BroadcastNestedLoopJoin:2"),
+      "Exchange:11 BroadcastExchange:2 BroadcastNestedLoopJoin:2 SortMergeJoin:4"),
     ("q_contamination_serve", false,
-      "Exchange:5 BroadcastExchange:1 BroadcastHashJoin:1 SortMergeJoin:1"),
+      "Exchange:6 BroadcastExchange:0 SortMergeJoin:2"),
     ("q_contamination_distributed", false,
-      "Exchange:6 BroadcastExchange:1 BroadcastHashJoin:1 SortMergeJoin:1"),
+      "Exchange:7 BroadcastExchange:0 SortMergeJoin:2"),
     ("q_contamination_point", false,
-      "Exchange:4 BroadcastExchange:2 BroadcastHashJoin:2"),
+      "Exchange:5 BroadcastExchange:1 BroadcastHashJoin:1 SortMergeJoin:1"),
     ("q_dedup_index_rewrite", false,
-      "Exchange:4 BroadcastExchange:2 BroadcastHashJoin:2 SortMergeJoin:1"))
+      "Exchange:8 BroadcastExchange:0 SortMergeJoin:3"))
 
   shapes.foreach { case (name, forced, expected) =>
     test(s"plan shape: $name${if (forced) " (distributed)" else ""}") {
-      val df = if (forced) distributed(q(name)) else q(name)
-      assert(shape(df) === expected, plan(df))
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      spark.conf.set(key, "-1")
+      try {
+        val df = if (forced) distributed(q(name)) else q(name)
+        assert(shape(df) === expected, plan(df))
+      } finally spark.conf.unset(key)
     }
   }
 }

@@ -1,41 +1,85 @@
 package graft.operators
 
-import graft.SparkSuite
+import graft.{Harness, SparkSuite}
 import org.apache.spark.sql.DataFrame
 
-/** r17 optimization-round dispatch seams: every adaptive branch added
-  * this round must be row-identical to the path it replaces.
-  *  - winnowPairsCapped's heavy-hash broadcast guard (broadcast vs
-  *    shuffled left_anti above the doc gate)
-  *  - Star.pin's reliable (persist+materialize) fallback vs the default
-  *    localCheckpoint pin
-  *  - the IVF trainer's job count: its input is counted once */
+/** Every adaptive gate of [[Dispatch]] in one table: each row runs
+  * registered queries with its gate at both extremes and asserts the
+  * same rows, so a gate may only ever change the plan. Plus the two
+  * branches behind the fixed bounds, and the IVF trainer's job count. */
 class R17DispatchSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
+  private def q(name: String): DataFrame =
+    graft.SparkEntry.queries(name)(spark, sf)
+
+  /** In order: a gate may not reorder a sorted result either. */
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
-  test("winnowPairsCapped: shuffle anti-join branch equals broadcast branch") {
-    val broadcastForm = rows(Dedup.winnowPairsCapped(spark, sf))
-    spark.conf.set("spark.graft.winnow.broadcastDocGate", "0")
-    try {
-      val shuffleForm = rows(Dedup.winnowPairsCapped(spark, sf))
-      assert(shuffleForm === broadcastForm)
-    } finally spark.conf.unset("spark.graft.winnow.broadcastDocGate")
+  private val Max = Long.MaxValue.toString
+
+  /** (row, gate key, its two extremes, the queries it dispatches) */
+  private val gates: Seq[(String, String, (String, String), Seq[String])] = Seq(
+    ("winnowPairsCapped: shuffle anti-join branch equals broadcast branch",
+      Dispatch.WinnowBroadcastDocGate.key, ("0", Max),
+      Seq("q_dedup_winnow_capped")),
+    ("kmeans/IVF driver-gated trainer equals the distributed Lloyd loop",
+      Dispatch.CollectThreshold.key, ("0", Max),
+      Seq("q_kmeans", "q_ann_ivf")),
+    ("connected components: driver union-find equals the star rounds",
+      Dispatch.CollectThreshold.key, ("0", Max),
+      Seq("q_dedup_clusters", "q_dedup_clusters_capped",
+        "q_semantic_dedup_keep", "q_dedup_lsh_keep")),
+    ("PageRank: driver rounds equal the distributed rounds",
+      Dispatch.CollectThreshold.key, ("0", Max), Seq("q_pagerank")),
+    ("Star.pin reliable branch equals localCheckpoint branch",
+      Dispatch.PinReliableKey, ("true", "false"), Seq("q_tfidf_topk")),
+    ("contamination: bucketed join past the doc gate equals the point path",
+      Dispatch.ContamPointMaxDocs.key, ("0", Max),
+      Seq("q_contamination_point")),
+    ("bloom residency: routed shard load equals the whole-family load",
+      Dispatch.BloomWholeFamilyBudgetBytes.key, ("0", Max),
+      Seq("q_contamination_serve")),
+    ("bloom memo: eviction past the byte budget changes no rows",
+      Dispatch.BloomCacheBudgetBytes.key, ("0", Max),
+      Seq("q_contamination_serve")))
+
+  private def under[T](key: String, value: String)(body: => T): T = {
+    spark.conf.set(key, value)
+    try body finally { spark.conf.unset(key); Harness.cleanup(spark) }
   }
 
-  test("kmeans/IVF driver-gated trainer equals the distributed Lloyd loop") {
-    // q_kmeans surfaces centroids + membership; q_ann_ivf rides the same
-    // trainer through the probe/re-rank chain — both must be identical
-    // across the dispatch
-    val km = rows(Similarity.kmeans(spark, sf))
-    val ivf = rows(graft.SparkEntry.queries("q_ann_ivf")(spark, sf))
-    spark.conf.set("spark.graft.collectThreshold", "0")
-    try {
-      assert(rows(Similarity.kmeans(spark, sf)) === km)
-      assert(rows(graft.SparkEntry.queries("q_ann_ivf")(spark, sf)) === ivf)
-    } finally spark.conf.unset("spark.graft.collectThreshold")
+  test("the gate table covers every settable Dispatch key") {
+    assert(gates.map(_._2).toSet === Dispatch.keys.toSet)
+  }
+
+  gates.foreach { case (row, key, (lo, hi), queries) =>
+    test(row) {
+      queries.foreach { name =>
+        val a = under(key, lo)(rows(q(name)))
+        val b = under(key, hi)(rows(q(name)))
+        assert(a.nonEmpty, s"$name returned no rows")
+        assert(a === b, s"$name differs between $key=$lo and $key=$hi")
+      }
+    }
+  }
+
+  test("kmeans past the literal-map bound: the broadcast-join assignment " +
+    "equals the driver trainer") {
+    val vecs = Similarity.quantVecs(spark, sf)
+    val n = vecs.count()
+    val k = Dispatch.KmeansLiteralMapCells + 8
+    assert(n > k)
+    def trained = {
+      val (cent, assign) = Similarity.exactKmeans(vecs, n, k, 2)
+      (exactMultiset(cent.selectExpr("cid", "CAST(carr AS STRING)")),
+        exactMultiset(assign))
+    }
+    val driver = trained
+    val distributed = under(Dispatch.CollectThreshold.key, "0")(trained)
+    assert(driver._1.size > Dispatch.KmeansLiteralMapCells)
+    assert(distributed === driver)
   }
 
   test("ivfTrained counts its input once: one count, one collect") {
@@ -62,21 +106,5 @@ class R17DispatchSpec extends SparkSuite {
     val once = jobsOf(vecs.count()) + jobsOf(vecs.collect())
     assert(once > 0)
     assert(jobsOf(Similarity.ivfTrained(vecs)) === once)
-  }
-
-  test("Star.pin reliable branch equals localCheckpoint branch") {
-    // tfidf rides the pinned tf aggregate; doc grain keeps the compare cheap
-    val q = graft.SparkEntry.queries("q_tfidf_topk")
-    val fast = rows(q(spark, sf))
-    spark.conf.set("spark.graft.pin.reliable", "true")
-    try {
-      val reliable = rows(q(spark, sf))
-      assert(reliable === fast)
-    } finally {
-      spark.conf.unset("spark.graft.pin.reliable")
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-    }
   }
 }

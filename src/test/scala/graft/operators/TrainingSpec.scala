@@ -249,18 +249,20 @@ class TrainingSpec extends SparkSuite {
       spark, sf, 50L).collect().toSeq
     assert(smallAdaptive === smallJoin)
     assert(smallAdaptive.nonEmpty)
-    val key = "graft.contam.pointMaxDocs"
-    val old = System.getProperty(key)
+    val key = Dispatch.ContamPointMaxDocs.key
     try {
       // force the doc gate to zero: the same arrival must now flow
       // through the big-arrival branch (production serve) unchanged
-      System.setProperty(key, "0")
+      spark.conf.set(key, "0")
       val viaJoinBranch = Training.contaminationAdaptiveFixedShard(
         spark, sf, 50L).collect().toSeq
       assert(viaJoinBranch === smallJoin)
-    } finally {
-      if (old == null) System.clearProperty(key)
-      else System.setProperty(key, old)
-    }
+    } finally spark.conf.unset(key)
+    // under the doc gate, more survivor keys than the IN-list bound:
+    // the exact join finishes on the pinned survivors
+    val viaSurvivorJoin = Training.contaminationAdaptiveOf(spark, sf,
+      col("bucket") >= 90 && col("doc_id") < 50L, maxKeys = 0)
+      .collect().toSeq
+    assert(viaSurvivorJoin === smallJoin)
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSuite
 import graft.functions.BloomFamily
+import graft.operators.Dispatch
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -107,10 +108,9 @@ class BloomResidencySpec extends SparkSuite {
     val name = freshName("blmadp")
     val index = indexOf(name, 2000L)
     // force the budget to zero: every family is 'too big' -> routed
-    val key = "graft.bloom.wholeFamilyBudgetBytes"
-    val old = System.getProperty(key)
+    val key = Dispatch.BloomWholeFamilyBudgetBytes.key
     try {
-      System.setProperty(key, "0")
+      spark.conf.set(key, "0")
       var routedCalls = 0
       val fam = IndexStore.bloomFamilyAdaptive(
         spark, dir, "documents", name, "h", 8)(index) { shards =>
@@ -122,7 +122,7 @@ class BloomResidencySpec extends SparkSuite {
       // relax the budget: adaptive must now fill the family WITHOUT
       // invoking the routing pass (the arrival-sized pass is pure cost
       // when the whole family fits)
-      System.setProperty(key, (1L << 30).toString)
+      spark.conf.set(key, (1L << 30).toString)
       val fam2 = IndexStore.bloomFamilyAdaptive(
         spark, dir, "documents", name, "h", 8)(index) { _ =>
         routedCalls += 1
@@ -131,19 +131,15 @@ class BloomResidencySpec extends SparkSuite {
       assert(routedCalls === 1,
         "under the budget the routing pass must be skipped")
       assert((fam2 eq fam) && fam2.loadedShards === 8)
-    } finally {
-      if (old == null) System.clearProperty(key)
-      else System.setProperty(key, old)
-    }
+    } finally spark.conf.unset(key)
   }
 
   test("the family memo is bounded by BYTES: loading a second snapshot " +
     "past the budget evicts the least-recently-served one, never the " +
     "one being loaded") {
-    val key = "graft.bloom.cacheBudgetBytes"
-    val old = System.getProperty(key)
+    val key = Dispatch.BloomCacheBudgetBytes.key
     try {
-      System.setProperty(key, "1")
+      spark.conf.set(key, "1")
       val nameA = freshName("blmbgtA")
       val famA = IndexStore.bloomFamilyFor(
         spark, dir, "documents", nameA, "h", 8)(indexOf(nameA, 1000L))
@@ -161,10 +157,7 @@ class BloomResidencySpec extends SparkSuite {
           s"${famB.loadedBytes} vs $afterB")
       assert(afterB >= famB.loadedBytes,
         "the just-loaded family must survive its own eviction pass")
-    } finally {
-      if (old == null) System.clearProperty(key)
-      else System.setProperty(key, old)
-    }
+    } finally spark.conf.unset(key)
   }
 
   test("a heal publishes a complete NEW version and swaps the pointer — " +
