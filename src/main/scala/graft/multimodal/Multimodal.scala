@@ -1,36 +1,28 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal-column plumbing: images/audio/video travel as opaque
   * `BinaryType` payloads with a typed metadata struct, and per-item
   * processing runs batched per partition — the Scala analog of a Pandas-UDF
   * `mapInPandas` stage.
   *
-  * IMAGE and AUDIO decode are REAL: `image/png` payloads round-trip
-  * through `javax.imageio` (renderPng / decodeImageFeatures;
-  * q_media_features oracle-gated on decoded pixel sums) and `audio/wav`
-  * payloads through `javax.sound.sampled` (renderWav /
-  * decodeAudioFeatures; q_media_audio oracle-gated on decoded PCM sample
-  * stats) — both Java SE codecs, no external deps. VIDEO decode runs
-  * through the JVM's real multi-frame temporal codec — animated GIF
-  * (renderGif / decodeVideoFeatures; q_media_video oracle-gated on
-  * frame-sampled pixel sums) — AND through a real video CONTAINER path:
-  * RIFF/AVI demux + lossy JPEG intra-frame decode, i.e. MJPEG
-  * (renderAviMjpeg / decodeAviMjpeg; q_media_mjpeg). COMPRESSED audio
-  * decode is real too: IMA ADPCM 4-bit blocks in WAV, implemented from
-  * the public spec (renderWavAdpcm / decodeWavAdpcm; q_media_adpcm) —
-  * javax.sound reads only PCM. H.264 is decoded for real within its
-  * baseline I_PCM subset (renderH264 / decodeH264; q_media_h264 —
-  * real Annex-B demux, emulation-prevention stripping, Exp-Golomb
-  * entropy decode, exact lossless pixel oracle). The `decodeStub` seam
-  * remains for exactly what a pure JVM cannot reasonably express —
-  * H.264 residual coding (CAVLC/CABAC + prediction), AAC, VP9:
-  * everything around it — schema, batch shape, partitioning,
-  * null-safety, feature-vector plumbing — is real and tested, so
-  * swapping in a JNI/foreign decoder changes one function.
+  * Every synthetic media format is one [[Codec]] value: its fixture kind
+  * (the build-once cache identity), its MIME string and its per-id
+  * renderer. One builder ([[media]]) turns a codec into a media table,
+  * and every decoder runs through one per-partition stage
+  * ([[decodeStage]]) over the `(media_id, payload)` pair. The codecs are
+  * real and pure-JVM: PNG and JPEG through `javax.imageio`, PCM WAV
+  * through `javax.sound.sampled`, animated GIF (multi-frame temporal)
+  * through the GIF ImageReader, MJPEG-in-AVI through a RIFF demux plus
+  * the JPEG codec, IMA ADPCM through a from-the-spec block decoder, and
+  * baseline I_PCM H.264 through an Annex-B demux and Exp-Golomb entropy
+  * decode. Each `q_media_*` query is oracle-gated on facts DuckDB derives
+  * from the closed-form renderer formulas, never decoding a byte. The
+  * `decodeStub` seam remains for what a pure JVM cannot reasonably
+  * express — H.264 residual coding (CAVLC/CABAC + prediction), AAC, VP9.
   *
   * Scale notes: payloads stay columnar (parquet binary) end-to-end; the
   * per-partition iterator processes items one batch at a time without
@@ -46,40 +38,67 @@ object Multimodal {
   // few hundred bytes — cache in memory.
   javax.imageio.ImageIO.setUseCache(false)
 
-  /** Build-once synthetic-media fixture cache. Rendering the 500–5000
-    * synthetic PNG/WAV/GIF payloads is fixture SETUP, not the operator
-    * under test — the decode queries should time the DECODE stage, not
-    * re-bill the render inside every execution (bench runs each query
-    * warmup+N times, and features/resize share the same PNG table). The
-    * first caller writes the rendered table to a write-once-read-many
-    * parquet dir under java.io.tmpdir (`_READY`-marked, same pattern as
-    * the streaming chrono-replay fixtures); later callers — and later
-    * executions of the same query — scan it. Payload bytes round-trip
-    * parquet binary unchanged, so results are byte-identical to the
-    * uncached path. Read-back is re-fanned for decode parallelism (the
-    * cached files are tiny, so the scan would otherwise coalesce to a
-    * couple of splits). */
-  private def cachedMedia(spark: SparkSession, dir: String, kind: String)
-      (render: => DataFrame): DataFrame = {
-    // identity-keyed build-once dir with staged atomic publication —
-    // see graft.sources.FixtureCache for the concurrency contract
+  /** One synthetic media format: the fixture kind (its FixtureCache
+    * identity — a change to the rendered bytes must mint a new kind, or
+    * cached payloads from the old renderer would be served), the MIME
+    * string the table's `meta.format` carries, and the renderer run on
+    * executors for each document id. */
+  private[multimodal] final case class Codec(kind: String, mime: String,
+      render: Long => Array[Byte])
+
+  /** The synthetic media table for `codec`: one payload per document,
+    * rendered per-partition on executors — payload bytes never pass
+    * through the driver — and served from a build-once fixture cache.
+    * Rendering is fixture SETUP, not the operator under test: the decode
+    * queries time the DECODE stage, not a re-render inside every
+    * execution. The first caller writes the rendered table to a
+    * write-once-read-many parquet dir under java.io.tmpdir (see
+    * graft.sources.FixtureCache for the concurrency contract); later
+    * callers scan it. Payload bytes round-trip parquet binary unchanged.
+    * Both sides are fanned: local testdata arrives as ONE split, the
+    * cached files are tiny, and codec work is per-row-dominant — without
+    * the fan 500 encode/decode round-trips run on a single core. */
+  private[multimodal] def media(spark: SparkSession, dir: String,
+      codec: Codec): DataFrame = {
     val base = graft.sources.FixtureCache.buildOnce(
-      spark, s"graft_media_$kind", dir, "documents") { stage =>
-      render.write.mode("overwrite").parquet(
-        new org.apache.hadoop.fs.Path(stage, "data").toString)
+      spark, s"graft_media_${codec.kind}", dir, "documents") { stage =>
+      import spark.implicits._
+      val render = codec.render
+      graft.operators.Star.fan(spark,
+          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
+          "doc_id")
+        .as[Long]
+        .mapPartitions(_.map(id => (id, render(id))))
+        .toDF("media_id", "payload")
+        .select(col("media_id"), col("payload"),
+          struct(
+            lit(codec.mime).as("format"),
+            length(col("payload")).cast("long").as("byte_len"),
+            lit("synthetic").as("source")).as("meta"))
+        .write.mode("overwrite").parquet(
+          new org.apache.hadoop.fs.Path(stage, "data").toString)
     }
     graft.operators.Star.fan(spark,
       spark.read.parquet(new org.apache.hadoop.fs.Path(base, "data").toString),
       "media_id")
   }
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType),
-      StructField("byte_len", LongType),
-      StructField("source", StringType))))))
+  /** The one batched per-partition decode stage over `(media_id,
+    * payload)` — the mapInPandas-shaped step. The by-name `row` is
+    * evaluated once per partition, so state it sets up before returning
+    * the row function (the audio decoders' hoisted reader) is
+    * per-partition. Runs on executors; payload bytes never pass through
+    * the driver. */
+  private def decodeStage[T <: Product : TypeTag](media: DataFrame)(
+      row: => (Long, Array[Byte]) => T): Dataset[T] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select("media_id", "payload").as[(Long, Array[Byte])]
+      .mapPartitions { it =>
+        val f = row
+        it.map { case (id, payload) => f(id, payload) }
+      }(Encoders.product[T])
+  }
 
   /** Wrap a documents table into a media table: payload = utf-8 bytes of
     * `text` (deterministic stand-in for real media bytes). */
@@ -93,17 +112,14 @@ object Multimodal {
         col("source").as("source")).as("meta"))
 
   /** INTENTIONALLY-KEPT test seam for exactly the codecs a pure JVM
-    * cannot express (H.264, AAC, VP9): a production deployment swaps
-    * this one function for a JNI/foreign decoder and everything around
-    * it — schema, batch shape, partitioning, null-safety, feature
-    * plumbing — is already real and tested. Every codec pure-JVM code
-    * CAN express is wired for real elsewhere in this file: PNG + JPEG
-    * via javax.imageio, WAV PCM via javax.sound.sampled, animated GIF
-    * (multi-frame temporal) via the GIF ImageReader, MJPEG-in-AVI via
-    * our RIFF demux + the JPEG codec, and IMA ADPCM via our
-    * from-the-spec block decoder. The body below is a deterministic
-    * byte-hash featurizer so the seam stays exercised end-to-end by
-    * q_binary_meta and the specs. */
+    * cannot express (H.264 residual coding, AAC, VP9): a production
+    * deployment swaps this one function for a JNI/foreign decoder and
+    * everything around it — schema, batch shape, partitioning,
+    * null-safety, feature plumbing — is already real and tested. Every
+    * codec pure-JVM code CAN express is a real [[Codec]] in this file.
+    * The body is a deterministic byte-hash featurizer so the seam stays
+    * exercised end-to-end by [[extractFeatures]] (the streaming demo and
+    * the specs). */
   def decodeStub(payload: Array[Byte], dim: Int): Array[Float] = {
     val out = new Array[Float](dim)
     var h = 1125899906842597L // FNV-ish seed
@@ -122,20 +138,13 @@ object Multimodal {
   final case class MediaFeatures(media_id: Long, byte_len: Long,
                                  features: Array[Float])
 
-  /** Batched per-partition decode+featurize — the mapInPandas-shaped stage.
-    * Runs on executors, one partition iterator at a time; payload bytes
-    * never pass through the driver. */
-  def extractFeatures(media: DataFrame, dim: Int): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          MediaFeatures(id, bytes.length.toLong, decodeStub(bytes, dim))
-        }
-      }
-  }
+  /** Decode+featurize through the [[decodeStub]] seam; null payloads
+    * featurize as empty. */
+  def extractFeatures(media: DataFrame, dim: Int): Dataset[MediaFeatures] =
+    decodeStage(media) { (id, payload) =>
+      val bytes = if (payload == null) Array.emptyByteArray else payload
+      MediaFeatures(id, bytes.length.toLong, decodeStub(bytes, dim))
+    }
 
   /** Frame-sampling invariants as an oracle-checked query: per media item,
     * the number of fixed-size frames its payload shards into and the total
@@ -167,88 +176,101 @@ object Multimodal {
 
   // ------------------------------------------------- real image codec path
 
-  /** Pixel value formulas shared by the renderer and the SQL oracle: each
-    * channel at (x, y) for media `id` is a closed-form integer, so the
-    * decoded-pixel aggregates are computable from first principles by an
-    * engine that never sees the PNG bytes. */
+  /** Pixel value formulas shared by the renderers and the SQL oracle: each
+    * channel at (x, y) of frame `f` for media `id` is a closed-form
+    * integer, so the decoded-pixel aggregates are computable from first
+    * principles by an engine that never sees the encoded bytes. Still
+    * images are frame 0. */
   private final val W = 16
   private final val H = 16
 
-  /** Render the deterministic W x H RGB image for `id` and encode it as a
-    * real PNG via javax.imageio (lossless — decode returns the exact
-    * channel values). Runs on executors. */
-  def renderPng(id: Long): Array[Byte] = {
+  @inline private def rgb(id: Long, f: Int, x: Int, y: Int): Int = {
+    val r = ((id * 31 + f * 19 + x * 7 + y * 13) % 256).toInt
+    val g = ((id * 17 + f * 23 + x * 5 + y * 11) % 256).toInt
+    val b = ((id * 13 + f * 29 + x * 3 + y * 29) % 256).toInt
+    (r << 16) | (g << 8) | b
+  }
+
+  /** Encode the W x H RGB raster `px(x, y)` through javax.imageio as
+    * `format` ("png" is lossless; "jpg" is lossy). Runs on executors. */
+  private def encodeRaster(format: String)(px: (Int, Int) => Int)
+      : Array[Byte] = {
     val img = new java.awt.image.BufferedImage(
       W, H, java.awt.image.BufferedImage.TYPE_INT_RGB)
     var y = 0
     while (y < H) {
       var x = 0
-      while (x < W) {
-        val r = ((id * 31 + x * 7 + y * 13) % 256).toInt
-        val g = ((id * 17 + x * 5 + y * 11) % 256).toInt
-        val b = ((id * 13 + x * 3 + y * 29) % 256).toInt
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
+      while (x < W) { img.setRGB(x, y, px(x, y)); x += 1 }
+      y += 1
+    }
+    val baos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, format, baos)
+    baos.toByteArray
+  }
+
+  private def readImage(payload: Array[Byte]): java.awt.image.BufferedImage =
+    javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+
+  /** Total absolute channel error of a decoded raster against the
+    * closed-form source pixels `want(x, y)` — the measured lossy-codec
+    * distortion. */
+  private def rasterErr(img: java.awt.image.BufferedImage,
+      want: (Int, Int) => Int): Long = {
+    var err = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val got = img.getRGB(x, y)
+        val w = want(x, y)
+        err += math.abs(((got >> 16) & 0xff) - ((w >> 16) & 0xff))
+        err += math.abs(((got >> 8) & 0xff) - ((w >> 8) & 0xff))
+        err += math.abs((got & 0xff) - (w & 0xff))
         x += 1
       }
       y += 1
     }
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", baos)
-    baos.toByteArray
+    err
   }
 
-  /** Synthetic PNG media table: one image per document, rendered and
-    * encoded per-partition on executors — payload bytes never pass through
-    * the driver — then served from the build-once fixture cache. */
+  /** The deterministic W x H RGB image for `id` as a real PNG (lossless —
+    * decode returns the exact channel values). */
+  def renderPng(id: Long): Array[Byte] = encodeRaster("png")(rgb(id, 0, _, _))
+
+  private[multimodal] val png = Codec("png", "image/png", renderPng)
+
   def pngMedia(spark: SparkSession, dir: String): DataFrame =
-    cachedMedia(spark, dir, "png") {
-      import spark.implicits._
-      // fan: local testdata arrives as ONE split and codec work is
-      // per-row-dominant — without it 500 encode/decode round-trips run
-      // on a single core
-      graft.operators.Star.fan(spark,
-          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
-          "doc_id")
-        .as[Long]
-        .mapPartitions(_.map(id => (id, renderPng(id))))
-        .toDF("media_id", "payload")
-        .select(col("media_id"), col("payload"),
-          struct(
-            lit("image/png").as("format"),
-            length(col("payload")).cast("long").as("byte_len"),
-            lit("synthetic").as("source")).as("meta"))
-    }
+    media(spark, dir, png)
 
   final case class ImageFeatures(media_id: Long, width: Long, height: Long,
                                  sum_r: Long, sum_g: Long, sum_b: Long)
 
-  /** Batched per-partition REAL decode: javax.imageio parses each PNG
-    * payload and the per-channel pixel sums come off the decoded raster —
-    * the featurize stage with an actual codec behind the seam. */
-  def decodeImageFeatures(media: DataFrame): Dataset[ImageFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(payload))
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val rgb = img.getRGB(x, y)
-            sr += (rgb >> 16) & 0xff
-            sg += (rgb >> 8) & 0xff
-            sb += rgb & 0xff
-            x += 1
-          }
-          y += 1
+  /** REAL image decode: javax.imageio parses each payload, and the
+    * per-channel pixel sums come off the decoded raster downsampled by
+    * nearest neighbor with stride `k` (output pixel (x, y) = source pixel
+    * (kx, ky) — exact pixel picks, no interpolation, so the result is
+    * bit-deterministic and SQL-derivable). `width`/`height` are the
+    * output dims; stride 1 is the full raster. */
+  def decodeImageFeatures(media: DataFrame, k: Int = 1)
+      : Dataset[ImageFeatures] =
+    decodeStage(media) { (id, payload) =>
+      val img = readImage(payload)
+      val (wo, ho) = (img.getWidth / k, img.getHeight / k)
+      var (sr, sg, sb) = (0L, 0L, 0L)
+      var y = 0
+      while (y < ho) {
+        var x = 0
+        while (x < wo) {
+          val px = img.getRGB(x * k, y * k)
+          sr += (px >> 16) & 0xff
+          sg += (px >> 8) & 0xff
+          sb += px & 0xff
+          x += 1
         }
-        ImageFeatures(id, img.getWidth.toLong, img.getHeight.toLong,
-          sr, sg, sb)
-      })
-  }
+        y += 1
+      }
+      ImageFeatures(id, wo.toLong, ho.toLong, sr, sg, sb)
+    }
 
   /** Decoded-image features through the REAL codec, oracle-gated: the PNG
     * round-trip is lossless, so the per-channel sums equal the closed-form
@@ -257,44 +279,12 @@ object Multimodal {
     decodeImageFeatures(pngMedia(spark, dir)).toDF()
       .orderBy("media_id")
 
-  final case class ResizedFeatures(media_id: Long, w_out: Long, h_out: Long,
-                                   sum_r: Long, sum_g: Long, sum_b: Long)
-
-  /** RESIZE through the real codec: decode each PNG and nearest-neighbor
-    * downsample 16x16 -> 4x4 (output pixel (x,y) = source pixel
-    * (4x, 4y) — exact pixel picks, no interpolation, so the result is
-    * bit-deterministic and SQL-derivable). Emits the per-channel sums of
-    * the RESIZED image. */
-  def decodeResizeFeatures(media: DataFrame, k: Int): Dataset[ResizedFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(payload))
-        val (wo, ho) = (img.getWidth / k, img.getHeight / k)
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        var y = 0
-        while (y < ho) {
-          var x = 0
-          while (x < wo) {
-            val rgb = img.getRGB(x * k, y * k)
-            sr += (rgb >> 16) & 0xff
-            sg += (rgb >> 8) & 0xff
-            sb += rgb & 0xff
-            x += 1
-          }
-          y += 1
-        }
-        ResizedFeatures(id, wo.toLong, ho.toLong, sr, sg, sb)
-      })
-  }
-
-  /** The multimodal RESIZE stage in the gate: decoded + downsampled
-    * channel sums, oracle-computed from the closed-form pixels at the
-    * sampled source coordinates. */
+  /** The multimodal RESIZE stage in the gate: 16x16 -> 4x4 decoded +
+    * downsampled channel sums, oracle-computed from the closed-form
+    * pixels at the sampled source coordinates. */
   def mediaResize(spark: SparkSession, dir: String): DataFrame =
-    decodeResizeFeatures(pngMedia(spark, dir), 4).toDF()
+    decodeImageFeatures(pngMedia(spark, dir), 4)
+      .toDF("media_id", "w_out", "h_out", "sum_r", "sum_g", "sum_b")
       .orderBy("media_id")
 
   private val mediaResizeSql =
@@ -311,82 +301,31 @@ object Multimodal {
 
   // ------------------------------------------------- real JPEG codec path
 
-  /** Render the deterministic W x H RGB image for `id` and encode it as a
-    * real JPEG via javax.imageio. JPEG is LOSSY — decoded channel values
-    * are NOT bit-equal to the formula — so the hash-oracled columns are
-    * the exact container/raster facts (dimensions, pixel count) while
-    * pixel fidelity (mean abs channel error under the default-quality
-    * quantization tables) is asserted by MultimodalSpec. Runs on
-    * executors. */
-  def renderJpeg(id: Long): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      W, H, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < H) {
-      var x = 0
-      while (x < W) {
-        val r = ((id * 31 + x * 7 + y * 13) % 256).toInt
-        val g = ((id * 17 + x * 5 + y * 11) % 256).toInt
-        val b = ((id * 13 + x * 3 + y * 29) % 256).toInt
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
-    }
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", baos)
-    baos.toByteArray
-  }
+  /** The same image as [[renderPng]] as a real JPEG. JPEG is LOSSY —
+    * decoded channel values are NOT bit-equal to the formula — so the
+    * hash-oracled columns are the exact container/raster facts
+    * (dimensions, pixel count) while pixel fidelity (mean abs channel
+    * error under the default-quality quantization tables) is asserted by
+    * MultimodalSpec. */
+  def renderJpeg(id: Long): Array[Byte] = encodeRaster("jpg")(rgb(id, 0, _, _))
 
-  /** Synthetic JPEG media table, served from the fixture cache. */
+  private[multimodal] val jpeg = Codec("jpeg", "image/jpeg", renderJpeg)
+
   def jpegMedia(spark: SparkSession, dir: String): DataFrame =
-    cachedMedia(spark, dir, "jpeg") {
-      import spark.implicits._
-      graft.operators.Star.fan(spark,
-          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
-          "doc_id")
-        .as[Long]
-        .mapPartitions(_.map(id => (id, renderJpeg(id))))
-        .toDF("media_id", "payload")
-        .select(col("media_id"), col("payload"),
-          struct(
-            lit("image/jpeg").as("format"),
-            length(col("payload")).cast("long").as("byte_len"),
-            lit("synthetic").as("source")).as("meta"))
-    }
+    media(spark, dir, jpeg)
 
   final case class JpegFeatures(media_id: Long, width: Long, height: Long,
                                 n_pixels: Long, sum_err: Long)
 
-  /** Batched per-partition REAL JPEG decode: javax.imageio parses each
-    * JPEG payload (huffman tables, DCT blocks, chroma subsampling) and
-    * emits the decoded raster facts plus the total absolute channel error
-    * vs the closed-form source pixels — the measured lossy-codec
-    * distortion. */
-  def decodeJpegFeatures(media: DataFrame): Dataset[JpegFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(payload))
-        var err = 0L
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val rgb = img.getRGB(x, y)
-            err += math.abs(((rgb >> 16) & 0xff) - ((id * 31 + x * 7 + y * 13) % 256))
-            err += math.abs(((rgb >> 8) & 0xff) - ((id * 17 + x * 5 + y * 11) % 256))
-            err += math.abs((rgb & 0xff) - ((id * 13 + x * 3 + y * 29) % 256))
-            x += 1
-          }
-          y += 1
-        }
-        JpegFeatures(id, img.getWidth.toLong, img.getHeight.toLong,
-          img.getWidth.toLong * img.getHeight, err)
-      })
-  }
+  /** REAL JPEG decode: javax.imageio parses each payload (huffman tables,
+    * DCT blocks, chroma subsampling); emits the decoded raster facts plus
+    * the total absolute channel error vs the closed-form source pixels. */
+  def decodeJpegFeatures(media: DataFrame): Dataset[JpegFeatures] =
+    decodeStage(media) { (id, payload) =>
+      val img = readImage(payload)
+      JpegFeatures(id, img.getWidth.toLong, img.getHeight.toLong,
+        img.getWidth.toLong * img.getHeight, rasterErr(img, rgb(id, 0, _, _)))
+    }
 
   /** JPEG decode through the REAL codec in the gate: hash-oracled on the
     * exact decoded-raster facts (dimensions, pixel count — JPEG loss
@@ -411,17 +350,17 @@ object Multimodal {
   @inline private def sample(id: Long, t: Int): Int =
     (((id * 31 + t * 17) % 2048 - 1024) * 16).toInt
 
-  /** Render the deterministic PCM signal for `id` and encode it as a real
-    * WAV container via javax.sound.sampled (16-bit little-endian signed
-    * mono, 8 kHz). Runs on executors. */
-  def renderWav(id: Long): Array[Byte] = {
+  /** Encode the 16-bit samples `s(t)`, t < NSamples, as a real WAV
+    * container via javax.sound.sampled (little-endian signed mono,
+    * 8 kHz). Runs on executors. */
+  private def encodeWav(s: Int => Int): Array[Byte] = {
     import javax.sound.sampled._
     val pcm = new Array[Byte](NSamples * 2)
     var t = 0
     while (t < NSamples) {
-      val s = sample(id, t)
-      pcm(2 * t) = (s & 0xff).toByte
-      pcm(2 * t + 1) = ((s >> 8) & 0xff).toByte
+      val v = s(t)
+      pcm(2 * t) = (v & 0xff).toByte
+      pcm(2 * t + 1) = ((v >> 8) & 0xff).toByte
       t += 1
     }
     val fmt = new AudioFormat(8000f, 16, 1, true, false)
@@ -432,23 +371,13 @@ object Multimodal {
     baos.toByteArray
   }
 
-  /** Synthetic WAV media table: one clip per document, encoded
-    * per-partition on executors, served from the fixture cache. */
+  /** The deterministic PCM signal for `id` as a real WAV. */
+  def renderWav(id: Long): Array[Byte] = encodeWav(sample(id, _))
+
+  private[multimodal] val wav = Codec("wav", "audio/wav", renderWav)
+
   def wavMedia(spark: SparkSession, dir: String): DataFrame =
-    cachedMedia(spark, dir, "wav") {
-      import spark.implicits._
-      graft.operators.Star.fan(spark,
-          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
-          "doc_id")
-        .as[Long]
-        .mapPartitions(_.map(id => (id, renderWav(id))))
-        .toDF("media_id", "payload")
-        .select(col("media_id"), col("payload"),
-          struct(
-            lit("audio/wav").as("format"),
-            length(col("payload")).cast("long").as("byte_len"),
-            lit("synthetic").as("source")).as("meta"))
-    }
+    media(spark, dir, wav)
 
   final case class AudioFeatures(media_id: Long, n_samples: Long,
                                  sum_s: Long, min_s: Long, max_s: Long)
@@ -499,16 +428,15 @@ object Multimodal {
       (r.getAudioInputStream(new java.io.ByteArrayInputStream(payload)), r)
     }
 
-  /** Batched per-partition REAL audio decode: javax.sound.sampled parses
-    * each WAV container (header, format, frame stream) and the sample
-    * statistics come off the decoded PCM frames. */
-  def decodeAudioFeatures(media: DataFrame): Dataset[AudioFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        var reader: javax.sound.sampled.spi.AudioFileReader = null
-        it.map { case (id, payload) =>
+  /** [[decodeStage]] over WAV payloads, handing `row` the decoded 16-bit
+    * samples. The AudioFileReader is resolved once per partition (see
+    * [[resolveAudioReader]]) and re-resolved per row by [[readAudio]]
+    * when it rejects one. */
+  private def decodePcm[T <: Product : TypeTag](media: DataFrame)(
+      row: (Long, Array[Short]) => T): Dataset[T] =
+    decodeStage(media) {
+      var reader: javax.sound.sampled.spi.AudioFileReader = null
+      (id, payload) => {
         if (reader == null) reader = resolveAudioReader(payload)
         val (ais, r) = readAudio(reader, payload)
         reader = r
@@ -516,18 +444,30 @@ object Multimodal {
         require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
           s"unexpected decoded format $fmt")
         val bytes = ais.readAllBytes()
-        val n = bytes.length / 2
-        var (sum, mn, mx) = (0L, Long.MaxValue, Long.MinValue)
+        val s = new Array[Short](bytes.length / 2)
         var t = 0
-        while (t < n) {
-          val s = ((bytes(2 * t) & 0xff) | (bytes(2 * t + 1) << 8)).toShort.toLong
-          sum += s; if (s < mn) mn = s; if (s > mx) mx = s
+        while (t < s.length) {
+          s(t) = ((bytes(2 * t) & 0xff) | (bytes(2 * t + 1) << 8)).toShort
           t += 1
         }
-        AudioFeatures(id, n.toLong, sum, mn, mx)
-        }
+        row(id, s)
       }
-  }
+    }
+
+  /** REAL audio decode: javax.sound.sampled parses each WAV container
+    * (header, format, frame stream) and the sample statistics come off
+    * the decoded PCM frames. */
+  def decodeAudioFeatures(media: DataFrame): Dataset[AudioFeatures] =
+    decodePcm(media) { (id, s) =>
+      var (sum, mn, mx) = (0L, Long.MaxValue, Long.MinValue)
+      var t = 0
+      while (t < s.length) {
+        val v = s(t).toLong
+        sum += v; if (v < mn) mn = v; if (v > mx) mx = v
+        t += 1
+      }
+      AudioFeatures(id, s.length.toLong, sum, mn, mx)
+    }
 
   /** Decoded-audio features through the REAL codec, oracle-gated like the
     * PNG path: WAV PCM is lossless, so the decoded sample stats equal the
@@ -603,70 +543,50 @@ object Multimodal {
     baos.toByteArray
   }
 
-  /** Synthetic GIF media table: one clip per document, encoded
-    * per-partition on executors, served from the fixture cache. */
-  def gifMedia(spark: SparkSession, dir: String): DataFrame =
-    cachedMedia(spark, dir, "gif") {
-      import spark.implicits._
-      graft.operators.Star.fan(spark,
-          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
-          "doc_id")
-        .as[Long]
-        .mapPartitions(_.map(id => (id, renderGif(id))))
-        .toDF("media_id", "payload")
-        .select(col("media_id"), col("payload"),
-          struct(
-            lit("image/gif").as("format"),
-            length(col("payload")).cast("long").as("byte_len"),
-            lit("synthetic").as("source")).as("meta"))
-    }
+  private[multimodal] val gif = Codec("gif", "image/gif", renderGif)
 
-  final case class VideoFeatures(media_id: Long, n_frames: Long,
-                                 n_sampled: Long, sum_gray: Long)
+  private[multimodal] final case class VideoFeatures(media_id: Long,
+      n_frames: Long, n_sampled: Long, sum_gray: Long)
 
-  /** Batched per-partition REAL video decode: the GIF ImageReader parses
-    * the container, reports the frame count, and decodes only the
-    * TEMPORALLY SAMPLED frames (every VSample-th) — the frame-sampling
-    * stage a real video featurizer runs, with an actual multi-frame
-    * decoder behind it. */
-  def decodeVideoFeatures(media: DataFrame): Dataset[VideoFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val reader = javax.imageio.ImageIO
-          .getImageReadersByFormatName("gif").next()
-        reader.setInput(javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(payload)))
-        val n = reader.getNumImages(true)
-        var (sampled, sum) = (0L, 0L)
-        var f = 0
-        while (f < n) {
-          if (f % VSample == 0) {
-            val img = reader.read(f)
-            sampled += 1
-            var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                sum += img.getRGB(x, y) & 0xff
-                x += 1
-              }
-              y += 1
+  /** REAL video decode: the GIF ImageReader parses the container, reports
+    * the frame count, and decodes only the TEMPORALLY SAMPLED frames
+    * (every VSample-th) — the frame-sampling stage a real video
+    * featurizer runs, with an actual multi-frame decoder behind it. */
+  private[multimodal] def decodeVideoFeatures(media: DataFrame)
+      : Dataset[VideoFeatures] =
+    decodeStage(media) { (id, payload) =>
+      val reader = javax.imageio.ImageIO
+        .getImageReadersByFormatName("gif").next()
+      reader.setInput(javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(payload)))
+      val n = reader.getNumImages(true)
+      var (sampled, sum) = (0L, 0L)
+      var f = 0
+      while (f < n) {
+        if (f % VSample == 0) {
+          val img = reader.read(f)
+          sampled += 1
+          var y = 0
+          while (y < img.getHeight) {
+            var x = 0
+            while (x < img.getWidth) {
+              sum += img.getRGB(x, y) & 0xff
+              x += 1
             }
+            y += 1
           }
-          f += 1
         }
-        reader.dispose()
-        VideoFeatures(id, n.toLong, sampled, sum)
-      })
-  }
+        f += 1
+      }
+      reader.dispose()
+      VideoFeatures(id, n.toLong, sampled, sum)
+    }
 
   /** Frame-sampled decoded-video features through the REAL codec,
     * oracle-gated: the gray palette round-trips losslessly, so the
     * sampled-frame pixel sums equal the closed-form formula. */
   def mediaVideo(spark: SparkSession, dir: String): DataFrame =
-    decodeVideoFeatures(gifMedia(spark, dir)).toDF()
+    decodeVideoFeatures(media(spark, dir, gif)).toDF()
       .orderBy("media_id")
 
   private val mediaVideoSql =
@@ -689,40 +609,13 @@ object Multimodal {
 
   // ------------------- real container codecs: MJPEG-in-AVI + IMA ADPCM
   //
-  // VERDICT r10 item 1 asked for a pure-JVM H.264 decoder (JCodec); that
-  // library is not resolvable in this zero-egress environment, so the
-  // codec seam is closed as far as pure-JVM code can take it instead:
-  // a REAL video container path (RIFF/AVI demux + real lossy JPEG
+  // A REAL video container path (RIFF/AVI demux + real lossy JPEG
   // intra-frame decode — the MJPEG format, public spec) and a REAL
   // compressed-audio path (IMA ADPCM 4-bit blocks in WAV, public spec,
   // implemented from the specification here — javax.sound reads only
-  // PCM). decodeStub is hereby demoted to exactly the codecs the JVM
-  // cannot express without a foreign decoder: H.264, AAC, VP9.
+  // PCM).
 
   private final val AF = 6 // frames per AVI fixture
-
-  /** Closed-form per-frame pixel formula shared by the MJPEG renderer,
-    * the distortion check, and (for the lossless facts) the oracle. */
-  @inline private def mjpegRgb(id: Long, f: Int, x: Int, y: Int): Int = {
-    val r = ((id * 31 + f * 19 + x * 7 + y * 13) % 256).toInt
-    val g = ((id * 17 + f * 23 + x * 5 + y * 11) % 256).toInt
-    val b = ((id * 13 + f * 29 + x * 3 + y * 29) % 256).toInt
-    (r << 16) | (g << 8) | b
-  }
-
-  private def encodeJpegFrame(id: Long, f: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      W, H, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < H) {
-      var x = 0
-      while (x < W) { img.setRGB(x, y, mjpegRgb(id, f, x, y)); x += 1 }
-      y += 1
-    }
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", baos)
-    baos.toByteArray
-  }
 
   /** Little-endian RIFF builder (AVI and WAV are both RIFF). */
   private final class Le {
@@ -748,7 +641,7 @@ object Multimodal {
     * → LIST(movi){'00dc' frames} → idx1 (one keyframe entry per frame,
     * offsets relative to the 'movi' fourcc). Runs on executors. */
   def renderAviMjpeg(id: Long): Array[Byte] = {
-    val frames = (0 until AF).map(f => encodeJpegFrame(id, f))
+    val frames = (0 until AF).map(f => encodeRaster("jpg")(rgb(id, f, _, _)))
     val avih = new Le()
       .u32(100000L).u32(0L).u32(0L).u32(0x10L /* HASINDEX */)
       .u32(AF.toLong).u32(0L).u32(1L).u32(0L)
@@ -833,59 +726,31 @@ object Multimodal {
     MjpegVideo(declared, idxEntries, frames.result())
   }
 
-  /** Synthetic MJPEG-AVI media table (build-once fixture cache). */
+  private[multimodal] val aviMjpeg =
+    Codec("avi_mjpeg", "video/x-msvideo", renderAviMjpeg)
+
   def aviMedia(spark: SparkSession, dir: String): DataFrame =
-    cachedMedia(spark, dir, "avi_mjpeg") {
-      import spark.implicits._
-      graft.operators.Star.fan(spark,
-          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
-          "doc_id")
-        .as[Long]
-        .mapPartitions(_.map(id => (id, renderAviMjpeg(id))))
-        .toDF("media_id", "payload")
-        .select(col("media_id"), col("payload"),
-          struct(
-            lit("video/x-msvideo").as("format"),
-            length(col("payload")).cast("long").as("byte_len"),
-            lit("synthetic").as("source")).as("meta"))
-    }
+    media(spark, dir, aviMjpeg)
 
   final case class MjpegFeatures(media_id: Long, n_frames: Long,
       declared_frames: Long, idx_entries: Long,
       width: Long, height: Long, n_pixels: Long, sum_err: Long)
 
-  /** Batched per-partition REAL demux + decode of every frame. `sum_err`
-    * is the total abs channel error vs the closed-form source pixels —
-    * the measured MJPEG distortion, spec-bounded (JPEG loss can't change
-    * the structural facts, which are the hash-oracled columns). */
-  def decodeMjpegFeatures(media: DataFrame): Dataset[MjpegFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val v = decodeAviMjpeg(payload)
-        var err = 0L
-        v.frames.zipWithIndex.foreach { case (img, f) =>
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              val got = img.getRGB(x, y)
-              val want = mjpegRgb(id, f, x, y)
-              err += math.abs(((got >> 16) & 0xff) - ((want >> 16) & 0xff))
-              err += math.abs(((got >> 8) & 0xff) - ((want >> 8) & 0xff))
-              err += math.abs((got & 0xff) - (want & 0xff))
-              x += 1
-            }
-            y += 1
-          }
-        }
-        val w = v.frames.head.getWidth.toLong
-        val h = v.frames.head.getHeight.toLong
-        MjpegFeatures(id, v.frames.size.toLong, v.declaredFrames,
-          v.idxEntries, w, h, v.frames.size * w * h, err)
-      })
-  }
+  /** REAL demux + decode of every frame. `sum_err` is the total abs
+    * channel error vs the closed-form source pixels — the measured MJPEG
+    * distortion, spec-bounded (JPEG loss can't change the structural
+    * facts, which are the hash-oracled columns). */
+  def decodeMjpegFeatures(media: DataFrame): Dataset[MjpegFeatures] =
+    decodeStage(media) { (id, payload) =>
+      val v = decodeAviMjpeg(payload)
+      val err = v.frames.zipWithIndex.map { case (img, f) =>
+        rasterErr(img, rgb(id, f, _, _))
+      }.sum
+      val w = v.frames.head.getWidth.toLong
+      val h = v.frames.head.getHeight.toLong
+      MjpegFeatures(id, v.frames.size.toLong, v.declaredFrames,
+        v.idxEntries, w, h, v.frames.size * w * h, err)
+    }
 
   /** MJPEG-in-AVI through the REAL demux + codec in the gate: the
     * hash-oracled columns are the exact structural facts (demuxed frame
@@ -1053,45 +918,29 @@ object Multimodal {
     AdpcmAudio(total, nBlocks, if (total >= 0) out.take(total) else out)
   }
 
-  /** Synthetic ADPCM media table (build-once fixture cache). */
+  private[multimodal] val wavAdpcm =
+    Codec("wav_adpcm", "audio/x-adpcm", renderWavAdpcm)
+
   def adpcmMedia(spark: SparkSession, dir: String): DataFrame =
-    cachedMedia(spark, dir, "wav_adpcm") {
-      import spark.implicits._
-      graft.operators.Star.fan(spark,
-          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
-          "doc_id")
-        .as[Long]
-        .mapPartitions(_.map(id => (id, renderWavAdpcm(id))))
-        .toDF("media_id", "payload")
-        .select(col("media_id"), col("payload"),
-          struct(
-            lit("audio/x-adpcm").as("format"),
-            length(col("payload")).cast("long").as("byte_len"),
-            lit("synthetic").as("source")).as("meta"))
-    }
+    media(spark, dir, wavAdpcm)
 
   final case class AdpcmFeatures(media_id: Long, n_samples: Long,
       n_blocks: Long, byte_len: Long, sum_err: Long)
 
-  /** Batched per-partition REAL ADPCM decode; `sum_err` is the total abs
-    * sample error vs the closed-form source — the measured codec
-    * distortion, spec-bounded. */
-  def decodeAdpcmFeatures(media: DataFrame): Dataset[AdpcmFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val a = decodeWavAdpcm(payload)
-        var err = 0L
-        var t = 0
-        while (t < a.samples.length) {
-          err += math.abs(a.samples(t) - adpcmSrc(id, t))
-          t += 1
-        }
-        AdpcmFeatures(id, a.samples.length.toLong, a.nBlocks.toLong,
-          payload.length.toLong, err)
-      })
-  }
+  /** REAL ADPCM decode; `sum_err` is the total abs sample error vs the
+    * closed-form source — the measured codec distortion, spec-bounded. */
+  def decodeAdpcmFeatures(media: DataFrame): Dataset[AdpcmFeatures] =
+    decodeStage(media) { (id, payload) =>
+      val a = decodeWavAdpcm(payload)
+      var err = 0L
+      var t = 0
+      while (t < a.samples.length) {
+        err += math.abs(a.samples(t) - adpcmSrc(id, t))
+        t += 1
+      }
+      AdpcmFeatures(id, a.samples.length.toLong, a.nBlocks.toLong,
+        payload.length.toLong, err)
+    }
 
   /** IMA-ADPCM through the REAL codec in the gate: hash-oracled on the
     * exact stream facts (decoded sample count, block count, container
@@ -1329,16 +1178,18 @@ object Multimodal {
     out.toByteArray
   }
 
-  final case class H264Video(profileIdc: Long, width: Long, height: Long,
-      nNals: Long, nFrames: Long, nMbs: Long, lumaSum: Long,
-      chromaSum: Long)
+  final case class H264Video(media_id: Long, profileIdc: Long,
+      width: Long, height: Long, nNals: Long, nFrames: Long, nMbs: Long,
+      lumaSum: Long, chromaSum: Long)
 
   /** REAL Annex-B decode of a baseline I_PCM stream: start-code scan →
     * per-NAL RBSP extraction → Exp-Golomb parse of SPS geometry, PPS,
     * and each IDR slice down to the PCM sample planes. Throws on
     * anything outside the implemented subset (an entropy-coded MB here
-    * would be a fixture bug, not a soft skip). */
-  def decodeH264(payload: Array[Byte]): H264Video = {
+    * would be a fixture bug, not a soft skip). The facts are EXACT
+    * (I_PCM is lossless), so the oracle recomputes the pixel planes
+    * closed-form — no tolerance anywhere. */
+  def decodeH264(payload: Array[Byte], mediaId: Long = 0L): H264Video = {
     // start-code scan: offsets of every NAL's header byte
     val starts = Seq.newBuilder[Int]
     var i = 0
@@ -1415,52 +1266,28 @@ object Multimodal {
       }
     }
     require(profile >= 0, "no SPS in stream")
-    H264Video(profile, widthMbs * 16, heightMbs * 16, nals.length.toLong,
-      nFrames, nMbs, lumaSum, chromaSum)
+    H264Video(mediaId, profile, widthMbs * 16, heightMbs * 16,
+      nals.length.toLong, nFrames, nMbs, lumaSum, chromaSum)
   }
 
-  /** Synthetic H.264 media table (build-once fixture cache). The kind
-    * string carries a FORMAT VERSION: the fixture is the rendered byte
+  /** The kind carries a FORMAT VERSION: the fixture is the rendered byte
     * stream, so any bitstream-syntax change (v2: dec_ref_pic_marking
     * moved before slice_qp_delta per §7.3.3) must mint a new fixture
     * identity or cached payloads from the old syntax would desync the
     * new decoder. */
-  def h264Media(spark: SparkSession, dir: String): DataFrame =
-    cachedMedia(spark, dir, "h264_ipcm_v2") {
-      import spark.implicits._
-      graft.operators.Star.fan(spark,
-          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
-          "doc_id")
-        .as[Long]
-        .mapPartitions(_.map(id => (id, renderH264(id))))
-        .toDF("media_id", "payload")
-        .select(col("media_id"), col("payload"),
-          struct(
-            lit("video/h264").as("format"),
-            length(col("payload")).cast("long").as("byte_len"),
-            lit("synthetic").as("source")).as("meta"))
-    }
+  private[multimodal] val h264 = Codec("h264_ipcm_v2", "video/h264", renderH264)
 
-  final case class H264Features(media_id: Long, profile_idc: Long,
-      width: Long, height: Long, n_frames: Long, n_mbs: Long,
-      luma_sum: Long, chroma_sum: Long)
-
-  /** Batched per-partition REAL Annex-B demux + I_PCM decode. The facts
-    * are EXACT (I_PCM is lossless), so the oracle recomputes the pixel
-    * planes closed-form — no tolerance anywhere. */
-  def decodeH264Features(media: DataFrame): Dataset[H264Features] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val v = decodeH264(payload)
-        H264Features(id, v.profileIdc, v.width, v.height, v.nFrames,
-          v.nMbs, v.lumaSum, v.chromaSum)
-      })
-  }
+  private[multimodal] def decodeH264Features(media: DataFrame)
+      : Dataset[H264Video] =
+    decodeStage(media)((id, payload) => decodeH264(payload, id))
 
   def mediaH264(spark: SparkSession, dir: String): DataFrame =
-    decodeH264Features(h264Media(spark, dir)).toDF().orderBy("media_id")
+    decodeH264Features(media(spark, dir, h264))
+      .select(col("media_id"), col("profileIdc").as("profile_idc"),
+        col("width"), col("height"), col("nFrames").as("n_frames"),
+        col("nMbs").as("n_mbs"), col("lumaSum").as("luma_sum"),
+        col("chromaSum").as("chroma_sum"))
+      .orderBy("media_id")
 
   private val mediaH264Sql =
     s"""WITH luma AS (
@@ -1487,7 +1314,45 @@ object Multimodal {
        |FROM luma l JOIN chroma c ON c.doc_id = l.doc_id
        |ORDER BY media_id""".stripMargin
 
-  // ------------------------------------- audio-fingerprint dedup
+  // ------------------------------------- banded-hamming media dedup
+  //
+  // The audio and image members of the multimodal dedup chain (text
+  // shingles / embeddings / image dHash / audio energy fingerprint, all
+  // the same banded-LSH shape): real decode → 56-bit hash → 4×14-bit
+  // bands (pigeonhole-complete for hamming ≤ 3) → banded candidate join →
+  // exact hamming verify. Candidates come from band buckets, never
+  // all-pairs, so the join scales with bucket density, not corpus².
+
+  /** A 56-bit perceptual hash of one media item: the audio energy
+    * fingerprint or the image difference hash. */
+  private[multimodal] final case class MediaHash(media_id: Long, fp: Long)
+
+  /** 56-bit hash → 4×14-bit band rows (media_id, fp, band_id, k) — the
+    * banded layout shared by the batch dedups and the persisted serve
+    * index. */
+  private def bands(hashes: Dataset[MediaHash]): DataFrame =
+    hashes.select(col("media_id"), col("fp"),
+      explode(array((0 until 4).map(b =>
+        struct(lit(b).as("band_id"),
+          expr(s"shiftright(fp, ${b * 14}) & 16383").as("k"))): _*))
+        .as("e"))
+      .select(col("media_id"), col("fp"),
+        col("e.band_id").as("band_id"), col("e.k").as("k"))
+
+  /** Banded candidate join of band rows `a` × `b` on (band_id, k) with
+    * a.media_id < b.media_id, then the exact verify: (id_a, id_b,
+    * hamming) at hamming ≤ 3. */
+  private def hammingPairs(a: DataFrame, b: DataFrame): DataFrame =
+    a.as("a").join(b.as("b"),
+        col("a.band_id") === col("b.band_id") && col("a.k") === col("b.k") &&
+          col("a.media_id") < col("b.media_id"))
+      .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
+        col("a.fp").as("ha"), col("b.fp").as("hb"))
+      .distinct()
+      .select(col("id_a"), col("id_b"),
+        expr("bit_count(ha ^ hb)").cast("long").as("hamming"))
+      .filter(col("hamming") <= 3)
+      .orderBy("id_a", "id_b")
 
   /** Closed-form sample for the near-dup WAV table: an id-dependent
     * stride (17 + src % 97) AND quadratic phase (t²·(3 + src % 89)) so
@@ -1504,119 +1369,48 @@ object Multimodal {
   /** Near-dup WAV renderer: ids ending in 3 re-render the PREVIOUS id's
     * clip with the first sample nudged by one quantization step (+16) —
     * one planted near-duplicate pair per 10 ids. */
-  def renderWavNear(id: Long): Array[Byte] = {
-    import javax.sound.sampled._
+  private def renderWavNear(id: Long): Array[Byte] = {
     val src = if (id % 10 == 3) id - 1 else id
-    val pcm = new Array[Byte](NSamples * 2)
-    var t = 0
-    while (t < NSamples) {
-      var s = sampleNear(src, t)
-      if (id % 10 == 3 && t == 0) s += 16
-      pcm(2 * t) = (s & 0xff).toByte
-      pcm(2 * t + 1) = ((s >> 8) & 0xff).toByte
-      t += 1
-    }
-    val fmt = new AudioFormat(8000f, 16, 1, true, false)
-    val ais = new AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, NSamples.toLong)
-    val baos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, baos)
-    baos.toByteArray
+    encodeWav(t =>
+      sampleNear(src, t) + (if (id % 10 == 3 && t == 0) 16 else 0))
   }
 
-  /** Synthetic near-dup WAV media table (build-once fixture cache). */
-  def wavNearMedia(spark: SparkSession, dir: String): DataFrame =
-    cachedMedia(spark, dir, "wav_near") {
-      import spark.implicits._
-      graft.operators.Star.fan(spark,
-          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
-          "doc_id")
-        .as[Long]
-        .mapPartitions(_.map(id => (id, renderWavNear(id))))
-        .toDF("media_id", "payload")
-        .select(col("media_id"), col("payload"),
-          struct(
-            lit("audio/wav").as("format"),
-            length(col("payload")).cast("long").as("byte_len"),
-            lit("synthetic").as("source")).as("meta"))
-    }
-
-  final case class AudioFingerprint(media_id: Long, fp: Long)
+  private[multimodal] val wavNear = Codec("wav_near", "audio/wav", renderWavNear)
 
   /** Audio fingerprint off the REAL decoded PCM: 64 frames of 4 samples,
     * exact integer frame energy (Σ s²), one bit per adjacent-frame
     * energy comparison — the first 56 packed into a nonnegative long.
     * A one-sample edit perturbs only its own frame's energy, flipping at
     * most that frame's two adjacent comparisons. */
-  def decodeAudioFingerprint(media: DataFrame): Dataset[AudioFingerprint] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // reader hoisted per partition — see resolveAudioReader
-        var reader: javax.sound.sampled.spi.AudioFileReader = null
-        it.map { case (id, payload) =>
-        if (reader == null) reader = resolveAudioReader(payload)
-        val (ais, r) = readAudio(reader, payload)
-        reader = r
-        val bytes = ais.readAllBytes()
-        val n = bytes.length / 2
-        val energy = new Array[Long](n / 4)
-        var t = 0
-        while (t < n) {
-          val s = ((bytes(2 * t) & 0xff) | (bytes(2 * t + 1) << 8))
-            .toShort.toLong
-          energy(t / 4) += s * s
-          t += 1
-        }
-        var fp = 0L
-        var f = 0
-        while (f < 56) {
-          if (energy(f + 1) > energy(f)) fp |= 1L << f
-          f += 1
-        }
-        AudioFingerprint(id, fp)
-        }
+  private[multimodal] def decodeAudioFingerprint(media: DataFrame)
+      : Dataset[MediaHash] =
+    decodePcm(media) { (id, s) =>
+      val energy = new Array[Long](s.length / 4)
+      var t = 0
+      while (t < s.length) {
+        energy(t / 4) += s(t).toLong * s(t)
+        t += 1
       }
-  }
+      var fp = 0L
+      var f = 0
+      while (f < 56) {
+        if (energy(f + 1) > energy(f)) fp |= 1L << f
+        f += 1
+      }
+      MediaHash(id, fp)
+    }
 
-  /** Audio near-duplicate pairs — the audio member of the multimodal
-    * dedup chain (text shingles / embeddings / image dHash / audio
-    * energy fingerprint, all the same banded-LSH shape): real WAV decode
-    * → 56-bit energy fingerprint → 4×14-bit bands → banded candidate
-    * join → exact hamming verify. Hash-oracled from the closed-form
-    * sample formula, no codec on the oracle side. */
-  /** 56-bit fingerprint → 4×14-bit band rows (media_id, fp, band_id, k)
-    * — the banded layout shared by the batch dedup and the persisted
-    * serve index. */
-  private def audioBands(fps: DataFrame): DataFrame =
-    fps.select(col("media_id"), col("fp"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band_id"),
-          expr(s"shiftright(fp, ${b * 14}) & 16383").as("k"))): _*))
-        .as("e"))
-      .select(col("media_id"), col("fp"),
-        col("e.band_id").as("band_id"), col("e.k").as("k"))
-
+  /** Audio near-duplicate pairs through the real WAV codec. Hash-oracled
+    * from the closed-form sample formula, no codec on the oracle side. */
   def mediaAudioDedup(spark: SparkSession, dir: String): DataFrame = {
     // pinned ONCE: the band relation self-joins below, and the decode
     // stage is opaque (mapPartitions), so without the pin BOTH join
     // sides re-ran the REAL WAV decode of the whole corpus (r16:
     // 1.93 -> ~1.2 s at sf0.1). The pin is 4 rows per clip — band keys
     // + one 64-bit fingerprint — never the payload bytes.
-    val bands =
-      graft.operators.Star.pin(
-        audioBands(decodeAudioFingerprint(wavNearMedia(spark, dir)).toDF()))
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_id") === col("b.band_id") && col("a.k") === col("b.k") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
-        col("a.fp").as("ha"), col("b.fp").as("hb"))
-      .distinct()
-    cand.select(col("id_a"), col("id_b"),
-        expr("bit_count(ha ^ hb)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 3)
-      .orderBy("id_a", "id_b")
+    val banded = graft.operators.Star.pin(
+      bands(decodeAudioFingerprint(media(spark, dir, wavNear))))
+    hammingPairs(banded, banded)
   }
 
   /** Oracle for [[mediaAudioDedup]]: identical fingerprint/band/verify
@@ -1672,25 +1466,15 @@ object Multimodal {
     * [[graft.operators.Dedup.dedupIncremental]]'s convention; the oracle
     * is the batch chain restricted to shard-arrival pairs. */
   def mediaFpServe(spark: SparkSession, dir: String): DataFrame = {
-    val media = wavNearMedia(spark, dir)
+    val clips = media(spark, dir, wavNear)
     val isArriving = col("media_id") % 10 === 3
     val index = graft.sources.IndexStore.cachedBucketTable(
       spark, dir, "documents", "audiofp", 8,
       Seq("band_id", "k"), Seq("band_id", "k")) {
-      audioBands(decodeAudioFingerprint(media.filter(!isArriving)).toDF())
+      bands(decodeAudioFingerprint(clips.filter(!isArriving)))
     }
-    val shard =
-      audioBands(decodeAudioFingerprint(media.filter(isArriving)).toDF())
-    val cand = index.unionByName(shard).as("a").join(shard.as("b"),
-        col("a.band_id") === col("b.band_id") && col("a.k") === col("b.k") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
-        col("a.fp").as("ha"), col("b.fp").as("hb"))
-      .distinct()
-    cand.select(col("id_a"), col("id_b"),
-        expr("bit_count(ha ^ hb)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 3)
-      .orderBy("id_a", "id_b")
+    val shard = bands(decodeAudioFingerprint(clips.filter(isArriving)))
+    hammingPairs(index.unionByName(shard), shard)
   }
 
   /** Oracle for [[mediaFpServe]]: the batch fingerprint chain restricted
@@ -1707,54 +1491,26 @@ object Multimodal {
     * every other id renders its own formula image. Same closed-form
     * pixel math as [[renderPng]], so the oracle derives every raster
     * without the codec. */
-  def renderPngNear(id: Long): Array[Byte] = {
+  private def renderPngNear(id: Long): Array[Byte] = {
     val src = if (id % 10 == 7) id - 1 else id
-    val img = new java.awt.image.BufferedImage(
-      W, H, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < H) {
-      var x = 0
-      while (x < W) {
-        // quadratic cross-term mixing (unlike renderPng's linear ramps):
-        // adjacent-pixel luma differences vary per (id, x, y), so dHash
-        // bits are near-random across unrelated images — a linear ramp
-        // makes every image's hash collapse onto the same few patterns
-        // and floods hamming<=3 with structural false positives
-        var r = ((src * 31 + (x * 7 + y * 13 + x * x * 3 + y * y * 5 +
-          x * y * 11) * (1 + src % 7)) % 256).toInt
-        val g = ((src * 17 + (x * 5 + y * 11 + x * x * 7 + y * y * 3 +
-          x * y * 19) * (1 + src % 11)) % 256).toInt
-        val b = ((src * 13 + (x * 3 + y * 29 + x * x * 5 + y * y * 7 +
-          x * y * 23) * (1 + src % 13)) % 256).toInt
-        if (id % 10 == 7 && x == 0 && y == 0) r = (r + 1) % 256
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
+    encodeRaster("png") { (x, y) =>
+      // quadratic cross-term mixing (unlike renderPng's linear ramps):
+      // adjacent-pixel luma differences vary per (id, x, y), so dHash
+      // bits are near-random across unrelated images — a linear ramp
+      // makes every image's hash collapse onto the same few patterns
+      // and floods hamming<=3 with structural false positives
+      var r = ((src * 31 + (x * 7 + y * 13 + x * x * 3 + y * y * 5 +
+        x * y * 11) * (1 + src % 7)) % 256).toInt
+      val g = ((src * 17 + (x * 5 + y * 11 + x * x * 7 + y * y * 3 +
+        x * y * 19) * (1 + src % 11)) % 256).toInt
+      val b = ((src * 13 + (x * 3 + y * 29 + x * x * 5 + y * y * 7 +
+        x * y * 23) * (1 + src % 13)) % 256).toInt
+      if (id % 10 == 7 && x == 0 && y == 0) r = (r + 1) % 256
+      (r << 16) | (g << 8) | b
     }
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", baos)
-    baos.toByteArray
   }
 
-  /** Synthetic near-dup PNG media table (build-once fixture cache). */
-  def pngNearMedia(spark: SparkSession, dir: String): DataFrame =
-    cachedMedia(spark, dir, "png_near") {
-      import spark.implicits._
-      graft.operators.Star.fan(spark,
-          graft.operators.Star.table(spark, dir, "documents").select("doc_id"),
-          "doc_id")
-        .as[Long]
-        .mapPartitions(_.map(id => (id, renderPngNear(id))))
-        .toDF("media_id", "payload")
-        .select(col("media_id"), col("payload"),
-          struct(
-            lit("image/png").as("format"),
-            length(col("payload")).cast("long").as("byte_len"),
-            lit("synthetic").as("source")).as("meta"))
-    }
-
-  final case class ImageHash(media_id: Long, dhash: Long)
+  private[multimodal] val pngNear = Codec("png_near", "image/png", renderPngNear)
 
   /** Difference-hash off the REAL decoded raster: an 8×8 luma grid
     * sampled at every other pixel (integer luma 299r+587g+114b — exact,
@@ -1763,64 +1519,39 @@ object Multimodal {
     * flips at most its own grid cell's two adjacent comparisons, so
     * planted near-copies land within hamming 2 of their source while
     * unrelated images differ in ~28 bits. */
-  def decodeDhash(media: DataFrame): Dataset[ImageHash] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(payload))
-        def luma(px: Int, py: Int): Long = {
-          val rgb = img.getRGB(px, py)
-          299L * ((rgb >> 16) & 0xff) + 587L * ((rgb >> 8) & 0xff) +
-            114L * (rgb & 0xff)
+  private[multimodal] def decodeDhash(media: DataFrame): Dataset[MediaHash] =
+    decodeStage(media) { (id, payload) =>
+      val img = readImage(payload)
+      def luma(px: Int, py: Int): Long = {
+        val rgb = img.getRGB(px, py)
+        299L * ((rgb >> 16) & 0xff) + 587L * ((rgb >> 8) & 0xff) +
+          114L * (rgb & 0xff)
+      }
+      var hash = 0L
+      var y = 0
+      while (y < 8) {
+        var x = 0
+        while (x < 7) {
+          if (luma(2 * (x + 1), 2 * y) > luma(2 * x, 2 * y))
+            hash |= 1L << (y * 7 + x)
+          x += 1
         }
-        var hash = 0L
-        var y = 0
-        while (y < 8) {
-          var x = 0
-          while (x < 7) {
-            if (luma(2 * (x + 1), 2 * y) > luma(2 * x, 2 * y))
-              hash |= 1L << (y * 7 + x)
-            x += 1
-          }
-          y += 1
-        }
-        ImageHash(id, hash)
-      })
-  }
+        y += 1
+      }
+      MediaHash(id, hash)
+    }
 
-  /** Image near-duplicate pairs through the whole multimodal dedup
-    * chain: real PNG decode → dHash → 4×14-bit LSH bands
-    * (pigeonhole-complete for hamming ≤ 3) → banded candidate join →
-    * exact hamming verify. The image-side twin of the text SimHash
-    * pipeline — candidates come from band buckets, never all-pairs, so
-    * the join scales with bucket density, not corpus². Hash-oracled:
-    * DuckDB derives every raster from the closed-form pixel formulas
-    * (never decoding a byte) and must land on identical pairs. */
+  /** Image near-duplicate pairs through the real PNG codec — the
+    * image-side twin of the text SimHash pipeline. Hash-oracled: DuckDB
+    * derives every raster from the closed-form pixel formulas (never
+    * decoding a byte) and must land on identical pairs. */
   def mediaPhashDedup(spark: SparkSession, dir: String): DataFrame = {
-    val hashes = decodeDhash(pngNearMedia(spark, dir)).toDF()
     // deliberately NOT pinned (unlike mediaAudioDedup): the r16 A/B
     // measured the localCheckpoint variant WORSE here (0.61 -> 0.72 s at
     // sf0.1) — decoding the tiny 16x16 PNGs twice is cheaper than the
     // pin's materialization job; honest negative recorded
-    val bands = hashes.select(col("media_id"), col("dhash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band_id"),
-          expr(s"shiftright(dhash, ${b * 14}) & 16383").as("k"))): _*))
-        .as("e"))
-      .select(col("media_id"), col("dhash"),
-        col("e.band_id").as("band_id"), col("e.k").as("k"))
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_id") === col("b.band_id") && col("a.k") === col("b.k") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
-        col("a.dhash").as("ha"), col("b.dhash").as("hb"))
-      .distinct()
-    cand.select(col("id_a"), col("id_b"),
-        expr("bit_count(ha ^ hb)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 3)
-      .orderBy("id_a", "id_b")
+    val banded = bands(decodeDhash(media(spark, dir, pngNear)))
+    hammingPairs(banded, banded)
   }
 
   /** Oracle for [[mediaPhashDedup]]: the identical dHash/band/verify
@@ -1869,6 +1600,10 @@ object Multimodal {
       |SELECT id_a, id_b, CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
       |FROM cand WHERE bit_count(xor(ha, hb)) <= 3
       |ORDER BY id_a, id_b""".stripMargin
+
+  /** Every synthetic media format; each kind is a FixtureCache identity. */
+  private[multimodal] val codecs: Seq[Codec] =
+    Seq(png, jpeg, wav, gif, aviMjpeg, wavAdpcm, h264, wavNear, pngNear)
 
   val defs: Seq[graft.QueryDef] = Seq(
     graft.QueryDef("q_media_frames", mediaFrames, Some(mediaFramesSql)),

@@ -907,24 +907,37 @@ object Dedup {
     * same rows (ConnectedComponentsPropertySpec runs both). At 100 TB
     * dup rates the dispatch always takes the distributed branch.
     * Returns Left(result) when the graph was resolved on the driver,
-    * Right(materialized frame) — persisted, count already forced — for
-    * the distributed rounds to consume without re-evaluating the
-    * lineage. */
+    * Right(materialized frame, its release, sum(u + v)) — persisted,
+    * counted and summed in the one pass — for the distributed rounds to
+    * consume without re-evaluating the lineage. */
   private def componentsDispatch(edges: DataFrame)
-      : Either[DataFrame, (DataFrame, () => Unit)] = {
+      : Either[DataFrame, (DataFrame, () => Unit, Long)] = {
     val spark = edges.sparkSession
     // MEMORY_AND_DISK (r17 spill-safety sweep, guide §5): an un-gated
     // MEMORY_ONLY Row pin is an OOM seam at 100 TB edge counts
     val rdd = edges.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = rdd.count() // materializes the (expensive) edge lineage once
+    // materializes the (expensive) edge lineage once: row count for the
+    // gate, sum(u + v) for the first round's convergence test
+    val (n, metric) = sumEdges(rdd)
     if (n <= Dispatch.CollectThreshold(spark)) {
       val arr = rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
       rdd.unpersist(blocking = false)
       Left(smallComponents(spark, arr))
     } else Right((
       spark.createDataFrame(rdd, edges.schema),
-      () => { rdd.unpersist(blocking = false); () }))
+      () => { rdd.unpersist(blocking = false); () }, metric))
   }
+
+  /** (row count, sum(u + v)) of an edge RDD, in one job. */
+  private def sumEdges(
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]): (Long, Long) =
+    rdd.mapPartitions { it =>
+      var (n, acc) = (0L, 0L)
+      while (it.hasNext) {
+        val r = it.next(); n += 1; acc += r.getLong(0) + r.getLong(1)
+      }
+      Iterator((n, acc))
+    }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
 
   /** Connected components over an undirected edge list (id_a, id_b) →
     * (doc_id, cluster_id = min doc_id reachable), by alternating
@@ -953,13 +966,8 @@ object Dedup {
     def mat(df: DataFrame): (DataFrame, () => Unit, Long) = {
       // MEMORY_AND_DISK — see componentsDispatch
       val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val s = rdd.mapPartitions { it =>
-        var acc = 0L
-        while (it.hasNext) { val r = it.next(); acc += r.getLong(0) + r.getLong(1) }
-        Iterator(acc)
-      }.fold(0L)(_ + _)
       (df.sparkSession.createDataFrame(rdd, df.schema),
-        () => { rdd.unpersist(blocking = false); () }, s)
+        () => { rdd.unpersist(blocking = false); () }, sumEdges(rdd)._2)
     }
     // large-star: around each center u, every BIG neighbor (v > u) rewires
     // to m = min(neighborhood ∪ {u})
@@ -983,9 +991,8 @@ object Dedup {
     componentsDispatch(canon(
       edges0.select(col("id_a").as("u"), col("id_b").as("v")))) match {
       case Left(result) => result
-      case Right((canonEdges, freeE)) =>
-        var (cur, free, metric) = mat(canonEdges)
-        freeE()
+      case Right(canonEdges) =>
+        var (cur, free, metric) = canonEdges
         var converged = false
         while (!converged) {
           val (next, freeNext, nextMetric) = mat(smallStar(largeStar(cur)))
